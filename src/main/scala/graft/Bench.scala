@@ -227,51 +227,6 @@ object Bench {
     def violates(name: String, t: Double): Boolean =
       fixture.get(name).exists(duck =>
         t >= floorOf(name) && t > 4.0 * hostLoad * duck)
-    // Per-query baseline from the newest parsed driver artifact
-    // (BENCH_r<n>.json, committed by the driver each round) — r20, VERDICT
-    // r19 task 2: the guardrail above only catches fixture-ratio
-    // violations, so a contention spike on a query with a GENEROUS fixture
-    // ratio sat un-retried (BENCH_r19's q10: 2.49 s vs a ~0.9 s family
-    // baseline and 0.47 s in the same round's 8-core run). A query whose
-    // best-of-N reads >3x its previous recorded time gets the same
-    // end-of-suite retry; the extraction scopes to the artifact's
-    // "queries" object (the file also carries gc_ms/jit_ms/t_ms under the
-    // same qNN keys). Measurement methodology only — no result of any
-    // query depends on this. SPARK_GRAFT_PREV_BENCH overrides the file.
-    val prevTimes: Map[String, Double] = try {
-      val explicit = sys.env.get("SPARK_GRAFT_PREV_BENCH")
-      val candidates = explicit.map(p => Seq(java.nio.file.Paths.get(p)))
-        .getOrElse {
-          val rx = "BENCH_r(\\d+)\\.json".r
-          Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-            .flatMap(f => rx.findFirstMatchIn(f.getName)
-              .map(m => (m.group(1).toInt, f.toPath))).toSeq
-            .sortBy(-_._1).map(_._2)
-        }
-      candidates.iterator.map { p =>
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val qi = txt.indexOf("\"queries\"")
-        if (qi < 0) Map.empty[String, Double]
-        else {
-          val open = txt.indexOf('{', qi)
-          val close = txt.indexOf('}', open) // flat object: no nested braces
-          if (open < 0 || close < 0) Map.empty[String, Double]
-          else "\"(q[0-9]+)\"\\s*:\\s*([0-9.]+)".r
-            .findAllMatchIn(txt.substring(open, close))
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      }.find(_.nonEmpty).getOrElse(Map.empty)
-    } catch { case _: Exception => Map.empty }
-    if (prevTimes.nonEmpty)
-      System.err.println(s"[bench] prev-artifact baseline loaded: " +
-        s"${prevTimes.size} queries")
-    // >3x the previous artifact's reading — scaled by the measured host
-    // load (the prev artifact may be from a quieter host), with a 0.3 s
-    // absolute slack so sub-0.1 s queries' scheduling jitter doesn't earn
-    // pointless retries
-    def outlier(name: String, t: Double): Boolean =
-      prevTimes.get(name.takeWhile(_ != '_'))
-        .exists(p => t > 3.0 * hostLoad * p && t - p > 0.3)
     // qNN prefixes must stay unique (q19 gap included): a duplicate would
     // silently merge two queries into one JSON key — fail BEFORE the
     // timed suite runs, not after two minutes of work
@@ -354,12 +309,9 @@ object Bench {
     // min measures the plan, the max measures the host) and BOTH readings
     // land in the artifact ("retried_end": [mid-suite, final]) so a
     // consumer sees the burst rather than inferring it.
-    // eligibility (r20): guardrail violations OR >3x the previous driver
-    // artifact's per-query reading (task 2 above) — both readings land in
-    // the artifact either way
     val retriedEnd = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     measured.toSeq.foreach { case (name, (best, err, _, _)) =>
-      if (err.isEmpty && (violates(name, best) || outlier(name, best))) {
+      if (err.isEmpty && violates(name, best)) {
         val (t, e, g, j) = timeOnce(suite.toMap.apply(name))
         val kept = if (e.isEmpty) math.min(best, t) else best
         retriedEnd(name) = (best, kept)

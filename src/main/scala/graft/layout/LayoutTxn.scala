@@ -3,7 +3,10 @@ package graft.layout
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Properties
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Optimistic-concurrency commit protocol for MAINTAINED hive layouts —
   * the r11 MergeTable CAS discipline extended to the at-rest index layers
@@ -32,7 +35,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     MAP: each partition points at the version dir that last wrote it
   *     (version 0 = the plain hive dirs a full rebuild leaves at the
   *     root). Untouched partitions keep their map entry; touched
-  *     partitions with no surviving rows leave the map.
+  *     partitions with no surviving rows leave the map. The version state
+  *     also carries a random COMMIT ID (unique per published commit — a
+  *     full rebuild restarts version numbers, never ids, so it is the safe
+  *     key for per-snapshot memos) and, per sub, the schema each LIVE
+  *     owning version wrote (`sub.<i>.owner.<v>`, from the claim's group
+  *     schema; entries leave with their owner). [[readSnapshot]] hands
+  *     each owner's scan that schema, so reads plan without a footer
+  *     inference job; root (version 0) owners still infer.
   *
   * **Reader snapshot isolation (r15).** [[resolve]]/[[readLayout]]
   * resolve the version file ONCE and then read only immutable
@@ -124,15 +134,23 @@ object LayoutTxn {
                                   maps: Map[String, (String, Map[String, Seq[Long]])],
                                   batchId: Long = -1L,
                                   props: Map[String, String] = Map.empty,
-                                  schemas: Map[String, String] = Map.empty) {
+                                  schemas: Map[String, String] = Map.empty,
+                                  commitId: Option[String] = None,
+                                  ownerSchemas: Map[(String, Long), String] = Map.empty) {
     // maps: sub -> (partCol, partName -> owning RUN versions, oldest
     // first; one element = the classic replace form, several = append
     // runs a read unions (r18))
     // schemas: sub -> last committed replacement schema (DDL) — what lets
     // a sub EMPTIED by deletes still read as a typed empty relation
+    // commitId: random per published commit — unlike the version, never
+    // reused after a full rebuild restarts the history at 0
+    // ownerSchemas: (sub, owning version) -> the schema (DDL) that commit
+    // wrote the sub with, for every live owner but root (version 0)
   }
 
   private val PropPrefix = "prop."
+  /** `sub.<i>.owner.<v>` — the schema owner `v` wrote sub `i` with. */
+  private val OwnerKey = """sub\.(\d+)\.owner\.(\d+)""".r
 
   private def propsOf(pr: Properties): Map[String, String] = {
     val it = pr.stringPropertyNames().iterator()
@@ -170,10 +188,15 @@ object LayoutTxn {
         Option(pr.getProperty(s"sub.$i.schema"))
           .map(pr.getProperty(s"sub.$i.name") -> _)
       }.toMap
+      val ownerSchemas = pr.stringPropertyNames().iterator().asScala
+        .collect { case k @ OwnerKey(i, v) =>
+          (pr.getProperty(s"sub.$i.name"), v.toLong) -> pr.getProperty(k)
+        }.toMap
       Some(VersionState(pr.getProperty("version").toLong,
         Option(pr.getProperty("ts")).map(_.toLong).getOrElse(0L), maps,
         Option(pr.getProperty("batchId")).map(_.toLong).getOrElse(-1L),
-        propsOf(pr), schemas))
+        propsOf(pr), schemas, Option(pr.getProperty("commit")),
+        ownerSchemas))
     }
   }
 
@@ -189,7 +212,9 @@ object LayoutTxn {
       dir: String, version: Long, batchId: Long,
       props: Map[String, String],
       private[layout] val maps: Map[String, (String, Map[String, Seq[Long]])],
-      private[layout] val schemas: Map[String, String] = Map.empty)
+      private[layout] val schemas: Map[String, String] = Map.empty,
+      commitId: Option[String] = None,
+      ownerSchemas: Map[(String, Long), String] = Map.empty)
 
   /** Capture the current committed snapshot of `dir` in one read. A
     * pre-protocol layout (no version file) snapshots as version 0 with
@@ -199,7 +224,7 @@ object LayoutTxn {
     readState(dir) match {
       case Some(st) =>
         LayoutSnapshot(dir, st.version, st.batchId, st.props, st.maps,
-          st.schemas)
+          st.schemas, st.commitId, st.ownerSchemas)
       case None => LayoutSnapshot(dir, 0L, -1L, Map.empty, Map.empty)
     }
 
@@ -247,12 +272,17 @@ object LayoutTxn {
   /** [[resolve]] against an already-captured [[LayoutSnapshot]] — no
     * version-file re-read, so facts and partitions stay one snapshot. */
   def resolveSnapshot(snap: LayoutSnapshot, sub: String, partCol: String)
-      : Seq[(String, String)] = {
+      : Seq[(String, String)] =
+    resolveOwned(snap, sub, partCol).map { case (p, _, path) => p -> path }
+
+  /** [[resolveSnapshot]] with each path's owning version (0 = root). */
+  private def resolveOwned(snap: LayoutSnapshot, sub: String, partCol: String)
+      : Seq[(String, Long, String)] = {
     val dir = snap.dir
     snap.maps.get(sub) match {
       case None => // pre-protocol layout (or sub never committed): root
         rootParts(dir, sub, partCol)
-          .map(p => p -> subRoot(Paths.get(dir), sub).resolve(p).toString)
+          .map(p => (p, 0L, subRoot(Paths.get(dir), sub).resolve(p).toString))
       case Some((_, m)) =>
         // one entry PER RUN: a multi-run partition resolves to several
         // immutable dirs and a read unions them (newest-last order is
@@ -261,7 +291,7 @@ object LayoutTxn {
           vs.map { v =>
             val base = if (v == 0L) subRoot(Paths.get(dir), sub)
               else subRoot(lvDir(dir, v), sub)
-            p -> base.resolve(p).toString
+            (p, v, base.resolve(p).toString)
           }
         }
     }
@@ -280,25 +310,36 @@ object LayoutTxn {
                  only: Option[Set[String]] = None): DataFrame =
     readSnapshot(spark, snapshot(dir), sub, partCol, only)
 
-  /** [[readLayout]] against an already-captured [[LayoutSnapshot]]. */
+  /** [[readLayout]] against an already-captured [[LayoutSnapshot]].
+    * Planning fires no Spark job when every scanned owner has a recorded
+    * schema: each owner's scan takes the data columns its own commit
+    * wrote (per owner, so an int batch and a bigint batch still widen in
+    * the union as inferred reads would). Root-owned partitions and
+    * owners published before schemas were recorded infer from footers. */
   def readSnapshot(spark: SparkSession, snap: LayoutSnapshot, sub: String,
                    partCol: String,
                    only: Option[Set[String]] = None): DataFrame = {
-    val dir = snap.dir
-    val all = resolveSnapshot(snap, sub, partCol)
-    val parts = all.filter { case (p, _) => only.forall(_.contains(p)) }
-    // one scan per distinct base (root / each owning version dir): the
-    // basePath option is what turns the dir name into the partition
-    // column, and it must be a parent of every path in its scan
-    val byBase = parts.groupBy { case (p, path) =>
-      path.stripSuffix("/" + p)
-    }.toSeq.sortBy(_._1)
-    val scans = byBase.map { case (base, ps) =>
-      spark.read.option("basePath", base).parquet(ps.map(_._2): _*)
+    val all = resolveOwned(snap, sub, partCol)
+    // one scan per owner (root / each owning version dir): the basePath
+    // option is what turns the dir name into the partition column, and
+    // it must be a parent of every path in its scan
+    def baseOf(p: String, path: String): String = path.stripSuffix("/" + p)
+    def scan(owner: Long, base: String, paths: Seq[String]): DataFrame = {
+      val reader = snap.ownerSchemas.get((sub, owner)) match {
+        // the partition column stays out of the supplied schema: hive
+        // discovery types it from the dir names exactly as before
+        case Some(ddl) => spark.read.schema(StructType(
+          StructType.fromDDL(ddl).filterNot(_.name == partCol)))
+        case None => spark.read
+      }
+      reader.option("basePath", base).parquet(paths: _*)
     }
+    val scans = all.filter { case (p, _, _) => only.forall(_.contains(p)) }
+      .groupBy { case (p, _, path) => baseOf(p, path) }.toSeq.sortBy(_._1)
+      .map { case (base, ps) => scan(ps.head._2, base, ps.map(_._3)) }
     scans.reduceOption(_.unionByName(_)).getOrElse {
       // nothing survived the restriction: an empty frame, its schema
-      // inferred from any live partition; a sub with NO live partitions
+      // from any live partition; a sub with NO live partitions
       // (every doc deleted) reads as a typed empty relation off the
       // schema its last commit recorded (r18 — before that, an index
       // emptied by deletes threw UNABLE_TO_INFER_SCHEMA and was wedged
@@ -306,17 +347,16 @@ object LayoutTxn {
       // layout that truly never existed still throws the standard path
       // error — the honest outcome.
       all.headOption match {
-        case Some((p, path)) =>
-          spark.read.option("basePath", path.stripSuffix("/" + p))
-            .parquet(path).limit(0)
+        case Some((p, owner, path)) =>
+          scan(owner, baseOf(p, path), Seq(path)).limit(0)
         case None =>
           snap.schemas.get(sub) match {
             case Some(ddl) =>
               spark.createDataFrame(
                 java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                org.apache.spark.sql.types.StructType.fromDDL(ddl))
+                StructType.fromDDL(ddl))
             case None =>
-              spark.read.parquet(subRoot(Paths.get(dir), sub).toString)
+              spark.read.parquet(subRoot(Paths.get(snap.dir), sub).toString)
                 .limit(0)
           }
       }
@@ -422,11 +462,18 @@ object LayoutTxn {
     // typed empty relation (r18; found by the index fuzz lane: delete
     // every doc, then the next ingest's probe read threw
     // UNABLE_TO_INFER_SCHEMA and the index was wedged)
-    val schemas = parent.map(_.schemas).getOrElse(Map.empty) ++
-      (0 until nGroups).flatMap { i =>
-        Option(pr.getProperty(s"group.$i.schema"))
-          .map(pr.getProperty(s"group.$i.sub") -> _)
-      }
+    val written = (0 until nGroups).flatMap { i =>
+      Option(pr.getProperty(s"group.$i.schema"))
+        .map(pr.getProperty(s"group.$i.sub") -> _)
+    }.toMap
+    val schemas = parent.map(_.schemas).getOrElse(Map.empty) ++ written
+    // per-owner schemas, for LIVE owners only (an owner leaving the map
+    // takes its entry with it): this commit's dir carries what its groups
+    // wrote, older owners keep the entry their own commit recorded
+    def ownerSchema(sub: String, v: Long): Option[String] =
+      if (v == version) written.get(sub)
+      else parent.flatMap(_.ownerSchemas.get((sub, v)))
+    vp.setProperty("commit", java.util.UUID.randomUUID().toString)
     vp.setProperty("subs", maps.size.toString)
     maps.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((sub, (pc, m)), i) =>
       vp.setProperty(s"sub.$i.name", sub)
@@ -435,6 +482,9 @@ object LayoutTxn {
         m.toSeq.sortBy(_._1)
           .map { case (p, vs) => s"$p:${vs.mkString("|")}" }.mkString(","))
       schemas.get(sub).foreach(vp.setProperty(s"sub.$i.schema", _))
+      m.valuesIterator.flatten.filter(_ > 0L).toSet.foreach { (v: Long) =>
+        ownerSchema(sub, v).foreach(vp.setProperty(s"sub.$i.owner.$v", _))
+      }
     }
     if (currentVersion(dir) < version) writeAtomic(dir, vp, versionPath(dir))
   }
@@ -555,9 +605,10 @@ object LayoutTxn {
       pr.setProperty(s"group.$i.partcol", g.partCol)
       if (g.append) pr.setProperty(s"group.$i.append", "true")
       // the replacement schema, partition column LAST (hive read order) —
-      // recorded so the sub stays readable as a typed empty relation if
-      // a later commit deletes its last partition
-      pr.setProperty(s"group.$i.schema", org.apache.spark.sql.types.StructType(
+      // the schema readers scan this owner with, and what keeps the sub
+      // readable as a typed empty relation if a later commit deletes its
+      // last partition
+      pr.setProperty(s"group.$i.schema", StructType(
         g.replacement.schema.filterNot(_.name == g.partCol) ++
           g.replacement.schema.find(_.name == g.partCol)).toDDL)
       pr.setProperty(s"group.$i.moves",
