@@ -1,6 +1,6 @@
 package graft.layout
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Properties
 
 import scala.jdk.CollectionConverters._
@@ -8,41 +8,36 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Optimistic-concurrency commit protocol for MAINTAINED hive layouts —
-  * the r11 MergeTable CAS discipline extended to the at-rest index layers
-  * (VERDICT r11 task 2), with READER SNAPSHOT ISOLATION since r15
-  * (VERDICT r14 task 3). [[graft.sim.Similarity.ivfUpsertLayout]] and
-  * [[graft.text.TextAnalysis.indexUpsertLayout]] commit through this
-  * protocol:
+/** Optimistic-concurrency commits for MAINTAINED hive layouts, with
+  * READER SNAPSHOT ISOLATION. [[graft.sim.Similarity.ivfUpsertLayout]]
+  * and [[graft.text.TextAnalysis.indexUpsertLayout]] commit through it.
+  * Every commit runs the shared [[CommitLog]] protocol: the replacement
+  * partitions of every touched subtree stage under `_lstage_v<n>_<uuid8>`,
+  * the claim is the immutable `_layout_commit_v<n>` file (stage name, per
+  * group partition column, touched partitions, deletions and schema),
+  * publish renames the whole stage to the IMMUTABLE version dir `_lv<n>`,
+  * and the pointer swap installs a new `_layout_version`. The loser of a
+  * claim gets [[LayoutTxn.ConflictException]] (retry = re-run the upsert
+  * against the new current version; it re-reads the committed layout, so
+  * its delta composes). What differs from [[MergeTable]]:
   *
-  *  1. **STAGE.** The replacement contents of every touched partition are
-  *     written to an attempt-unique `_lstage_v<n>_<uuid>/` dir (hive
-  *     discovery skips `_`-prefixed dirs, so readers never see it). The
-  *     layout itself is untouched — a writer that dies here leaves only an
-  *     orphan stage, swept by the next [[begin]] after a grace period.
-  *  2. **CLAIM (the CAS).** The commit manifest — stage name, per-group
-  *     partition column, touched partitions and deletions — is published
-  *     as the immutable `_layout_commit_v<n>` file via `Files.createLink`:
-  *     atomic fail-if-exists, exactly one writer per parent version wins.
-  *     The loser deletes its stage and throws [[LayoutTxn
-  *     .ConflictException]] (retry = re-run the upsert against the new
-  *     current version; the re-run re-reads the committed layout, so its
-  *     delta composes).
-  *  3. **PUBLISH.** The whole stage dir is renamed to the IMMUTABLE
-  *     version dir `_lv<n>/` — ONE atomic move, never an in-place
-  *     partition mutation — and `_layout_version` is swapped (tmp-write +
-  *     ATOMIC_MOVE) carrying the new per-sub partition→owning-version
-  *     MAP: each partition points at the version dir that last wrote it
-  *     (version 0 = the plain hive dirs a full rebuild leaves at the
-  *     root). Untouched partitions keep their map entry; touched
-  *     partitions with no surviving rows leave the map. The version state
-  *     also carries a random COMMIT ID (unique per published commit — a
-  *     full rebuild restarts version numbers, never ids, so it is the safe
-  *     key for per-snapshot memos) and, per sub, the schema each LIVE
-  *     owning version wrote (`sub.<i>.owner.<v>`, from the claim's group
-  *     schema; entries leave with their owner). [[readSnapshot]] hands
-  *     each owner's scan that schema, so reads plan without a footer
-  *     inference job; root (version 0) owners still infer.
+  *  - **The partition→owner map.** `_layout_version` is not the claim
+  *    verbatim but the parent state repointed by it: per sub, each
+  *    partition maps to the version dir(s) that last wrote it (version 0 =
+  *    the plain hive dirs a full rebuild leaves at the root). Untouched
+  *    partitions keep their entry; touched partitions with no surviving
+  *    rows leave the map. The state also carries a random COMMIT ID
+  *    (unique per published commit — a full rebuild restarts version
+  *    numbers, never ids, so it is the safe key for per-snapshot memos)
+  *    and, per sub, the schema each LIVE owning version wrote
+  *    (`sub.<i>.owner.<v>`, from the claim's group schema; entries leave
+  *    with their owner). [[readSnapshot]] hands each owner's scan that
+  *    schema, so reads plan without a footer inference job; root
+  *    (version 0) owners still infer.
+  *  - **Roll-forward grace.** [[begin]] rolls a dead writer's claim
+  *    forward, but a claim younger than its grace conflicts rather than
+  *    racing a live writer's publish; the same grace protects in-flight
+  *    stages from the orphan sweep.
   *
   * **Reader snapshot isolation (r15).** [[resolve]]/[[readLayout]]
   * resolve the version file ONCE and then read only immutable
@@ -58,13 +53,6 @@ import org.apache.spark.sql.types.StructType
   * marker is idle past the grace window — a reader that resolved within
   * the grace period keeps its snapshot on disk (reads longer than the
   * grace window are out of contract, the standard retention rule).
-  *
-  * A writer that crashes AFTER its claim is rolled FORWARD by the next
-  * writer's [[begin]] — the claim records everything the publish needs,
-  * and both publish steps are idempotent and atomic (the whole-dir
-  * rename replaced r11's per-partition swap, which could tear). A claim
-  * younger than the grace window still conflicts in [[begin]] rather
-  * than racing a live writer's publish.
   */
 object LayoutTxn {
 
@@ -114,15 +102,7 @@ object LayoutTxn {
                    sortCols: Seq[String], touched: Seq[String],
                    append: Boolean = false)
 
-  private val VersionFile = "_layout_version"
   private val Tombstone = "_superseded"
-  /** Dirs whose filesystems passed the hard-link probe this JVM. */
-  private val probedDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def versionPath(dir: String): Path = Paths.get(dir, VersionFile)
-  private def claimPath(dir: String, v: Long): Path =
-    Paths.get(dir, s"_layout_commit_v$v")
-  private def lvDir(dir: String, v: Long): Path = Paths.get(dir, s"_lv$v")
   private def subRoot(base: Path, sub: String): Path =
     if (sub.isEmpty) base else base.resolve(sub)
 
@@ -164,12 +144,10 @@ object LayoutTxn {
   }
 
   private def readState(dir: String): Option[VersionState] = {
-    val p = versionPath(dir)
+    val p = Log.pointerPath(dir)
     if (!Files.exists(p)) None
     else {
-      val pr = new Properties()
-      val in = Files.newInputStream(p)
-      try pr.load(in) finally in.close()
+      val pr = CommitLog.load(p)
       val nSubs = pr.getProperty("subs", "0").toInt
       val maps = (0 until nSubs).map { i =>
         val sub = pr.getProperty(s"sub.$i.name")
@@ -290,7 +268,7 @@ object LayoutTxn {
         m.toSeq.sortBy(_._1).flatMap { case (p, vs) =>
           vs.map { v =>
             val base = if (v == 0L) subRoot(Paths.get(dir), sub)
-              else subRoot(lvDir(dir, v), sub)
+              else subRoot(Log.versionDir(dir, v), sub)
             (p, v, base.resolve(p).toString)
           }
         }
@@ -363,44 +341,25 @@ object LayoutTxn {
     }
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
-  }
+  /** LayoutTxn's format over the shared [[CommitLog]] protocol: the
+    * pointer swap installs [[nextState]], and version 0 is the
+    * pre-protocol (or freshly rebuilt) layout. */
+  private val Log = new CommitLog.Format("graft layout commit",
+    stagePrefix = "_lstage_", claimPrefix = "_layout_commit_v",
+    dirPrefix = "_lv", pointer = "_layout_version",
+    current = currentVersion, next = nextState,
+    conflict = new ConflictException(_, _, _),
+    lost = new LostLayoutCommitException(_, _, _))
 
-  // the atomic-pointer-swap primitive, via the StoreOps seam (r17): see
-  // StoreOps' scaladoc for the object-store conditional-put mapping
-  private def writeAtomic(dir: String, pr: Properties, target: Path): Unit =
-    StoreOps.atomicSwap(dir, pr, "graft layout commit", target)
+  /** Publish + version-file swap of a claimed commit ([[CommitLog]]). */
+  private[layout] def finish(dir: String, pr: Properties): Unit =
+    Log.finish(dir, pr)
 
-  /** Publish a claimed commit: whole-stage rename to `_lv<n>` + version
-    * file swap with the updated maps. Every step idempotent and atomic,
-    * so a crashed publish re-runs to completion and a recoverer racing
-    * the original writer converges. */
-  private def finish(dir: String, pr: Properties): Unit = {
+  /** The version state a published claim installs: the parent maps
+    * (version file, or root listing for a sub's first versioned commit)
+    * repointed by this commit's moves/dels. */
+  private def nextState(dir: String, pr: Properties): Properties = {
     val version = pr.getProperty("version").toLong
-    val stage = pr.getProperty("stage")
-    if (currentVersion(dir) >= version) return // already published
-    val lv = lvDir(dir, version)
-    if (!Files.exists(lv)) {
-      val stagePath = Paths.get(dir, stage)
-      if (!Files.exists(stagePath)) {
-        // between the two checks a racer may have completed the rename
-        if (!Files.exists(lv)) {
-          Files.deleteIfExists(claimPath(dir, version))
-          throw new LostLayoutCommitException(dir, version, stage)
-        }
-      } else {
-        try Files.move(stagePath, lv, StandardCopyOption.ATOMIC_MOVE)
-        catch { // the other racer already renamed it
-          case _: java.nio.file.NoSuchFileException if Files.exists(lv) => ()
-          case _: java.nio.file.FileAlreadyExistsException => ()
-        }
-      }
-    }
-    // build the new version state: parent maps (version file, or root
-    // listing for a sub's first versioned commit) repointed by this
-    // commit's moves/dels
     val parent = readState(dir)
     val nGroups = pr.getProperty("groups").toInt
     val committed = (0 until nGroups).map { i =>
@@ -486,7 +445,7 @@ object LayoutTxn {
         ownerSchema(sub, v).foreach(vp.setProperty(s"sub.$i.owner.$v", _))
       }
     }
-    if (currentVersion(dir) < version) writeAtomic(dir, vp, versionPath(dir))
+    vp
   }
 
   /** Entry point for every maintenance writer: roll forward a crashed
@@ -494,32 +453,9 @@ object LayoutTxn {
     * tombstoned superseded version dirs idle past the grace window, and
     * return the version the caller's commit must name as parent. */
   def begin(dir: String, graceMs: Long = 600000L): Long = {
-    if (!Files.isDirectory(Paths.get(dir))) return 0L
-    var v = currentVersion(dir)
-    var pending = claimPath(dir, v + 1)
-    while (Files.exists(pending)) {
-      val age = System.currentTimeMillis() -
-        Files.getLastModifiedTime(pending).toMillis
-      if (age < graceMs)
-        throw new ConflictException(dir, v + 1,
-          "is being committed by a live writer (fresh claim)")
-      val pr = new Properties()
-      val in = Files.newInputStream(pending)
-      try pr.load(in) finally in.close()
-      finish(dir, pr) // roll the dead writer's claimed commit forward
-      v = currentVersion(dir)
-      pending = claimPath(dir, v + 1)
-    }
+    val v = Log.rollForward(dir, graceMs)
+    Log.sweepStages(dir, graceMs)
     val now = System.currentTimeMillis()
-    def newest(x: java.io.File): Long =
-      (x.lastModified() +: Option(x.listFiles()).getOrElse(Array.empty)
-        .map(newest).toSeq).max
-    // sweep crash-orphaned stages (died before their CAS claim): any
-    // _lstage_* not referenced by a pending claim, idle past grace
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("_lstage_") &&
-        now - newest(f) >= graceMs)
-      .foreach(deleteRecursively)
     // two-phase reclamation of SUPERSEDED immutable dirs: phase 1 plants
     // a tombstone in any _lv<k>/root-partition dir no map entry
     // references; phase 2 deletes it once the tombstone is idle past
@@ -539,7 +475,7 @@ object LayoutTxn {
           try { Files.createFile(tomb.toPath); () }
           catch { case _: java.nio.file.FileAlreadyExistsException => () }
         } else if (now - tomb.lastModified() >= graceMs)
-          deleteRecursively(target)
+          CommitLog.deleteRecursively(target)
       }
       // whole _lv<k> dirs (k < current) with zero referenced partitions
       Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
@@ -569,14 +505,11 @@ object LayoutTxn {
              groups: Seq[Group], batchId: Long = -1L,
              props: Map[String, String] = Map.empty): Long = {
     val newV = parent + 1
-    val stage = s"_lstage_v${newV}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val stage = Log.stageName(newV)
     Files.createDirectories(Paths.get(dir))
-    // front-load the link-support check on a layout's FIRST write this
-    // JVM, as MergeTable CREATE/CLONE do — without it a linkless
-    // filesystem fails deep inside the first casPublish mid-write
-    // (ADVICE r17 low); memoized per canonical dir, probing is not free
-    if (probedDirs.add(Paths.get(dir).toAbsolutePath.normalize.toString))
-      StoreOps.requireHardLinks(Paths.get(dir), "LayoutTxn commit")
+    // front-load the link-support check, as MergeTable CREATE/CLONE do —
+    // without it a linkless filesystem fails deep inside the first claim
+    CommitLog.requireHardLinks(Paths.get(dir), "LayoutTxn commit")
     val pr = new Properties()
     pr.setProperty("version", newV.toString)
     pr.setProperty("stage", stage)
@@ -616,15 +549,7 @@ object LayoutTxn {
       pr.setProperty(s"group.$i.dels",
         g.touched.filterNot(present.contains).mkString(","))
     }
-    // the CAS, via the StoreOps seam: publish the immutable claim,
-    // exactly one winner per parent
-    if (!StoreOps.casPublish(dir, pr, "graft layout commit",
-        claimPath(dir, newV))) {
-      deleteRecursively(new java.io.File(dir, stage))
-      throw new ConflictException(dir, newV,
-        s"was committed by another writer (expected parent $parent)")
-    }
-    finish(dir, pr)
+    Log.commit(dir, pr)
     newV
   }
 

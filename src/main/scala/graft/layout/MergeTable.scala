@@ -1,6 +1,6 @@
 package graft.layout
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Properties
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -63,24 +63,16 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   *    evolution is always a deliberate commit, never an accident of one
   *    batch's shape.
   *
-  * **Optimistic concurrency (round 11).** Two concurrent writers both
-  * reading parent version n would previously last-write-win the `_latest`
-  * swap and silently orphan one commit. Commits now claim their version
-  * with a compare-and-swap: data is staged under an attempt-unique
-  * `_stage_v<n>_<uuid>` dir, then the immutable `_manifest_v<n>` history
-  * file is published via `Files.createLink` — hard-link creation is atomic
-  * fail-if-exists on POSIX, so exactly ONE writer per parent version wins;
-  * the loser gets [[MergeTable.ConflictException]] naming the expected
-  * parent (retry is caller policy — re-reading the new manifest and
-  * re-running the merge is the standard loop). The winner then renames its
-  * stage to `v<n>` and swaps `_latest`. A crash between claim and swap is
-  * ROLLED FORWARD by the next writer ([[recover]], run at every
-  * merge/compact entry): the claimed manifest records its stage dir, so
-  * recovery finishes the rename + swap idempotently (rename races between
-  * a recovering writer and a slow original writer converge — both
-  * tolerate the other having completed each step). Driver-side state is
-  * one Properties file and a bucket→version map of at most `numBuckets`
-  * entries.
+  * **Optimistic concurrency.** Every commit runs the shared
+  * [[CommitLog]] protocol (stage, CAS claim, publish, version-guarded
+  * pointer swap, roll-forward): data stages under `_stage_v<n>_<uuid8>`,
+  * the claim IS the immutable `_manifest_v<n>` history entry, publish
+  * renames the stage to `v<n>`, and the swap installs that manifest as
+  * `_latest`. What MergeTable adds is the manifest itself — the
+  * bucket→(owning version, schema) map, stats and history fields — and
+  * its roll-forward policy: [[recover]], run at every merge/compact
+  * entry, finishes ANY claim past `_latest` (no grace). The loser of a
+  * claim gets [[MergeTable.ConflictException]]; retry is caller policy.
   */
 object MergeTable {
 
@@ -486,12 +478,8 @@ object MergeTable {
          else Nil)
     }.toMap
 
-  private def manifestPath(dir: String): Path = Paths.get(dir, "_latest")
-
   private def parseManifest(p: Path): Manifest = {
-    val props = new Properties()
-    val in = Files.newInputStream(p)
-    try props.load(in) finally in.close()
+    val props = CommitLog.load(p)
     val buckets = props.getProperty("buckets", "") match {
       case "" => Map.empty[Int, (Long, Int)]
       case s => s.split(",").iterator.map { kv =>
@@ -620,7 +608,7 @@ object MergeTable {
     String, (AnyRef, Long, java.nio.file.attribute.FileTime, Manifest)]()
 
   private def readManifest(dir: String): Option[Manifest] = {
-    val p = manifestPath(dir)
+    val p = Log.pointerPath(dir)
     if (!Files.exists(p)) None
     else try {
       val attrs = Files.readAttributes(p,
@@ -649,20 +637,8 @@ object MergeTable {
 
   /** Properties (not JSON) for the manifest: `Properties.store` handles
     * every escaping concern (the embedded schema JSON is one value).
-    *
-    * Commit protocol (CAS + roll-forward, see object scaladoc):
-    *   1. CLAIM: write the manifest to an attempt-unique tmp file, then
-    *      publish it as the immutable `_manifest_v<n>` history entry via
-    *      `Files.createLink` — atomic fail-if-exists, so exactly one
-    *      writer per parent version wins. The loser deletes its own
-    *      staged data and throws [[ConflictException]].
-    *   2. PUBLISH DATA: rename the winner's `_stage_v<n>_<uuid>` dir to
-    *      `v<n>` (recorded in the manifest's `stage` property so
-    *      [[recover]] can finish this step after a crash).
-    *   3. SWAP: tmp-write + same-dir ATOMIC_MOVE of `_latest`.
-    * The history entry lands BEFORE the `_latest` swap so a crash between
-    * the two leaves history consistent with the still-current `_latest`
-    * and is rolled forward by the next writer. */
+    * The same record is the commit's claim: its `stage` property names the
+    * data dir [[recover]] renames to `v<n>` after a crash. */
   private def props(m: Manifest, stageDir: Option[String]): Properties = {
     val p = new Properties()
     p.setProperty("version", m.version.toString)
@@ -727,21 +703,20 @@ object MergeTable {
   private def commitTs(prior: Option[Manifest]): Long =
     math.max(System.currentTimeMillis(), prior.map(_.ts + 1).getOrElse(0L))
 
-  // the atomic-pointer-swap primitive, via the StoreOps seam (r17): see
-  // StoreOps' scaladoc for the object-store conditional-put mapping
-  private def writeAtomic(dir: String, p: Properties, target: Path): Unit =
-    StoreOps.atomicSwap(dir, p, "graft MergeTable manifest", target)
+  /** MergeTable's format over the shared [[CommitLog]] protocol: the
+    * claim IS the `_manifest_v<n>` history entry and the pointer swap
+    * installs it verbatim as `_latest`; any claim rolls forward (grace 0 —
+    * a MergeTable writer never waits on another's publish). */
+  private val Log = new CommitLog.Format("graft MergeTable manifest",
+    stagePrefix = "_stage_", claimPrefix = "_manifest_v", dirPrefix = "v",
+    pointer = "_latest",
+    current = dir => readManifest(dir).fold(-1L)(_.version),
+    next = (_, pr) => pr,
+    conflict = (dir, v, _) => new ConflictException(dir, v),
+    lost = new LostCommitException(_, _, _))
 
-  private def commit(dir: String, m: Manifest, stageDir: Option[String]): Unit = {
-    val pr = props(m, stageDir)
-    val history = Paths.get(dir, s"_manifest_v${m.version}")
-    // the CAS, via the StoreOps seam: one winner per version
-    if (!StoreOps.casPublish(dir, pr, "graft MergeTable manifest", history)) {
-      stageDir.foreach(s => deleteRecursively(new java.io.File(dir, s)))
-      throw new ConflictException(dir, m.version)
-    }
-    finishCommit(dir, pr)
-  }
+  private def commit(dir: String, m: Manifest, stageDir: Option[String]): Unit =
+    Log.commit(dir, props(m, stageDir))
 
   /** A claimed commit whose staged data AND published `v<n>` directory are
     * both gone — unrecoverable (the data no longer exists anywhere, e.g. a
@@ -756,73 +731,13 @@ object MergeTable {
         "(a vacuum likely deleted an in-flight stage); the claim was " +
         "withdrawn — the interrupted merge must be re-run")
 
-  /** Steps 2+3 of the protocol; idempotent, so a recovering writer and a
-    * slow original writer racing through it converge.
-    *
-    * The `_latest` swap is guarded against REGRESSION: a slow-but-alive
-    * winner of version n can be overtaken by a recoverer that finishes n
-    * on its behalf and then commits n+1 — the laggard's unconditional
-    * swap would move `_latest` back to n, breaking monotonic reads until
-    * the next writer's recover() heals it. The version check closes that
-    * window to the instant between check and rename (POSIX offers no
-    * conditional rename; on an object store this whole swap is a
-    * conditional-put and the residue vanishes). A regression that slips
-    * through the residual instant still only exposes a CONSISTENT older
-    * snapshot and is rolled forward by the next merge/compact entry.
-    *
-    * A claim whose stage AND v-dir are BOTH missing (its data is gone —
-    * the vacuum-races-writer shape) is withdrawn — the immutable history
-    * entry is deleted so the table does not wedge — and reported loudly
-    * ONCE via [[LostCommitException]]. */
-  private[layout] def finishCommit(dir: String, pr: Properties): Unit = {
-    val version = pr.getProperty("version").toLong
-    val stage = pr.getProperty("stage", "")
-    val vDir = Paths.get(dir, s"v$version")
-    if (stage.nonEmpty && !Files.exists(vDir)) {
-      val stagePath = Paths.get(dir, stage)
-      if (!Files.exists(stagePath)) {
-        // the stage is gone — but between our vDir check above and this
-        // stage check, a racing recoverer/writer may have COMPLETED the
-        // stage→vDir move (ATOMIC_MOVE guarantees vDir exists once the
-        // stage disappears that way). Re-check before withdrawing: only a
-        // stage AND vDir both absent NOW is a genuinely lost commit.
-        if (!Files.exists(vDir)) {
-          // unrecoverable: withdraw the claim (heals the table), fail loudly
-          Files.deleteIfExists(Paths.get(dir, s"_manifest_v$version"))
-          throw new LostCommitException(dir, version, stage)
-        }
-      } else {
-        try Files.move(stagePath, vDir, StandardCopyOption.ATOMIC_MOVE)
-        catch { // the other racer already renamed it
-          case _: java.nio.file.NoSuchFileException if Files.exists(vDir) => ()
-          case _: java.nio.file.FileAlreadyExistsException => ()
-        }
-      }
-    }
-    if (readManifest(dir).forall(_.version < version))
-      writeAtomic(dir, pr, manifestPath(dir))
-  }
+  /** Publish + `_latest` swap of a claimed manifest ([[CommitLog]]). */
+  private[layout] def finishCommit(dir: String, pr: Properties): Unit =
+    Log.finish(dir, pr)
 
-  /** Roll an interrupted commit forward: if the version AFTER `_latest`
-    * has a claimed history manifest (a writer crashed between claim and
-    * swap), finish its data rename + `_latest` swap. Run at every
+  /** Roll every claimed-but-unswapped commit forward. Run at every
     * merge/compact entry; a no-op on a healthy table. */
-  private def recover(dir: String): Unit = {
-    var guard = 0
-    var next = readManifest(dir).map(_.version + 1).getOrElse(0L)
-    while (Files.exists(Paths.get(dir, s"_manifest_v$next")) && guard < 1000) {
-      val pr = new Properties()
-      val in = Files.newInputStream(Paths.get(dir, s"_manifest_v$next"))
-      try pr.load(in) finally in.close()
-      finishCommit(dir, pr)
-      next += 1; guard += 1
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
-  }
+  private def recover(dir: String): Unit = { Log.rollForward(dir, 0L); () }
 
   /** Resolve the immutable history manifest for `version`. A CLAIMED but
     * UNFINISHED commit (the manifest records a stage dir and `v<version>`
@@ -835,15 +750,17 @@ object MergeTable {
     * gone too, this fails loudly ([[LostCommitException]]) instead of
     * returning a manifest that reads as an empty snapshot. */
   private def manifestAt(dir: String, version: Long): Manifest = {
-    val p = Paths.get(dir, s"_manifest_v$version")
+    val p = Log.claimPath(dir, version)
     require(Files.exists(p),
       s"no manifest for version $version at $dir (expired or never committed)")
-    val pr = new Properties()
-    val in = Files.newInputStream(p)
-    try pr.load(in) finally in.close()
+    val pr = CommitLog.load(p)
     val stage = pr.getProperty("stage", "")
-    if (stage.nonEmpty && !Files.exists(Paths.get(dir, s"v$version")))
-      finishCommit(dir, pr) // roll the unfinished commit forward (or throw)
+    if (stage.nonEmpty && !Files.exists(Log.versionDir(dir, version))) {
+      // roll the unfinished commit forward, or throw if its data is gone
+      // (publish first: finish skips a version the pointer already passed)
+      Log.publish(dir, version, stage)
+      finishCommit(dir, pr)
+    }
     parseManifest(p)
   }
 
@@ -1633,7 +1550,7 @@ object MergeTable {
     // attempt-unique staging: concurrent writers racing for version newV
     // must never interleave files in one data dir — the CAS in commit()
     // decides whose stage becomes v<newV>
-    val stage = s"_stage_v${newV}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val stage = Log.stageName(newV)
 
     // initial commit (or no changed bucket has any prior data): nothing to
     // match against, so skip the target read AND the full-outer join — the
@@ -1778,7 +1695,7 @@ object MergeTable {
     val PreparedBatch(prior, nb, key, widened, payload, ch, nRows, changed,
       newV) = pb
     val schemaJson = widened.json
-    val stage = s"_stage_v${newV}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val stage = Log.stageName(newV)
     val wopts = prior.map(m => bloomOptions(m.pqBloomCols, m.pqBloomNdv))
       .getOrElse(Map.empty[String, String])
     // a batch against an EMPTY table (or into untouched buckets only) has
@@ -1838,7 +1755,7 @@ object MergeTable {
     // probe ONCE at the door: the commit CAS stands on fail-if-exists
     // hard links — a filesystem without them must fail table creation
     // loudly, not the first merge mid-write (VERDICT r16 task 4)
-    StoreOps.requireHardLinks(Paths.get(dir), "CREATE TABLE")
+    CommitLog.requireHardLinks(Paths.get(dir), "CREATE TABLE")
     recover(dir)
     require(readManifest(dir).isEmpty, s"a MergeTable already exists at $dir")
     val identityProj = schema.fieldNames.toSeq.map(n => n -> n).toMap
@@ -2110,7 +2027,7 @@ object MergeTable {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (newCounts.isEmpty) return None
     val newV = m.version + 1
-    val stage = s"_stage_v${newV}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val stage = Log.stageName(newV)
     // a DELTA-CARRYING bucket cannot take a deletion vector: readBuckets
     // applies vectors to the BASE before the runs stack on top, so a
     // vector'd key living in a run would silently resurrect. Its victims
@@ -2204,7 +2121,7 @@ object MergeTable {
     // CAS needs them too); cross-DEVICE src→dst still degrades to
     // per-file copy below — that boundary failure (EXDEV) is orthogonal
     // to link support (VERDICT r16 task 4 / ADVICE r16 medium)
-    StoreOps.requireHardLinks(Paths.get(dstDir), "CLONE")
+    CommitLog.requireHardLinks(Paths.get(dstDir), "CLONE")
     // A prior clone attempt that crashed between its history-entry CAS
     // and the `_latest` swap left `_manifest_v<head'>` with NO `_latest`:
     // the isEmpty gate below would pass but commit()'s CAS would then
@@ -2220,9 +2137,7 @@ object MergeTable {
         .filter(_.getName.matches("_manifest_v\\d+"))
         .sortBy(_.getName.stripPrefix("_manifest_v").toLong).lastOption
       pendingClone.foreach { f =>
-        val pr = new Properties()
-        val in = Files.newInputStream(f.toPath)
-        try pr.load(in) finally in.close()
+        val pr = CommitLog.load(f.toPath)
         // only a CLONE claim rolls forward here — a dst holding some
         // UNRELATED crashed commit (a crashed CREATE that lost _latest)
         // must not be published and reported as a clone of srcDir with
@@ -2248,7 +2163,7 @@ object MergeTable {
         dst.mkdirs()
         Option(src.listFiles()).getOrElse(Array.empty)
           .foreach(f => linkTree(f, new java.io.File(dst, f.getName)))
-      } else StoreOps.linkOrCopy(dst.toPath, src.toPath)
+      } else CommitLog.linkOrCopy(dst.toPath, src.toPath)
     versions.toSeq.sorted.foreach { v =>
       val src = new java.io.File(srcDir, s"v$v")
       // a no-data head commit (e.g. a metadata-only alter) has no v-dir
@@ -2309,7 +2224,7 @@ object MergeTable {
         s"ZORDER BY column '$c' must be numeric, is ${f.dataType.simpleString}")
     }}
     val newV = m.version + 1
-    val stage = s"_stage_v${newV}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val stage = Log.stageName(newV)
     // delta-only buckets (created purely by merge-on-read runs, no base
     // yet) compact too: the rewrite materializes their runs into a base
     val chosen = (m.buckets.keySet ++ m.deltas.keySet)
@@ -2406,7 +2321,7 @@ object MergeTable {
     require(newBuckets >= 1,
       s"REBUCKET $newBuckets: bucket count must be >= 1")
     val newV = m.version + 1
-    val stage = s"_stage_v${newV}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val stage = Log.stageName(newV)
     val hasData = m.buckets.nonEmpty || m.deltas.nonEmpty
     if (hasData) {
       val data = readBuckets(spark, dir, m, None).drop(BucketCol)
@@ -2516,12 +2431,9 @@ object MergeTable {
           // (expireVersions, or a LostCommitException withdrawal) just
           // means the version is not listable — this is a read-only
           // listing, it must not throw on a concurrent writer's cleanup
-          try {
-            val pr = new Properties()
-            val in = Files.newInputStream(Paths.get(dir, s"_manifest_v$v"))
-            try pr.load(in) finally in.close()
-            pr.getProperty("stage", "").isEmpty // no-data commit (e.g. replay)
-          } catch { case _: java.nio.file.NoSuchFileException => false }
+          try CommitLog.load(Log.claimPath(dir, v))
+            .getProperty("stage", "").isEmpty // no-data commit (e.g. replay)
+          catch { case _: java.nio.file.NoSuchFileException => false }
         }
       }
 
@@ -2586,7 +2498,7 @@ object MergeTable {
   def history(spark: SparkSession, dir: String): DataFrame = {
     val rows = versions(dir).flatMap { v =>
       try {
-        val m = parseManifest(Paths.get(dir, s"_manifest_v$v"))
+        val m = parseManifest(Log.claimPath(dir, v))
         Some(Row(m.version, new java.sql.Timestamp(m.ts),
           if (m.op.isEmpty) null else m.op, m.rows,
           m.key, m.numBuckets))
@@ -2623,7 +2535,7 @@ object MergeTable {
     * before-first-commit case errors loudly. */
   def versionForTimestamp(dir: String, tsMillis: Long): Long = {
     val stamped0 = versions(dir).flatMap { v =>
-      try Some(v -> parseManifest(Paths.get(dir, s"_manifest_v$v")).ts)
+      try Some(v -> parseManifest(Log.claimPath(dir, v)).ts)
       catch { case _: java.nio.file.NoSuchFileException => None }
     }
     require(stamped0.nonEmpty, s"no retained versions at $dir")
@@ -2652,7 +2564,7 @@ object MergeTable {
   def expireVersions(dir: String, keepLast: Int = 1): Seq[Long] = {
     val vs = versions(dir)
     val expired = vs.dropRight(keepLast)
-    expired.foreach(v => Files.deleteIfExists(Paths.get(dir, s"_manifest_v$v")))
+    expired.foreach(v => Files.deleteIfExists(Log.claimPath(dir, v)))
     expired
   }
 
@@ -2702,23 +2614,12 @@ object MergeTable {
       }
       .toSet ++ m.buckets.values.map(_._1) ++ m.dvs.values.map(_._1) ++
       m.deltas.values.flatten.map(_._1) + m.version
-    val now = System.currentTimeMillis()
-    def idlePastGrace(f: java.io.File): Boolean = {
-      // newest mtime anywhere under the stage (the dir itself goes stale
-      // while parquet part files are still landing inside it)
-      def newest(x: java.io.File): Long =
-        (x.lastModified() +: Option(x.listFiles()).getOrElse(Array.empty)
-          .map(newest).toSeq).max
-      now - newest(f) >= stageGraceMs
-    }
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && (
-        (f.getName.matches("v\\d+") &&
-          !referenced.contains(f.getName.stripPrefix("v").toLong)) ||
-        // crash-orphaned staging dirs (a writer that died before its CAS
-        // claim); recover() above already rolled forward any CLAIMED stage,
-        // and the grace window protects a live writer's in-flight stage
-        (f.getName.startsWith("_stage_v") && idlePastGrace(f))))
-      .map { f => deleteRecursively(f); f.getName }
+      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
+        !referenced.contains(f.getName.stripPrefix("v").toLong))
+      .map { f => CommitLog.deleteRecursively(f); f.getName } ++
+      // crash-orphaned stages (a writer that died before its CAS claim);
+      // the grace window protects a live writer's in-flight stage
+      Log.sweepStages(dir, stageGraceMs)
   }
 }

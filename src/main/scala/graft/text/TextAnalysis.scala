@@ -966,14 +966,7 @@ object TextAnalysis {
         graft.layout.LayoutTxn.readSnapshot(spark, snap, "", "tb",
           Some(tbs.map(b => s"tb=$b").toSet)))
       .drop("tb")
-    val occ = pruned.filter(col("term").isin(terms: _*))
-      .select(explode(col("postings")).as("p"))
-      .select(col("p.doc_id").as("doc_id"), col("p.tf").as("tf"))
-    liveOcc(view, occ)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum("tf").as("score"))
-      .filter(col("n_terms") === terms.length)
-      .select(col("doc_id"), col("score"))
+    allTerms(liveOcc(view, occurrences(pruned, terms)), terms.length)
   }
 
   /** Per-commit (N, avg-length) of [[bm25SearchLayout]]'s doc store. */
@@ -1039,12 +1032,20 @@ object TextAnalysis {
     * path, an `IN` filter an index-at-rest layout turns into partition
     * pruning. */
   def searchAll(index: DataFrame, terms: Seq[String]): DataFrame =
+    allTerms(occurrences(index, terms), terms.length)
+
+  /** The query terms' postings exploded to (doc_id, tf) occurrences. */
+  private def occurrences(index: DataFrame, terms: Seq[String]): DataFrame =
     index.filter(col("term").isin(terms: _*))
       .select(explode(col("postings")).as("p"))
       .select(col("p.doc_id").as("doc_id"), col("p.tf").as("tf"))
-      .groupBy("doc_id")
+
+  /** The conjunctive aggregation over `occ`: (doc_id, score = total tf)
+    * of the docs with an occurrence of all `nTerms` query terms. */
+  private def allTerms(occ: DataFrame, nTerms: Int): DataFrame =
+    occ.groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"), sum("tf").as("score"))
-      .filter(col("n_terms") === terms.length)
+      .filter(col("n_terms") === nTerms)
       .select(col("doc_id"), col("score"))
 
   /** The BPE vocabulary-training inner step: count adjacent symbol pairs

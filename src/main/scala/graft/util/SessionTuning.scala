@@ -35,11 +35,18 @@ package graft.util
   * geomean per-query ratio 0.823.
   */
 object SessionTuning {
+  /** The derived count over every `*.parquet` file under `sfDir`, at any
+    * depth: a table may be one file or a directory of part files. */
   def shufflePartitions(sfDir: String): Int = {
-    val bytes = Option(new java.io.File(sfDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(_.length).sum
+    def parquetBytes(f: java.io.File): Long =
+      if (f.isDirectory)
+        Option(f.listFiles()).getOrElse(Array.empty).map(parquetBytes).sum
+      else if (f.getName.endsWith(".parquet")) f.length
+      else 0L
+    val bytes = parquetBytes(new java.io.File(sfDir))
+    if (bytes == 0L)
+      System.err.println(s"[session] WARNING: no parquet bytes under " +
+        s"$sfDir; shuffle partitions fall back to the floor (8)")
     val derived = math.ceil(bytes / (8.0 * (1 << 20))).toInt
     math.min(4096, math.max(8, derived))
   }
