@@ -12,26 +12,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // scale-adaptive: derived from the input bytes, not the core count
-      // (guide §2.2; SessionTuning scaladoc has the full rationale and the
-      // measured 121.9 → 99.3 s full-bench A/B); SPARK_GRAFT_SHUFFLE
-      // still overrides explicitly
-      .config("spark.sql.shuffle.partitions",
-        graft.util.SessionTuning.shufflePartitionsConf(sfDir))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // static conf, default 100: a 168-query suite generates thousands of
-      // codegen units, so the default cache thrashes — every eviction is a
-      // janino recompile charged to whichever later query re-plans the
-      // shape, and the dead duplicate classes pile into the JIT code cache
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    graft.plans.ElementAtNullIndexGuard.ensureInjected(spark)
+    // scale-adaptive: partitions derive from the input bytes, not the core
+    // count (guide §2.2; SessionTuning scaladoc has the full rationale and
+    // the measured 121.9 → 99.3 s full-bench A/B); SPARK_GRAFT_SHUFFLE
+    // still overrides explicitly
+    val spark = graft.util.SessionTuning.session(cpus.toInt,
+      graft.util.SessionTuning.shufflePartitionsConf(sfDir).toInt)
     spark.sparkContext.setLogLevel("WARN")
     // ingestion contract first (see Verify): named failure beats N timed errors
     graft.model.Contracts.preflight(spark, sfDir)

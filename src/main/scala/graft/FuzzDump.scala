@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -628,7 +628,6 @@ object FuzzDump {
         // emulation: identical (ord DESC, payload ASC) keep order, null
         // payload/ord rows skipped by the heap and the WHERE alike, empty
         // groups emit one all-null row via posexplode_outer / LEFT JOIN.
-        graft.functions.TopKFunctions.ensureRegistered(l.sparkSession)
         val kTop = 1 + rnd.nextInt(4)
         Gen(
           l.groupBy(col("k"))
@@ -1846,32 +1845,27 @@ object FuzzDump {
     // results under any engine configuration — a config-dependent
     // divergence (AQE on/off, 1 vs N shuffle partitions) is the scariest
     // wrong-results class, so the lane can re-run under any combination
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_FUZZ_CPUS", "8")}]")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_FUZZ_AQE", "true"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_FUZZ_SHUFFLE", "8"))
-      // codegen-differential knob: SPARK_GRAFT_FUZZ_CODEGEN=off runs the
-      // SAME seeds fully interpreted (no whole-stage codegen, expression
-      // factory pinned to NO_CODEGEN). Both modes must match DuckDB, so
-      // they transitively must match each other — the lane dimension that
-      // catches wrong-results codegen/interpreted divergences like the
-      // Spark 4.1.2 element_at(array, null-index) bug this lane found.
-      .config("spark.sql.codegen.wholeStage",
-        if (sys.env.get("SPARK_GRAFT_FUZZ_CODEGEN").contains("off")) "false"
-        else "true")
-      .config("spark.sql.codegen.factoryMode",
-        if (sys.env.get("SPARK_GRAFT_FUZZ_CODEGEN").contains("off"))
-          "NO_CODEGEN" else "FALLBACK")
-      .config("spark.sql.session.timeZone", "UTC")
-      // write int64 micros, not INT96: identical bits for both readers
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    graft.plans.ElementAtNullIndexGuard.ensureInjected(spark)
+    val spark = graft.util.SessionTuning.session(
+      sys.env.getOrElse("SPARK_GRAFT_FUZZ_CPUS", "8").toInt,
+      sys.env.getOrElse("SPARK_GRAFT_FUZZ_SHUFFLE", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
+    // codegen-differential knob: SPARK_GRAFT_FUZZ_CODEGEN=off runs the
+    // SAME seeds fully interpreted (no whole-stage codegen, expression
+    // factory pinned to NO_CODEGEN). Both modes must match DuckDB, so
+    // they transitively must match each other — the lane dimension that
+    // catches wrong-results codegen/interpreted divergences like the
+    // Spark 4.1.2 element_at(array, null-index) bug this lane found.
+    val interpreted = sys.env.get("SPARK_GRAFT_FUZZ_CODEGEN").contains("off")
+    Seq(
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_FUZZ_AQE", "true"),
+      "spark.sql.codegen.wholeStage" -> (!interpreted).toString,
+      "spark.sql.codegen.factoryMode" -> (if (interpreted) "NO_CODEGEN" else "FALLBACK"),
+      // write int64 micros, not INT96: identical bits for both readers
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
+    ).foreach { case (k, v) =>
+      require(spark.conf.isModifiable(k), s"$k cannot be set on a live session")
+      spark.conf.set(k, v)
+    }
     val root = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(root)
     var written = 0

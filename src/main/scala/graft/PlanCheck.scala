@@ -1,22 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans of selected queries — the plan-quality
-  * feedback loop (pushdown / pruning / broadcast / shuffle count). */
+  * feedback loop (pushdown / pruning / broadcast / shuffle count). Plans
+  * under Bench's session: its cores and the partitions derived from the
+  * sf dir (SPARK_GRAFT_CPUS / SPARK_GRAFT_SHUFFLE override both, as there). */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      // default 4 as always; SPARK_GRAFT_SHUFFLE overrides so partition-
-      // count plan evidence (r20 SessionTuning) can be dumped at any width
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").config("spark.sql.extensions", "graft.GraftExtensions").getOrCreate()
-    graft.plans.ElementAtNullIndexGuard.ensureInjected(spark)
-    spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
+    val spark = graft.util.SessionTuning.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      graft.util.SessionTuning.shufflePartitionsConf(d).toInt)
+    spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q01_filter_project", "q02_lookup_join", "q03_merge_diff", "q06_agg_pricing")
     names.foreach { n =>

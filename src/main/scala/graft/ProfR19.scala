@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.ConcurrentHashMap
 
@@ -13,18 +12,8 @@ object ProfR19 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        graft.util.SessionTuning.shufflePartitionsConf(sfDir))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    graft.plans.ElementAtNullIndexGuard.ensureInjected(spark)
+    val spark = graft.util.SessionTuning.session(cpus.toInt,
+      graft.util.SessionTuning.shufflePartitionsConf(sfDir).toInt)
     spark.sparkContext.setLogLevel("WARN")
     graft.model.Contracts.preflight(spark, sfDir)
     graft.model.Tables.ensureSpool(spark, sfDir)

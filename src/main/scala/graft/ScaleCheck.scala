@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -26,17 +26,11 @@ object ScaleCheck {
     // any other count — passing the literal here keeps that guard honest
     // if this master line ever changes
     val cpus = "32"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      // 32 matches the bench config; high multipliers can need more initial
-      // partitions to keep a shuffle partition inside execution memory
-      // (AQE coalesces back down when small) — override per run:
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").config("spark.sql.extensions", "graft.GraftExtensions").getOrCreate()
-    graft.plans.ElementAtNullIndexGuard.ensureInjected(spark)
+    // 32 partitions: high multipliers can need more initial partitions to
+    // keep a shuffle partition inside execution memory (AQE coalesces
+    // back down when small) — override per run:
+    val spark = graft.util.SessionTuning.session(cpus.toInt,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     val d = "/root/testdata/sf0.1"
 
@@ -468,7 +462,6 @@ object ScaleCheck {
     // rows. Cost must track the corpus token count; the pair stage is
     // sources^2 rows of pure array math, mult-invariant.
     if (want("kmv_sketch")) {
-      graft.functions.KmvFunctions.ensureRegistered(spark)
       time("kmv_sketch_pass", nDocs) {
         val dw = docs.select(col("source").as("g"),
             explode(text.TextAnalysis.words(col("text"))).as("w")).distinct()

@@ -704,7 +704,7 @@ object SparkEntry {
     // (the window row_number form q11 uses must shuffle + full-sort each
     // group; at 100 TB a hot group is billions of rows and this caps it)
     "q80_topk_per_group" -> ((s, d) => {
-      graft.functions.TopKFunctions.ensureRegistered(s)
+      GraftExtensions.ensureRegistered(s)
       t(s, d, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(expr("top_k_by(o_orderkey, cast(o_totalprice as double), 5)").as("tk"))
@@ -1001,7 +1001,7 @@ object SparkEntry {
     // oracle — the q69 pattern); its shingles are the hot items a real
     // crawl's navigation chrome would be.
     "q78_heavy_hitters" -> ((s, d) => {
-      graft.functions.HeavyHitterFunctions.ensureRegistered(s)
+      GraftExtensions.ensureRegistered(s)
       val aug = t(s, d, "documents").select(col("doc_id"),
         when(col("doc_id") % 10 === 0,
             concat(col("text"), lit(" subscribe now for weekly updates")))
@@ -2129,7 +2129,7 @@ object SparkEntry {
     // the booleans as TRUE, so a silent sketch regression now FAILS the
     // correctness gate instead of sailing through a rows-only check.
     "q90_approx_distinct" -> ((s, d) => {
-      graft.functions.KmvFunctions.ensureRegistered(s)
+      GraftExtensions.ensureRegistered(s)
       t(s, d, "events").groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_users"),
           approx_count_distinct(col("user_id")).as("__hll"),
@@ -2726,7 +2726,7 @@ object SparkEntry {
     // oracle rebuilds the IDENTICAL grid with a GROUP BY and the estimates
     // hash-match.
     "q132_cms_freq" -> ((s, d) => {
-      graft.functions.CountMinFunctions.ensureRegistered(s)
+      GraftExtensions.ensureRegistered(s)
       val ev = Tables.events(s, d)
       val sketch = ev.agg(
         expr("cms_sketch(cast(user_id as string), 4, 256)").as("sk"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,22 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shared scale-adaptive default (SessionTuning scaladoc): Verify
-      // must hash-check the same plan shapes Bench times
-      .config("spark.sql.shuffle.partitions",
-        graft.util.SessionTuning.shufflePartitionsConf(sfDir))
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Bench: the 100-entry default codegen cache thrashes across a
-      // 168-query run (static conf, must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    graft.plans.ElementAtNullIndexGuard.ensureInjected(spark)
+    // Bench's session: Verify must hash-check the same plan shapes Bench
+    // times
+    val spark = graft.util.SessionTuning.session(cpus.toInt,
+      graft.util.SessionTuning.shufflePartitionsConf(sfDir).toInt)
     spark.sparkContext.setLogLevel("WARN")
     // ingestion contract first: schema drift in the inputs must fail loud
     // and named BEFORE 133 queries run against it (round 6 lost 11 queries

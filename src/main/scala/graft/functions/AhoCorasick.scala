@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -178,16 +177,12 @@ object CanaryHits {
     }
   }
 
-  /** Shared expression builder (used by both [[ensureRegistered]] and
-    * `GraftExtensions.injectFunction` so the two resolution paths cannot
-    * diverge): the pattern array must be foldable (literals) — it defines
-    * the automaton, a plan-time constant by construction. A null array or
-    * null elements are rejected here with the same message, not left to
-    * NPE inside eval(). */
+  /** The `GraftExtensions` catalog's builder (arity already checked): the
+    * pattern array must be foldable (literals) — it defines the automaton,
+    * a plan-time constant by construction. A null array or null elements
+    * are rejected here with the same message, not left to NPE inside
+    * eval(). */
   def build(children: Seq[Expression]): CanaryHits = {
-    if (children.size != 2)
-      throw new IllegalArgumentException(
-        s"canary_hits(text, patterns) expects 2 arguments but got ${children.size}")
     val pats = children(1) match {
       case e if e.foldable && e.dataType.isInstanceOf[ArrayType] &&
           e.dataType.asInstanceOf[ArrayType].elementType == StringType =>
@@ -203,18 +198,6 @@ object CanaryHits {
         s"canary_hits: patterns must be a foldable string array, got $other")
     }
     CanaryHits(children(0), pats)
-  }
-
-  /** Idempotent SQL registration: `canary_hits(text, array('p0','p1'))`. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val fid = FunctionIdentifier("canary_hits")
-    if (!registry.functionExists(fid)) {
-      registry.registerFunction(
-        fid,
-        new ExpressionInfo(classOf[CanaryHits].getName, "canary_hits"),
-        (children: Seq[Expression]) => build(children))
-    }
   }
 
   /** Column-level door. */

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -61,25 +60,6 @@ object BinaryStride {
 }
 
 object BinaryFunctions {
-  /** Idempotently register `binary_stride` for SQL use. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("binary_stride")
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[BinaryStride].getName, "binary_stride"),
-        (children: Seq[Expression]) => {
-          // arity first: a wrong argument count must fail with the expected
-          // signature, not IndexOutOfBoundsException
-          if (children.size != 2)
-            throw new IllegalArgumentException(
-              s"binary_stride(payload, factor) expects 2 arguments but got ${children.size}")
-          BinaryStride(children(0), children(1))
-        })
-    }
-  }
-
   /** Column-level door. */
   def binaryStride(payload: Column, factor: Column): Column =
     Bridge.columnOf(BinaryStride(Bridge.expressionOf(payload), Bridge.expressionOf(factor)))

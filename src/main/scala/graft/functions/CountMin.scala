@@ -4,10 +4,8 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -96,28 +94,4 @@ case class CountMinSketch(child: Expression, depth: Int, width: Int,
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CountMinSketch =
     copy(child = c.head)
-}
-
-object CountMinFunctions {
-  /** Register `cms_sketch(col[, depth, width])` in the session registry. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("cms_sketch")
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[CountMinSketch].getName, "cms_sketch"),
-        (children: Seq[Expression]) => {
-          if (children.isEmpty || children.size > 3)
-            throw new IllegalArgumentException(
-              s"cms_sketch(col[, depth, width]) expects 1-3 arguments but got ${children.size}")
-          val d = if (children.length > 1)
-            children(1).eval(null).asInstanceOf[Number].intValue() else 4
-          val w = if (children.length > 2)
-            children(2).eval(null).asInstanceOf[Number].intValue() else 256
-          require(d >= 1 && w >= 1, s"cms_sketch needs depth/width >= 1, got $d/$w")
-          CountMinSketch(children.head, d, w).toAggregateExpression()
-        })
-    }
-  }
 }

@@ -74,12 +74,6 @@ object EntropyProfile {
     StructField("n_tokens", LongType, nullable = false),
     StructField("h_words", DoubleType, nullable = false)))
 
-  def build(children: Seq[Expression]): Expression = {
-    require(children.size == 1,
-      s"entropy_profile(text) expects 1 argument but got ${children.size}")
-    EntropyProfile(children.head)
-  }
-
   /** Spark's Round(double, 6) (HALF_UP on the shortest decimal
     * representation), returned in exact 1e-6 units. |p·ln p| ≤ 1/e, so
     * the long never overflows. */

@@ -1,14 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -64,22 +63,6 @@ case class WordGrams(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object WordGrams {
-  /** Shared builder for both registration doors (SQL registry and
-    * SparkSessionExtensions) — one code path, no silent divergence. */
-  def build(children: Seq[Expression]): WordGrams = {
-    if (children.size != 2)
-      throw new IllegalArgumentException(
-        s"word_grams(text, n) expects 2 arguments but got ${children.size}")
-    val n = children(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"word_grams(text, n): n must be an integer literal, got $other")
-    }
-    WordGrams(children(0), n)
-  }
-}
-
 case class GramDominance(child: Expression, n: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -125,18 +108,6 @@ object GramDominance {
     StructField("dup_occ", LongType, nullable = false),
     StructField("total_chars", LongType, nullable = false)))
 
-  /** Shared builder for both registration doors. */
-  def build(children: Seq[Expression]): GramDominance = {
-    if (children.size != 2)
-      throw new IllegalArgumentException(
-        s"gram_dominance(text, n) expects 2 arguments but got ${children.size}")
-    val n = children(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"gram_dominance(text, n): n must be an integer literal, got $other")
-    }
-    GramDominance(children(0), n)
-  }
 }
 
 object GramKernels {
@@ -228,25 +199,6 @@ object GramKernels {
 }
 
 object GramFunctions {
-  /** Idempotent SQL registration of `word_grams(text, n)` and
-    * `gram_dominance(text, n)` — delegates to the companions' shared
-    * builders (the same path GraftExtensions injects). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val wid = FunctionIdentifier("word_grams")
-    if (!registry.functionExists(wid)) {
-      registry.registerFunction(wid,
-        new ExpressionInfo(classOf[WordGrams].getName, "word_grams"),
-        (children: Seq[Expression]) => WordGrams.build(children))
-    }
-    val gid = FunctionIdentifier("gram_dominance")
-    if (!registry.functionExists(gid)) {
-      registry.registerFunction(gid,
-        new ExpressionInfo(classOf[GramDominance].getName, "gram_dominance"),
-        (children: Seq[Expression]) => GramDominance.build(children))
-    }
-  }
-
   /** Column-level doors. */
   def wordGrams(text: Column, n: Int): Column =
     Bridge.columnOf(WordGrams(Bridge.expressionOf(text), n))

@@ -3,10 +3,8 @@ package graft.functions
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
@@ -148,26 +146,4 @@ case class MisraGries(child: Expression, capacity: Int,
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): MisraGries =
     copy(child = c.head)
-}
-
-object HeavyHitterFunctions {
-  /** Register `heavy_hitters(col[, capacity])` in the session registry. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("heavy_hitters")
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[MisraGries].getName, "heavy_hitters"),
-        (children: Seq[Expression]) => {
-          if (children.isEmpty || children.size > 2)
-            throw new IllegalArgumentException(
-              s"heavy_hitters(col[, capacity]) expects 1 or 2 arguments but got ${children.size}")
-          val c = if (children.length > 1)
-            children(1).eval(null).asInstanceOf[Number].intValue() else 256
-          require(c >= 1, s"heavy_hitters capacity must be >= 1, got $c")
-          MisraGries(children.head, c).toAggregateExpression()
-        })
-    }
-  }
 }

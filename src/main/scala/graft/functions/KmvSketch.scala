@@ -2,10 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -142,31 +140,4 @@ case class KmvMins(child: Expression, k: Int,
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KmvMins =
     copy(child = c.head)
-}
-
-object KmvFunctions {
-  /** Register `kmv_distinct(col[, k])` and `kmv_mins(col[, k])` in the
-    * session's function registry. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def reg(name: String, clazz: Class[_],
-            build: (Expression, Int) => KmvAggBase): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!registry.functionExists(id)) {
-        registry.registerFunction(
-          id,
-          new ExpressionInfo(clazz.getName, name),
-          (children: Seq[Expression]) => {
-            if (children.isEmpty || children.size > 2)
-              throw new IllegalArgumentException(
-                s"$name(col[, k]) expects 1 or 2 arguments but got ${children.size}")
-            val k = if (children.length > 1)
-              children(1).eval(null).asInstanceOf[Number].intValue() else 256
-            build(children.head, k).toAggregateExpression()
-          })
-      }
-    }
-    reg("kmv_distinct", classOf[KmvDistinct], (c, k) => KmvDistinct(c, k))
-    reg("kmv_mins", classOf[KmvMins], (c, k) => KmvMins(c, k))
-  }
 }

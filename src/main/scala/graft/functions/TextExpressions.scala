@@ -2,10 +2,9 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
@@ -511,83 +510,6 @@ object RemoveSpans {
 }
 
 object TextFunctions {
-  private def requireArity(name: String, children: Seq[Expression], n: Int): Unit =
-    if (children.size != n)
-      throw new IllegalArgumentException(
-        s"$name expects $n argument(s) but got ${children.size}")
-
-  /** Idempotently register `repetition_ratio(text, k)` / `simhash16(text)`
-    * for SQL use. Builders validate arity up front (a wrong argument count
-    * fails with a clear message, not IndexOutOfBounds). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val rid = FunctionIdentifier("repetition_ratio")
-    if (!registry.functionExists(rid)) {
-      registry.registerFunction(
-        rid,
-        new ExpressionInfo(classOf[RepetitionRatio].getName, "repetition_ratio"),
-        (children: Seq[Expression]) => {
-          requireArity("repetition_ratio(text, k)", children, 2)
-          val k = children(1) match {
-            case Literal(v: Int, IntegerType) => v
-            case other => throw new IllegalArgumentException(
-              s"repetition_ratio(text, k): k must be an integer literal, got $other")
-          }
-          RepetitionRatio(children(0), k)
-        })
-    }
-    val sid = FunctionIdentifier("simhash16")
-    if (!registry.functionExists(sid)) {
-      registry.registerFunction(
-        sid,
-        new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-        (children: Seq[Expression]) => {
-          requireArity("simhash16(text)", children, 1)
-          SimHash16(children(0))
-        })
-    }
-    val wid = FunctionIdentifier("winnow_fps")
-    if (!registry.functionExists(wid)) {
-      registry.registerFunction(
-        wid,
-        new ExpressionInfo(classOf[WinnowFingerprints].getName, "winnow_fps"),
-        (children: Seq[Expression]) => {
-          requireArity("winnow_fps(text, k, w)", children, 3)
-          WinnowFingerprints(children(0),
-            TextFunctions.intLiteral("winnow_fps", "k", children(1)),
-            TextFunctions.intLiteral("winnow_fps", "w", children(2)))
-        })
-    }
-    val tid = FunctionIdentifier("term_counts")
-    if (!registry.functionExists(tid)) {
-      registry.registerFunction(
-        tid,
-        new ExpressionInfo(classOf[TermCounts].getName, "term_counts"),
-        (children: Seq[Expression]) => {
-          requireArity("term_counts(text)", children, 1)
-          TermCounts(children(0))
-        })
-    }
-    val cid = FunctionIdentifier("chargram_jaccard")
-    if (!registry.functionExists(cid)) {
-      registry.registerFunction(
-        cid,
-        new ExpressionInfo(classOf[CharGramJaccard].getName, "chargram_jaccard"),
-        (children: Seq[Expression]) => {
-          requireArity("chargram_jaccard(a, b, n)", children, 3)
-          CharGramJaccard(children(0), children(1),
-            TextFunctions.intLiteral("chargram_jaccard", "n", children(2)))
-        })
-    }
-  }
-
-  private[functions] def intLiteral(fn: String, arg: String, e: Expression): Int =
-    e match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"$fn: $arg must be an integer literal, got $other")
-    }
-
   /** Column-level doors. */
   def repetitionRatio(text: Column, k: Int): Column =
     Bridge.columnOf(RepetitionRatio(Bridge.expressionOf(text), k))

@@ -2,10 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
@@ -111,25 +109,4 @@ case class TopKBy(payload: Expression, ord: Expression, k: Int,
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TopKBy =
     copy(payload = c(0), ord = c(1))
-}
-
-object TopKFunctions {
-  /** Register `top_k_by(payload BIGINT, ord DOUBLE, k)` in the session. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("top_k_by")
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[TopKBy].getName, "top_k_by"),
-        (children: Seq[Expression]) => {
-          if (children.size != 3)
-            throw new IllegalArgumentException(
-              s"top_k_by(payload, ord, k) expects 3 arguments but got ${children.size}")
-          val k = children(2).eval(null).asInstanceOf[Number].intValue()
-          require(k >= 1, s"top_k_by k must be >= 1, got $k")
-          TopKBy(children(0), children(1), k).toAggregateExpression()
-        })
-    }
-  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -135,37 +133,6 @@ object VecDot {
 }
 
 object VectorFunctions {
-  /** Idempotently register the vector functions in a session's registry so
-    * `call_function("vec_cosine", ...)` / SQL `vec_cosine(a, b)` resolve.
-    * Also injectable globally via [[graft.GraftExtensions]]. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("vec_cosine")
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "vec_cosine"),
-        (children: Seq[Expression]) => {
-          if (children.size != 2)
-            throw new IllegalArgumentException(
-              s"vec_cosine(a, b) expects 2 arguments but got ${children.size}")
-          CosineSimilarity(children(0), children(1))
-        })
-    }
-    val did = FunctionIdentifier("vec_dot")
-    if (!registry.functionExists(did)) {
-      registry.registerFunction(
-        did,
-        new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-        (children: Seq[Expression]) => {
-          if (children.size != 2)
-            throw new IllegalArgumentException(
-              s"vec_dot(a, b) expects 2 arguments but got ${children.size}")
-          VecDot(children(0), children(1))
-        })
-    }
-  }
-
   /** Column-level door for contexts without a session at hand. */
   def vecDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     Bridge.columnOf(VecDot(Bridge.expressionOf(a), Bridge.expressionOf(b)))

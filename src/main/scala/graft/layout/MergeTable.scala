@@ -2582,7 +2582,11 @@ object MergeTable {
     * gone (the [[LostCommitException]] shape). The mtime check makes that
     * race require a writer stalled longer than the grace period mid-write;
     * pass `stageGraceMs = 0` only when no writer can be live (the r11
-    * single-operator cleanup shape). */
+    * single-operator cleanup shape).
+    *
+    * A version dir newer than the manifest vacuum started from is never
+    * reclaimed: a writer may have claimed and published it after the
+    * manifest scan below, and its manifest then went unseen. */
   def vacuum(dir: String, stageGraceMs: Long = 3600000L): Seq[String] = {
     recover(dir)
     val m = requireManifest(dir)
@@ -2615,8 +2619,12 @@ object MergeTable {
       .toSet ++ m.buckets.values.map(_._1) ++ m.dvs.values.map(_._1) ++
       m.deltas.values.flatten.map(_._1) + m.version
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-        !referenced.contains(f.getName.stripPrefix("v").toLong))
+      .filter { f =>
+        f.isDirectory && f.getName.matches("v\\d+") && {
+          val v = f.getName.stripPrefix("v").toLong
+          v <= m.version && !referenced.contains(v)
+        }
+      }
       .map { f => CommitLog.deleteRecursively(f); f.getName } ++
       // crash-orphaned stages (a writer that died before its CAS claim);
       // the grace window protects a live writer's in-flight stage

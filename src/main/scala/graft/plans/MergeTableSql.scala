@@ -210,9 +210,6 @@ object MergeTableSql {
     * to the newest stamped version at-or-before the instant), so a change
     * window can be named by wall-clock without reading history first. */
   def changesPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.size == 3,
-      "graft_changes(table_name, from_version_or_ts, to_version_or_ts) " +
-        "expects 3 arguments")
     val dir = dirFor(litString(args(0), "graft_changes: table_name"))
     MergeTable.changesBetween(SparkSession.active, dir,
       litVersionOrTimestamp(dir, args(1), "graft_changes: from"),
@@ -231,7 +228,6 @@ object MergeTableSql {
     * `SELECT sum(rows) FROM graft_rows('t')` is the O(1) `count(*)` a
     * 100 TB table wants; [[MergeTable.countRows]] is the Scala form). */
   def rowsPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.size == 1, "graft_rows(table_name) expects 1 argument")
     val dir = dirFor(litString(args.head, "graft_rows: table_name"))
     MergeTable.bucketRowCounts(SparkSession.active, dir)
       .queryExecution.logical
@@ -244,15 +240,12 @@ object MergeTableSql {
     * renderings; a column with no recorded bounds (all-null) rows with
     * NULL min/max but a real null count. */
   def statsPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.size == 1, "graft_stats(table_name) expects 1 argument")
     val dir = dirFor(litString(args.head, "graft_stats: table_name"))
     MergeTable.bucketStatsTable(SparkSession.active, dir)
       .queryExecution.logical
   }
 
   def historyPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.size == 1 || args.size == 3,
-      "graft_history(table_name[, from_ts, to_ts]) expects 1 or 3 arguments")
     val dir = dirFor(litString(args.head, "graft_history: table_name"))
     val h = MergeTable.history(SparkSession.active, dir)
     val windowed =

@@ -55,8 +55,6 @@ object RetrievalSql {
 
   /** `graft_search(index_dir, query)` → (doc_id, score). */
   def searchPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.size == 2,
-      "graft_search(index_dir, query) expects 2 arguments")
     val dir = litString(args(0), "graft_search: index_dir")
     val terms = termsOf(litString(args(1), "graft_search: query"),
       "graft_search")
@@ -66,8 +64,6 @@ object RetrievalSql {
 
   /** `graft_bm25(index_dir, query, k)` → top-k (doc_id, bm25). */
   def bm25Plan(args: Seq[Expression]): LogicalPlan = {
-    require(args.size == 3,
-      "graft_bm25(index_dir, query, k) expects 3 arguments")
     val dir = litString(args(0), "graft_bm25: index_dir")
     val terms = termsOf(litString(args(1), "graft_bm25: query"), "graft_bm25")
     val k = litInt(args(2), "graft_bm25: k")

@@ -37,7 +37,7 @@ object Similarity {
     * codegen loop instead of ~3 interpreted lambda folds per pair. Same
     * fold order → bit-identical doubles to [[cosine]] and the oracle. */
   def cosineNative(df: DataFrame, a: Column, b: Column): Column = {
-    graft.functions.VectorFunctions.ensureRegistered(df.sparkSession)
+    graft.GraftExtensions.ensureRegistered(df.sparkSession)
     call_function("vec_cosine", a, b)
   }
 

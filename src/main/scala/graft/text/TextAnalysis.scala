@@ -1868,7 +1868,7 @@ object TextAnalysis {
     * fewer than k distinct words. */
   def vocabOverlapKmv(docs: DataFrame, sourceCol: String, text: Column,
                       k: Int = 256, relTol: Double = 0.2): DataFrame = {
-    graft.functions.KmvFunctions.ensureRegistered(docs.sparkSession)
+    graft.GraftExtensions.ensureRegistered(docs.sparkSession)
     // the ONLY corpus-sized pass: distinct (source, word), one exchange;
     // sketch + exact count come out of the same compressed table, which is
     // checkpointed at its fan-out (sketch agg + exact intersection probe

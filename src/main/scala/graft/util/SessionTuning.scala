@@ -1,7 +1,9 @@
 package graft.util
 
-/** Session-level scale-adaptive defaults shared by the Bench/Verify
-  * mains (r20 — VERDICT r19 task 5, guide §2.2).
+import org.apache.spark.sql.SparkSession
+
+/** The one session factory ([[session]]) and its scale-adaptive shuffle
+  * partition default (r20 — VERDICT r19 task 5, guide §2.2).
   *
   * `spark.sql.shuffle.partitions` was pinned to the CORE COUNT, which is
   * guide-§2.2 over-parallelization on kilobyte inputs: at sf0.1 the
@@ -35,6 +37,29 @@ package graft.util
   * geomean per-query ratio 0.823.
   */
 object SessionTuning {
+  /** A local graft session on `cpus` cores: every main and the test
+    * harness builds through here, so they all plan under the same confs.
+    * perfbench's session sets exactly these confs too (plus its work-dir
+    * paths); keep the two in step. */
+  def session(cpus: Int, shufflePartitions: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      // static conf, default 100: a 216-query suite generates thousands of
+      // codegen units, so the default cache thrashes — every eviction is a
+      // janino recompile charged to whichever later query re-plans the
+      // shape, and the dead duplicate classes pile into the JIT code cache
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .getOrCreate()
+    graft.plans.ElementAtNullIndexGuard.ensureInjected(spark)
+    spark
+  }
+
   /** The derived count over every `*.parquet` file under `sfDir`, at any
     * depth: a table may be one file or a directory of part files. */
   def shufflePartitions(sfDir: String): Int = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc stage-timing probe for local perf iteration (test scope only —
@@ -9,14 +8,7 @@ import org.apache.spark.sql.functions._
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val d = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.SessionTuning.session(cpus = 32, shufflePartitions = 32)
     spark.sparkContext.setLogLevel("WARN")
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -58,7 +58,6 @@ class CanaryHitsSpec extends SparkSpec {
   }
 
   test("SQL registration: canary_hits over a foldable array literal") {
-    CanaryHits.ensureRegistered(spark)
     Tables.documents(spark, sfDir).limit(50).createOrReplaceTempView("__ch_docs")
     val out = spark.sql(
       """SELECT doc_id, h.idx, h.n_hits, h.first_pos

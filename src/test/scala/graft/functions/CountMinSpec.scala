@@ -7,7 +7,6 @@ class CountMinSpec extends SparkSpec {
   import spark.implicits._
 
   test("cms_sketch: estimates never underestimate; exact when width is ample") {
-    CountMinFunctions.ensureRegistered(spark)
     val items = (1 to 100).flatMap(i => Seq.fill(i % 7 + 1)(s"item$i"))
     val df = items.toDF("s")
     df.createOrReplaceTempView("cms_in")
@@ -30,7 +29,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("cms_sketch: partitioning-invariant (partial+final merge is exact)") {
-    CountMinFunctions.ensureRegistered(spark)
     val df = (1 to 500).map(i => s"k${i % 37}").toDF("s")
     val one = df.coalesce(1).agg(expr("cms_sketch(s, 4, 64)")).head().getSeq[Long](0)
     val many = df.repartition(13).agg(expr("cms_sketch(s, 4, 64)")).head().getSeq[Long](0)

@@ -16,7 +16,6 @@ class HeavyHittersSpec extends SparkSpec {
     val rows = ((1 to 50).flatMap(i => Seq.fill(1200 / i)(s"hot_$i")) ++
       (1 to 3000).map(i => s"rare_$i")).sortBy(_.hashCode)
     val df = spark.sparkContext.parallelize(rows, 8).toDF("w")
-    HeavyHitterFunctions.ensureRegistered(spark)
     val sketch = df.agg(expr("heavy_hitters(w, 20)").as("hh"))
       .select(col("hh")).as[Seq[(String, Long)]].head().toMap
     assert(sketch.size <= 20)

@@ -8,7 +8,6 @@ class KmvSketchSpec extends SparkSpec {
   import spark.implicits._
 
   test("kmv_distinct is exact below k and within ~10% above") {
-    KmvFunctions.ensureRegistered(spark)
     // exact regime: 100 distinct values, k=256
     val small = spark.range(100).select((col("id") % 100).as("v"))
     val exactSmall = small.selectExpr("kmv_distinct(v, 256)").head().getLong(0)
@@ -20,7 +19,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmv_distinct merges across partitions (partial+final aggregation)") {
-    KmvFunctions.ensureRegistered(spark)
     val ev = Tables.events(spark, sfDir)
     val plan = ev.groupBy("event_type").agg(expr("kmv_distinct(user_id, 256)").as("u"))
     val phys = plan.queryExecution.executedPlan.toString
@@ -33,7 +31,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("string inputs hash consistently regardless of partitioning") {
-    KmvFunctions.ensureRegistered(spark)
     val d = Tables.documents(spark, sfDir)
     val a = d.repartition(1).selectExpr("kmv_distinct(lang, 64)").head().getLong(0)
     val b = d.repartition(7).selectExpr("kmv_distinct(lang, 64)").head().getLong(0)
@@ -42,7 +39,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmv_mins returns the sorted min-hash array, identical under any partitioning") {
-    KmvFunctions.ensureRegistered(spark)
     val big = spark.range(5000).select(col("id").as("v"))
     val a = big.repartition(1).selectExpr("kmv_mins(v, 128)").head().getSeq[Long](0)
     val b = big.repartition(9).selectExpr("kmv_mins(v, 128)").head().getSeq[Long](0)
@@ -55,7 +51,6 @@ class KmvSketchSpec extends SparkSpec {
   }
 
   test("kmv_mins set algebra: union/intersection estimates track known overlap") {
-    KmvFunctions.ensureRegistered(spark)
     // A = [0, 20000), B = [10000, 30000): |A∪B| = 30000, |A∩B| = 10000
     val a = spark.range(0, 20000).selectExpr("kmv_mins(id, 256) AS ma")
     val b = spark.range(10000, 30000).selectExpr("kmv_mins(id, 256) AS mb")

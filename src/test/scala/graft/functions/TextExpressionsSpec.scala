@@ -128,7 +128,6 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration works and validates arity") {
-    TextFunctions.ensureRegistered(spark)
     val r = spark.sql("SELECT repetition_ratio('a b a b a b a b', 3) AS r, simhash16('x y') AS s")
       .collect()(0)
     assert(r.getDouble(0) === 0.333333)

@@ -23,7 +23,6 @@ class TopKBySpec extends SparkSpec {
       (1L to 50L).map(i => ("b", i, if (i <= 40) 7.0 else 9.0))
     val shuffled = new scala.util.Random(42).shuffle(rows)
     val df = spark.sparkContext.parallelize(shuffled, 8).toDF("g", "p", "o")
-    TopKFunctions.ensureRegistered(spark)
     val got = df.groupBy("g").agg(expr("top_k_by(p, o, 6)").as("tk"))
       .select(col("g"), col("tk")).as[(String, Seq[(Long, Double)])]
       .collect().toMap
@@ -35,7 +34,6 @@ class TopKBySpec extends SparkSpec {
 
   test("k larger than the group returns the whole group sorted") {
     val df = Seq(("x", 1L, 2.0), ("x", 2L, 1.0)).toDF("g", "p", "o")
-    TopKFunctions.ensureRegistered(spark)
     val got = df.groupBy("g").agg(expr("top_k_by(p, o, 10)").as("tk"))
       .select(col("tk")).as[Seq[(Long, Double)]].head()
     assert(got === Seq((1L, 2.0), (2L, 1.0)))
@@ -56,7 +54,6 @@ class TopKBySpec extends SparkSpec {
   }
 
   test("wrong arity fails with a clear message") {
-    TopKFunctions.ensureRegistered(spark)
     val e = intercept[Exception] {
       Seq((1L, 1.0)).toDF("p", "o").selectExpr("top_k_by(p)").collect()
     }

@@ -25,7 +25,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("vec_cosine resolves in SQL once registered (and via GraftExtensions config)") {
-    VectorFunctions.ensureRegistered(spark)
     pairs.createOrReplaceTempView("vec_pairs")
     val out = spark.sql("SELECT vec_cosine(a, b) AS c FROM vec_pairs").as[Double].collect()
     assert(out.length === 4)
@@ -33,7 +32,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("vec_cosine participates in whole-stage codegen") {
-    VectorFunctions.ensureRegistered(spark)
     // build from range so the projection isn't constant-folded to a LocalTableScan
     val df = spark.range(100).select(
       array(col("id").cast("float"), lit(1f), lit(2f)).as("a"),

@@ -59,7 +59,6 @@ class WinnowSpec extends SparkSpec {
   }
 
   test("winnow_fps resolves in SQL with literal k/w; wrong arity fails cleanly") {
-    TextFunctions.ensureRegistered(spark)
     val r = spark.sql(
       "SELECT winnow_fps('abcdefgh', 8, 4) AS fps").collect()(0).getSeq[Long](0)
     assert(r === Seq(gramHash("abcdefgh")))

@@ -146,7 +146,6 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("binary_stride SQL registration evaluates like the Column door") {
-    graft.functions.BinaryFunctions.ensureRegistered(spark)
     val d = Seq((1L, "abcdefgh".getBytes("UTF-8"))).toDF("doc_id", "payload")
     d.createOrReplaceTempView("bin_t")
     val viaSql = spark.sql("SELECT binary_stride(payload, 3) AS p FROM bin_t")

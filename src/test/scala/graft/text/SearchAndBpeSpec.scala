@@ -85,7 +85,6 @@ class SearchAndBpeSpec extends SparkSpec {
   }
 
   test("bpe_encode SQL registration: foldable merge array, null/shape rejection") {
-    graft.functions.BpeEncode.ensureRegistered(spark)
     val got = spark.sql(
       "SELECT bpe_encode('then', array('t h', 'th e', 'a n')) AS syms")
       .head().getSeq[String](0)
