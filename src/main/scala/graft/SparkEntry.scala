@@ -1514,10 +1514,11 @@ object SparkEntry {
       // marker suffix encodes the at-rest layout FORMAT generation (lv2 =
       // the r15 _lv<n> snapshot-isolation protocol; lv3 = r16 maintenance
       // preserves passenger columns, so upserted version dirs carry the
-      // layout's FULL schema): a format change bumps it, so memoization
-      // can never reuse a fixture written by an incompatible protocol
-      // (the r15 vacuous-pass hole)
-      val marker = new java.io.File(s"$fx/_built_k16_mod7_lv3")
+      // layout's FULL schema; lv4 = the build itself is a commit, no root
+      // partitions): a format change bumps it, so memoization can never
+      // reuse a fixture written by an incompatible protocol (the r15
+      // vacuous-pass hole)
+      val marker = new java.io.File(s"$fx/_built_k16_mod7_lv4")
       if (!marker.exists()) {
         val cents = Similarity.ivfCentroids(emb, 16)
         val isDelta = col("vec_id") % 7 === 0
@@ -1556,8 +1557,8 @@ object SparkEntry {
       val emb = t(s, d, "embeddings")
       q170FixtureSub = s"$Q170FixtureDir/${new java.io.File(d).getName}"
       val fx = q170FixtureSub
-      // lv2 = the r15 _lv<n> layout protocol; bump on format change (q151)
-      val marker = new java.io.File(s"$fx/_built_k16_absdrift_lv2")
+      // lv4 = the layout format generation; bump on format change (q151)
+      val marker = new java.io.File(s"$fx/_built_k16_absdrift_lv4")
       if (!marker.exists()) {
         val cents0 = Similarity.ivfCentroids(emb, 16)
         Similarity.writeIvfLayout(emb, cents0, s"$fx/layout")
@@ -2028,7 +2029,7 @@ object SparkEntry {
         val emb = t(s, d, "embeddings")
         Similarity.writeIvfLayout(emb, Similarity.ivfCentroids(emb, 16), s"$dir/ivf")
       } + "/ivf"
-      s.read.parquet(tmp)
+      graft.layout.LayoutTxn.readLayout(s, tmp, "", "cell")
         .select(col("vec_id"), col("label"),
           size(col("embedding")).cast("long").as("dims"),
           round(aggregate(col("embedding"), lit(0.0), (a, x) => a + x.cast("double")), 6)
@@ -3494,7 +3495,7 @@ object SparkEntry {
       val emb = t(s, d, "embeddings")
       q201FixtureSub = s"$Q201FixtureDir/${new java.io.File(d).getName}"
       val fx = q201FixtureSub
-      val marker = new java.io.File(s"$fx/_built_k16_mod7_lv2_b1")
+      val marker = new java.io.File(s"$fx/_built_k16_mod7_lv4_b1")
       if (!marker.exists()) {
         val cents = Similarity.ivfCentroids(emb, 16)
         val isDelta = col("vec_id") % 7 === 0
@@ -3739,7 +3740,7 @@ object SparkEntry {
       val emb = t(s, d, "embeddings")
       q209FixtureSub = s"$Q209FixtureDir/${new java.io.File(d).getName}"
       val fx = q209FixtureSub
-      val marker = new java.io.File(s"$fx/_built_k16_mod5_lv3")
+      val marker = new java.io.File(s"$fx/_built_k16_mod5_lv4")
       if (!marker.exists()) {
         val cents = Similarity.ivfCentroids(emb, 16)
         Similarity.writeIvfLayout(emb, cents, s"$fx/layout")
@@ -3999,7 +4000,7 @@ object SparkEntry {
     // ⊕A53 through PURE SQL (r18 — the retrieval tier's TVF door): the
     // q166 conjunctive term search issued as `graft_search(dir, query)`
     // from spark.sql — no Scala API in the query path; the bucket count
-    // resolves from the layout's own persisted _idx_meta and the scan
+    // resolves from the layout's own commit-recorded count and the scan
     // still reads only the two terms' tb= dirs. Oracle = q166's raw-text
     // recompute, so the hash match proves the SQL door changes nothing.
     "q213_sql_search" -> ((s, d) => {

@@ -630,20 +630,40 @@ object Dedup {
     rows.select(col(idCol), col(pCol).cast("int").as("pb")).distinct()
       .withColumn("dm", pmod(hash(col(idCol)), lit(partitions)))
 
-  private def hasDocMap(dir: String): Boolean =
-    new java.io.File(dir, DedupDocMap).isDirectory ||
-      graft.layout.LayoutTxn.resolve(dir, DedupDocMap, "dm").nonEmpty
+  /** A whole dedup index as commit groups: its rows partitioned by
+    * `pCol` and their `_docmap`, both over `0 until partitions`. */
+  private def dedupGroups(rows: DataFrame, idCol: String, pCol: String,
+                          sortCols: Seq[String], partitions: Int)
+      : Seq[graft.layout.LayoutTxn.Group] = {
+    val parts = 0 until partitions
+    Seq(graft.layout.LayoutTxn.Group("", rows, pCol, sortCols,
+        parts.map(b => s"$pCol=$b")),
+      graft.layout.LayoutTxn.Group(DedupDocMap,
+        dedupDocMapRows(rows, idCol, pCol, partitions), "dm",
+        Seq("pb", idCol), parts.map(b => s"dm=$b")))
+  }
 
-  /** The `_docmap` append group for one ingested batch — absent on
-    * indexes written before r17 (no reverse map → no delete support;
-    * upserts still work and skip the map rather than maintaining a
-    * silently INCOMPLETE one, which would make later deletes miss rows). */
+  /** One [[graft.layout.LayoutTxn.rebuild]] commit writes a dedup index,
+    * with its hashing parameters (and `partitions`) as commit props — the
+    * facts every probe, delete and rescale reads back instead of trusting
+    * caller arguments. */
+  private def writeDedupIndex(rows: DataFrame, dir: String, idCol: String,
+                              pCol: String, sortCols: Seq[String],
+                              partitions: Int,
+                              facts: Map[String, Int]): Unit = {
+    graft.layout.LayoutTxn.rebuild(rows.sparkSession, dir,
+      dedupGroups(rows, idCol, pCol, sortCols, partitions),
+      (facts + ("partitions" -> partitions)).map { case (k, v) =>
+        k -> v.toString })
+    ()
+  }
+
+  /** The `_docmap` append group for one ingested batch. */
   private def docMapAppendGroup(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, newRows: DataFrame,
                                 idCol: String, pCol: String,
                                 partitions: Int)
-      : Option[graft.layout.LayoutTxn.Group] = {
-    if (!hasDocMap(dir)) return None
+      : graft.layout.LayoutTxn.Group = {
     // the map's dm partitions are hash(id) of the PERSISTED id type — a
     // batch with a narrower type (Int into a Long index) must be widened
     // BEFORE hashing, or its rows land under the int-hash dm and a later
@@ -657,8 +677,8 @@ object Dedup {
     val touched = nm.select("dm").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     // append-run commit (r18): only the batch's own map rows are written
-    Some(graft.layout.LayoutTxn.Group(DedupDocMap, nm,
-      "dm", Seq("pb", idCol), touched.map(b => s"dm=$b"), append = true))
+    graft.layout.LayoutTxn.Group(DedupDocMap, nm,
+      "dm", Seq("pb", idCol), touched.map(b => s"dm=$b"), append = true)
   }
 
   /** DELETE(ids) against an at-rest dedup index (⊕J25/⊕J26/⊕J27 — VERDICT
@@ -672,19 +692,16 @@ object Dedup {
     * two-phase sweep). Returns the touched index partition ids. */
   private def dedupIndexDelete(spark: org.apache.spark.sql.SparkSession,
                                dir: String, victims: DataFrame, idCol: String,
-                               pCol: String, partitionsOf: () => Int,
+                               pCol: String, builder: String,
                                sortCols: Seq[String],
                                txnGraceMs: Long): Seq[Int] = {
-    require(hasDocMap(dir),
-      s"index at $dir has no $DedupDocMap reverse map (written before " +
-        "delete support) — rebuild it with the index writer to enable " +
-        "DELETE(ids)")
     val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
     // the partition count resolves AFTER begin() (r18): a rescale that
-    // committed between the caller's meta read and here would leave dm
-    // probes computed with the OLD count silently missing every victim —
-    // resolved here, any rescale landing later conflicts at the CAS
-    val partitions = partitionsOf()
+    // committed before it would otherwise leave dm probes computed with
+    // the OLD count silently missing every victim — resolved here, any
+    // rescale landing later conflicts at the CAS
+    val partitions = graft.layout.LayoutTxn.fact(
+      graft.layout.LayoutTxn.snapshot(dir), "partitions", builder)
     // victims' ids must hash EXACTLY like the map's: Murmur3 of an INT 5
     // differs from a LONG 5, so a caller passing a narrower id type would
     // probe the wrong dm= partitions and silently delete NOTHING — cast
@@ -731,59 +748,10 @@ object Dedup {
     val rows = lshBandRows(minhashSignature(docs, idCol, text, numHashes, k),
         idCol, bands, numHashes / bands, partitions)
       .transform(graft.util.Cleanup.checkpoint(_))
-    graft.layout.DataLayout.writePartitionedSorted(
-      rows, dir, Seq("lb"), Seq("band", "bucket", idCol))
-    graft.layout.DataLayout.writePartitionedSorted(
-      dedupDocMapRows(rows, idCol, "lb", partitions),
-      s"$dir/$DedupDocMap", Seq("dm"), Seq("pb", idCol))
-    // the index's parameters are LAYOUT facts: a probe with different
-    // hashing/banding/partitioning would silently miss everything, so
-    // they are persisted with the index and lshIndexUpsert reads them
-    // back instead of trusting caller arguments
-    val pr = new java.util.Properties()
-    pr.setProperty("numHashes", numHashes.toString)
-    pr.setProperty("bands", bands.toString)
-    pr.setProperty("partitions", partitions.toString)
-    pr.setProperty("k", k.toString)
-    val out = java.nio.file.Files.newOutputStream(
-      java.nio.file.Paths.get(dir, LshMeta))
-    try pr.store(out, "graft LSH index parameters") finally out.close()
-  }
-
-  private val LshMeta = "_lsh_meta"
-
-  private def readLshMeta(dir: String): (Int, Int, Int, Int) = {
-    val p = java.nio.file.Paths.get(dir, LshMeta)
-    require(java.nio.file.Files.exists(p),
-      s"no LSH index metadata at $dir — writeLshIndex first")
-    val pr = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(p)
-    try pr.load(in) finally in.close()
-    (pr.getProperty("numHashes").toInt, pr.getProperty("bands").toInt,
-      layoutPartitions(dir, pr.getProperty("partitions").toInt),
-      pr.getProperty("k").toInt)
-  }
-
-  /** The index's CURRENT partition count: the LayoutTxn version-state
-    * prop wins over the write-time meta-file copy — since r18's rescale
-    * ops the count can change, and it must change atomically with the
-    * partition map (the version state is the only place that can). */
-  private def layoutPartitions(dir: String, metaFileValue: Int): Int =
-    graft.layout.LayoutTxn.currentProps(dir).get("partitions")
-      .map(_.toInt).getOrElse(metaFileValue)
-
-  /** Rewrite `partitions` in an index's legacy meta file after a rescale
-    * commit, preserving its other layout facts (best-effort, post-commit:
-    * every reader prefers the version-state prop). */
-  private def refreshMetaPartitions(dir: String, metaName: String,
-                                    partitions: Int): Unit = {
-    val p = java.nio.file.Paths.get(dir, metaName)
-    val pr = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(p)
-    try pr.load(in) finally in.close()
-    pr.setProperty("partitions", partitions.toString)
-    val out = java.nio.file.Files.newOutputStream(p)
-    try pr.store(out, "graft index parameters") finally out.close()
+    // a probe with different hashing/banding/partitioning would silently
+    // miss everything, so these are layout facts
+    writeDedupIndex(rows, dir, idCol, "lb", Seq("band", "bucket", idCol),
+      partitions, Map("numHashes" -> numHashes, "bands" -> bands, "k" -> k))
   }
 
   /** Shared RESCALE machinery for the three at-rest dedup indexes (r18 —
@@ -801,40 +769,22 @@ object Dedup {
   private def dedupIndexRescale(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, idCol: String, pCol: String,
                                 partExpr: Int => org.apache.spark.sql.Column,
-                                sortCols: Seq[String], metaName: String,
-                                metaFilePartitions: () => Int,
+                                sortCols: Seq[String], builder: String,
                                 newPartitions: Int,
                                 txnGraceMs: Long): Long = {
     require(newPartitions >= 1,
       s"newPartitions must be >= 1, got $newPartitions")
     val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
     val snap = graft.layout.LayoutTxn.snapshot(dir)
-    val oldP = snap.props.get("partitions").map(_.toInt)
-      .getOrElse(metaFilePartitions())
-    if (oldP == newPartitions) return snap.version
-    val oldParts = graft.layout.LayoutTxn.resolveSnapshot(snap, "", pCol)
-      .map(_._1)
+    if (graft.layout.LayoutTxn.fact(snap, "partitions", builder) ==
+        newPartitions) return snap.version
     val rows = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", pCol)
       .withColumn(pCol, partExpr(newPartitions))
       .transform(graft.util.Cleanup.checkpoint(_))
-    val idxTouched = (oldParts ++ (0 until newPartitions)
-      .map(b => s"$pCol=$b")).distinct.sorted
-    val groups = Seq(graft.layout.LayoutTxn.Group("", rows, pCol, sortCols,
-      idxTouched))
-    val dmGroups = if (!hasDocMap(dir)) Seq.empty else {
-      val oldDm = graft.layout.LayoutTxn
-        .resolveSnapshot(snap, DedupDocMap, "dm").map(_._1)
-      val dmTouched = (oldDm ++ (0 until newPartitions)
-        .map(b => s"dm=$b")).distinct.sorted
-      Seq(graft.layout.LayoutTxn.Group(DedupDocMap,
-        dedupDocMapRows(rows, idCol, pCol, newPartitions), "dm",
-        Seq("pb", idCol), dmTouched))
-    }
-    val v = graft.layout.LayoutTxn.commit(spark, dir, parent,
-      groups ++ dmGroups,
+    graft.layout.LayoutTxn.commit(spark, dir, parent,
+      graft.layout.LayoutTxn.whole(snap,
+        dedupGroups(rows, idCol, pCol, sortCols, newPartitions)),
       props = Map("partitions" -> newPartitions.toString))
-    refreshMetaPartitions(dir, metaName, newPartitions)
-    v
   }
 
   /** The `lb=` partitions a batch's band keys hash into — the probe set
@@ -870,13 +820,11 @@ object Dedup {
                      txnGraceMs: Long = 600000L): DataFrame = {
     val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
     val p = lshProbe(spark, dir, newDocs, idCol, text, maxBucketSize)
-    val (_, _, partitions, _) = readLshMeta(dir)
     // append the batch into exactly the touched partitions; the pair plan
     // above reads the PRE-commit snapshot (immutable dirs) either way.
     // The _docmap reverse map rides the same commit (r17, delete support).
-    graft.layout.LayoutTxn.commit(spark, dir, parent,
-      Seq(p.indexGroup(idCol)) ++
-        docMapAppendGroup(spark, dir, p.newRows, idCol, "lb", partitions))
+    graft.layout.LayoutTxn.commit(spark, dir, parent, Seq(p.indexGroup(idCol),
+      docMapAppendGroup(spark, dir, p.newRows, idCol, "lb", p.partitions)))
     p.pairs
   }
 
@@ -889,8 +837,8 @@ object Dedup {
   def lshIndexDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
                      victims: DataFrame, idCol: String,
                      txnGraceMs: Long = 600000L): Seq[Int] =
-    dedupIndexDelete(spark, dir, victims, idCol, "lb",
-      () => readLshMeta(dir)._3, Seq("band", "bucket", idCol), txnGraceMs)
+    dedupIndexDelete(spark, dir, victims, idCol, "lb", LshBuilder,
+      Seq("band", "bucket", idCol), txnGraceMs)
 
   /** RESCALE a [[writeLshIndex]] directory to a new partition count (r18
     * — see [[dedupIndexRescale]]): `lb` recomputes from the stored
@@ -902,8 +850,7 @@ object Dedup {
                       txnGraceMs: Long = 600000L): Long =
     dedupIndexRescale(spark, dir, idCol, "lb",
       n => pmod(hash(col("band"), col("bucket")), lit(n)),
-      Seq("band", "bucket", idCol), LshMeta, () => readLshMeta(dir)._3,
-      newPartitions, txnGraceMs)
+      Seq("band", "bucket", idCol), LshBuilder, newPartitions, txnGraceMs)
 
   /** Fold a fragmented LSH index — [[graft.layout.LayoutTxn
     * .compactStale]] with this layout's own in-partition sort orders. */
@@ -915,8 +862,11 @@ object Dedup {
         DedupDocMap -> Seq("pb", idCol), "pairs" -> Seq("a", "b")),
       maxOwners, txnGraceMs)
 
+  private val LshBuilder = "Dedup.writeLshIndex"
+
   private case class LshProbe(newRows: DataFrame, touched: Seq[Int],
-                              existing: DataFrame, pairs: DataFrame) {
+                              existing: DataFrame, pairs: DataFrame,
+                              partitions: Int) {
     // APPEND-RUN commit (r18): the batch's own rows become one more run
     // of each touched partition — the probed corpus rows are read for
     // the PAIRS but never rewritten, so ingest WRITE cost is O(batch),
@@ -929,20 +879,23 @@ object Dedup {
 
   /** The shared probe behind [[lshIndexUpsert]] and [[lshIngestBatch]]:
     * band the batch, read ONLY its partitions from the current snapshot
-    * (hashing/banding/partitioning come from the index's own metadata —
+    * (hashing/banding/partitioning are the index's own layout facts —
     * mismatched caller parameters would silently find nothing), df-cap
     * degenerate buckets, and equi-join corpus × batch. */
   private def lshProbe(spark: org.apache.spark.sql.SparkSession, dir: String,
                        newDocs: DataFrame, idCol: String, text: Column,
                        maxBucketSize: Int): LshProbe = {
-    val (numHashes, bands, partitions, k) = readLshMeta(dir)
+    val snap = graft.layout.LayoutTxn.snapshot(dir)
+    def fact(key: String) = graft.layout.LayoutTxn.fact(snap, key, LshBuilder)
+    val (numHashes, bands, partitions, k) =
+      (fact("numHashes"), fact("bands"), fact("partitions"), fact("k"))
     val newRows = lshBandRows(
         minhashSignature(newDocs, idCol, text, numHashes, k),
         idCol, bands, numHashes / bands, partitions)
       .transform(graft.util.Cleanup.checkpoint(_))
     val touched = newRows.select("lb").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val existing = graft.layout.LayoutTxn.readLayout(spark, dir, "", "lb",
+    val existing = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", "lb",
       Some(touched.map(b => s"lb=$b").toSet))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")
     val capped = existing
@@ -953,7 +906,7 @@ object Dedup {
         Seq("band", "bucket"))
       .filter(col("a") =!= col("b"))
       .select(col("a"), col("b")).distinct()
-    LshProbe(newRows, touched, existing, pairs)
+    LshProbe(newRows, touched, existing, pairs, partitions)
   }
 
   /** EXACTLY-ONCE streaming near-dup ingest (⊕K8 × ⊕J25): the
@@ -986,15 +939,14 @@ object Dedup {
     if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(dir) >= batchId)
       return // the claimed-but-unpublished commit was just rolled forward
     val p = lshProbe(spark, dir, batch, idCol, text, maxBucketSize)
-    val (_, _, partitions, _) = readLshMeta(dir)
     // index rows + pair log + _docmap reverse map: ONE commit (r17 adds
     // the map so lshIndexDelete can locate a victim's partitions)
     graft.layout.LayoutTxn.commit(spark, dir, parent, Seq(
       p.indexGroup(idCol),
       graft.layout.LayoutTxn.Group("pairs",
         p.pairs.withColumn("batch", lit(batchId)),
-        "batch", Seq("a", "b"), Seq(s"batch=$batchId"))) ++
-        docMapAppendGroup(spark, dir, p.newRows, idCol, "lb", partitions),
+        "batch", Seq("a", "b"), Seq(s"batch=$batchId")),
+      docMapAppendGroup(spark, dir, p.newRows, idCol, "lb", p.partitions)),
       batchId = batchId)
     ()
   }
@@ -1015,7 +967,7 @@ object Dedup {
     graft.layout.LayoutTxn.readLayout(spark, dir, "pairs", "batch")
       .select(col("batch"), col("a"), col("b"))
 
-  private val WinnowMeta = "_winnow_meta"
+  private val WinnowBuilder = "Dedup.writeWinnowIndex"
 
   /** AT-REST winnowing index for INCREMENTAL contained-copy ingest (the
     * [[writeLshIndex]] pattern at the fingerprint tier): the corpus's
@@ -1033,19 +985,8 @@ object Dedup {
         explode(TextAnalysis.winnowFingerprints(text, k, w)).as("fp"))
       .withColumn("fb", pmod(hash(col("fp")), lit(partitions)))
       .transform(graft.util.Cleanup.checkpoint(_))
-    graft.layout.DataLayout.writePartitionedSorted(
-      rows, dir, Seq("fb"), Seq("fp", idCol))
-    // id → fb reverse map for winnowIndexDelete (r17)
-    graft.layout.DataLayout.writePartitionedSorted(
-      dedupDocMapRows(rows, idCol, "fb", partitions),
-      s"$dir/$DedupDocMap", Seq("dm"), Seq("pb", idCol))
-    val pr = new java.util.Properties()
-    pr.setProperty("k", k.toString)
-    pr.setProperty("w", w.toString)
-    pr.setProperty("partitions", partitions.toString)
-    val out = java.nio.file.Files.newOutputStream(
-      java.nio.file.Paths.get(dir, WinnowMeta))
-    try pr.store(out, "graft winnowing index parameters") finally out.close()
+    writeDedupIndex(rows, dir, idCol, "fb", Seq("fp", idCol), partitions,
+      Map("k" -> k, "w" -> w))
   }
 
   /** Probe + append one NEW batch against a [[writeWinnowIndex]] directory:
@@ -1065,7 +1006,7 @@ object Dedup {
     val p = winnowProbe(spark, dir, newDocs, idCol, text, maxDocFreq,
       minShared)
     graft.layout.LayoutTxn.commit(spark, dir, parent,
-      p.groups(idCol) ++
+      p.groups(idCol) :+
         docMapAppendGroup(spark, dir, p.newRows, idCol, "fb", p.partitions))
     p.pairs
   }
@@ -1088,22 +1029,17 @@ object Dedup {
                           dir: String, newDocs: DataFrame, idCol: String,
                           text: Column, maxDocFreq: Int,
                           minShared: Int): WinnowProbe = {
-    val p = java.nio.file.Paths.get(dir, WinnowMeta)
-    require(java.nio.file.Files.exists(p),
-      s"no winnowing index metadata at $dir — writeWinnowIndex first")
-    val pr = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(p)
-    try pr.load(in) finally in.close()
-    val (k, w, partitions) = (pr.getProperty("k").toInt,
-      pr.getProperty("w").toInt,
-      layoutPartitions(dir, pr.getProperty("partitions").toInt))
+    val snap = graft.layout.LayoutTxn.snapshot(dir)
+    def fact(key: String) =
+      graft.layout.LayoutTxn.fact(snap, key, WinnowBuilder)
+    val (k, w, partitions) = (fact("k"), fact("w"), fact("partitions"))
     val newRows = newDocs.select(col(idCol),
         explode(TextAnalysis.winnowFingerprints(text, k, w)).as("fp"))
       .withColumn("fb", pmod(hash(col("fp")), lit(partitions)))
       .transform(graft.util.Cleanup.checkpoint(_))
     val touched = newRows.select("fb").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val existing = graft.layout.LayoutTxn.readLayout(spark, dir, "", "fb",
+    val existing = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", "fb",
       Some(touched.map(b => s"fb=$b").toSet))
     // df over (probed corpus ∪ batch) = the fingerprint's TRUE corpus-wide
     // frequency (partition-contained), so the stopword cap matches a full
@@ -1146,8 +1082,8 @@ object Dedup {
     graft.layout.LayoutTxn.commit(spark, dir, parent,
       p.groups(idCol) ++ Seq(graft.layout.LayoutTxn.Group("pairs",
         p.pairs.withColumn("batch", lit(batchId)),
-        "batch", Seq("a", "b"), Seq(s"batch=$batchId"))) ++
-        docMapAppendGroup(spark, dir, p.newRows, idCol, "fb", p.partitions),
+        "batch", Seq("a", "b"), Seq(s"batch=$batchId")),
+        docMapAppendGroup(spark, dir, p.newRows, idCol, "fb", p.partitions)),
       batchId = batchId)
     ()
   }
@@ -1177,18 +1113,8 @@ object Dedup {
   def winnowIndexDelete(spark: org.apache.spark.sql.SparkSession,
                         dir: String, victims: DataFrame, idCol: String,
                         txnGraceMs: Long = 600000L): Seq[Int] =
-    dedupIndexDelete(spark, dir, victims, idCol, "fb",
-      () => winnowMetaPartitions(dir), Seq("fp", idCol), txnGraceMs)
-
-  private def winnowMetaPartitions(dir: String): Int = {
-    val p = java.nio.file.Paths.get(dir, WinnowMeta)
-    require(java.nio.file.Files.exists(p),
-      s"no winnowing index metadata at $dir — writeWinnowIndex first")
-    val pr = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(p)
-    try pr.load(in) finally in.close()
-    layoutPartitions(dir, pr.getProperty("partitions").toInt)
-  }
+    dedupIndexDelete(spark, dir, victims, idCol, "fb", WinnowBuilder,
+      Seq("fp", idCol), txnGraceMs)
 
   /** RESCALE a [[writeWinnowIndex]] directory (r18 — see
     * [[dedupIndexRescale]]): `fb` recomputes from the stored fingerprint
@@ -1199,8 +1125,7 @@ object Dedup {
                          txnGraceMs: Long = 600000L): Long =
     dedupIndexRescale(spark, dir, idCol, "fb",
       n => pmod(hash(col("fp")), lit(n)),
-      Seq("fp", idCol), WinnowMeta, () => winnowMetaPartitions(dir),
-      newPartitions, txnGraceMs)
+      Seq("fp", idCol), WinnowBuilder, newPartitions, txnGraceMs)
 
   /** Fold a fragmented winnowing index ([[graft.layout.LayoutTxn
     * .compactStale]]). */
@@ -1212,7 +1137,7 @@ object Dedup {
         "pairs" -> Seq("a", "b")),
       maxOwners, txnGraceMs)
 
-  private val SimhashMeta = "_simhash_meta"
+  private val SimhashBuilder = "Dedup.writeSimhashIndex"
 
   /** One row per (doc, pigeonhole band): id, full fingerprint, band
     * ordinal, band value, and the hive partition key
@@ -1244,20 +1169,9 @@ object Dedup {
                         partitions: Int = 16): Unit = {
     val rows = simhashIndexRows(docs, idCol, text, maxDist, partitions)
       .transform(graft.util.Cleanup.checkpoint(_))
-    graft.layout.DataLayout.writePartitionedSorted(
-      rows, dir, Seq("sb"), Seq("band", "bval", idCol))
-    // id → sb reverse map for simhashIndexDelete (r17)
-    graft.layout.DataLayout.writePartitionedSorted(
-      dedupDocMapRows(rows, idCol, "sb", partitions),
-      s"$dir/$DedupDocMap", Seq("dm"), Seq("pb", idCol))
-    // layout facts persisted with the index (the _lsh_meta discipline): a
-    // probe with different banding/partitioning would silently miss
-    val pr = new java.util.Properties()
-    pr.setProperty("maxDist", maxDist.toString)
-    pr.setProperty("partitions", partitions.toString)
-    val out = java.nio.file.Files.newOutputStream(
-      java.nio.file.Paths.get(dir, SimhashMeta))
-    try pr.store(out, "graft SimHash index parameters") finally out.close()
+    // a probe with different banding/partitioning would silently miss
+    writeDedupIndex(rows, dir, idCol, "sb", Seq("band", "bval", idCol),
+      partitions, Map("maxDist" -> maxDist))
   }
 
   /** Probe + append one NEW batch against a [[writeSimhashIndex]]
@@ -1279,7 +1193,7 @@ object Dedup {
     val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
     val p = simhashProbe(spark, dir, newDocs, idCol, text)
     graft.layout.LayoutTxn.commit(spark, dir, parent,
-      p.groups(idCol) ++
+      p.groups(idCol) :+
         docMapAppendGroup(spark, dir, p.newRows, idCol, "sb", p.partitions))
     p.pairs
   }
@@ -1302,20 +1216,16 @@ object Dedup {
   private def simhashProbe(spark: org.apache.spark.sql.SparkSession,
                            dir: String, newDocs: DataFrame, idCol: String,
                            text: Column): SimhashProbe = {
-    val p = java.nio.file.Paths.get(dir, SimhashMeta)
-    require(java.nio.file.Files.exists(p),
-      s"no SimHash index metadata at $dir — writeSimhashIndex first")
-    val pr = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(p)
-    try pr.load(in) finally in.close()
-    val (maxDist, partitions) = (pr.getProperty("maxDist").toInt,
-      layoutPartitions(dir, pr.getProperty("partitions").toInt))
+    val snap = graft.layout.LayoutTxn.snapshot(dir)
+    def fact(key: String) =
+      graft.layout.LayoutTxn.fact(snap, key, SimhashBuilder)
+    val (maxDist, partitions) = (fact("maxDist"), fact("partitions"))
     val cuts = simhashBandCuts(maxDist + 1)
     val newRows = simhashIndexRows(newDocs, idCol, text, maxDist, partitions)
       .transform(graft.util.Cleanup.checkpoint(_))
     val touched = newRows.select("sb").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val existing = graft.layout.LayoutTxn.readLayout(spark, dir, "", "sb",
+    val existing = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", "sb",
       Some(touched.map(b => s"sb=$b").toSet))
     val l = existing.select(col("band"), col("bval"), col(idCol).as("a"),
       col("sh").as("__sa"))
@@ -1359,8 +1269,8 @@ object Dedup {
     graft.layout.LayoutTxn.commit(spark, dir, parent,
       p.groups(idCol) ++ Seq(graft.layout.LayoutTxn.Group("pairs",
         p.pairs.withColumn("batch", lit(batchId)),
-        "batch", Seq("a", "b"), Seq(s"batch=$batchId"))) ++
-        docMapAppendGroup(spark, dir, p.newRows, idCol, "sb", p.partitions),
+        "batch", Seq("a", "b"), Seq(s"batch=$batchId")),
+        docMapAppendGroup(spark, dir, p.newRows, idCol, "sb", p.partitions)),
       batchId = batchId)
     ()
   }
@@ -1387,19 +1297,8 @@ object Dedup {
   def simhashIndexDelete(spark: org.apache.spark.sql.SparkSession,
                          dir: String, victims: DataFrame, idCol: String,
                          txnGraceMs: Long = 600000L): Seq[Int] =
-    dedupIndexDelete(spark, dir, victims, idCol, "sb",
-      () => simhashMetaPartitions(dir), Seq("band", "bval", idCol),
-      txnGraceMs)
-
-  private def simhashMetaPartitions(dir: String): Int = {
-    val p = java.nio.file.Paths.get(dir, SimhashMeta)
-    require(java.nio.file.Files.exists(p),
-      s"no SimHash index metadata at $dir — writeSimhashIndex first")
-    val pr = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(p)
-    try pr.load(in) finally in.close()
-    layoutPartitions(dir, pr.getProperty("partitions").toInt)
-  }
+    dedupIndexDelete(spark, dir, victims, idCol, "sb", SimhashBuilder,
+      Seq("band", "bval", idCol), txnGraceMs)
 
   /** RESCALE a [[writeSimhashIndex]] directory (r18 — see
     * [[dedupIndexRescale]]): `sb` recomputes from the stored (band, bval)
@@ -1410,8 +1309,7 @@ object Dedup {
                           txnGraceMs: Long = 600000L): Long =
     dedupIndexRescale(spark, dir, idCol, "sb",
       n => pmod(hash(col("band"), col("bval")), lit(n)),
-      Seq("band", "bval", idCol), SimhashMeta,
-      () => simhashMetaPartitions(dir), newPartitions, txnGraceMs)
+      Seq("band", "bval", idCol), SimhashBuilder, newPartitions, txnGraceMs)
 
   /** Fold a fragmented SimHash index ([[graft.layout.LayoutTxn
     * .compactStale]]). */

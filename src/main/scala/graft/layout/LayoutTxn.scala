@@ -9,31 +9,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Optimistic-concurrency commits for MAINTAINED hive layouts, with
-  * READER SNAPSHOT ISOLATION. [[graft.sim.Similarity.ivfUpsertLayout]]
-  * and [[graft.text.TextAnalysis.indexUpsertLayout]] commit through it.
-  * Every commit runs the shared [[CommitLog]] protocol: the replacement
-  * partitions of every touched subtree stage under `_lstage_v<n>_<uuid8>`,
-  * the claim is the immutable `_layout_commit_v<n>` file (stage name, per
-  * group partition column, touched partitions, deletions and schema),
-  * publish renames the whole stage to the IMMUTABLE version dir `_lv<n>`,
-  * and the pointer swap installs a new `_layout_version`. The loser of a
-  * claim gets [[LayoutTxn.ConflictException]] (retry = re-run the upsert
-  * against the new current version; it re-reads the committed layout, so
-  * its delta composes). What differs from [[MergeTable]]:
+  * READER SNAPSHOT ISOLATION. Every layout comes into being through a
+  * commit: the index builders ([[graft.text.TextAnalysis.writeIndexLayout]],
+  * [[graft.sim.Similarity.writeIvfLayout]] and the three dedup index
+  * writers) call [[rebuild]], and every maintenance op after them commits
+  * through [[commit]]. Every commit runs the shared [[CommitLog]]
+  * protocol: the replacement partitions of every touched subtree stage
+  * under `_lstage_v<n>_<uuid8>`, the claim is the immutable
+  * `_layout_commit_v<n>` file (stage name, per group partition column,
+  * touched partitions, deletions and schema), publish renames the whole
+  * stage to the IMMUTABLE version dir `_lv<n>`, and the pointer swap
+  * installs a new `_layout_version`. The loser of a claim gets
+  * [[LayoutTxn.ConflictException]] (retry = re-run the upsert against the
+  * new current version; it re-reads the committed layout, so its delta
+  * composes). What differs from [[MergeTable]]:
   *
   *  - **The partition→owner map.** `_layout_version` is not the claim
   *    verbatim but the parent state repointed by it: per sub, each
-  *    partition maps to the version dir(s) that last wrote it (version 0 =
-  *    the plain hive dirs a full rebuild leaves at the root). Untouched
+  *    partition maps to the version dir(s) that last wrote it. Untouched
   *    partitions keep their entry; touched partitions with no surviving
   *    rows leave the map. The state also carries a random COMMIT ID
-  *    (unique per published commit — a full rebuild restarts version
-  *    numbers, never ids, so it is the safe key for per-snapshot memos)
-  *    and, per sub, the schema each LIVE owning version wrote
+  *    (unique per published commit — the safe key for per-snapshot memos),
+  *    the layout's facts as commit props (bucket or partition counts,
+  *    hashing parameters — written by the builder, changed only by a
+  *    commit), and, per sub, the schema each LIVE owning version wrote
   *    (`sub.<i>.owner.<v>`, from the claim's group schema; entries leave
   *    with their owner). [[readSnapshot]] hands each owner's scan that
-  *    schema, so reads plan without a footer inference job; root
-  *    (version 0) owners still infer.
+  *    schema, so reads plan without a footer inference job.
   *  - **Roll-forward grace.** [[begin]] rolls a dead writer's claim
   *    forward, but a claim younger than its grace conflicts rather than
   *    racing a live writer's publish; the same grace protects in-flight
@@ -42,12 +44,12 @@ import org.apache.spark.sql.types.StructType
   * **Reader snapshot isolation (r15).** [[resolve]]/[[readLayout]]
   * resolve the version file ONCE and then read only immutable
   * directories — `_lv<k>` dirs' data files are never modified after
-  * their rename, root dirs' never after the version file exists (commits
-  * only repoint the map; the single sanctioned in-place write is the
-  * `_`-prefixed `_superseded` reclamation marker, invisible to every
-  * read). A reader overlapping any number of commits
-  * sees exactly the partition set of the version it resolved — never a
-  * mix (LayoutIsolationSpec). Superseded version dirs are reclaimed in
+  * their rename (commits only repoint the map; the single sanctioned
+  * in-place write is the `_`-prefixed `_superseded` reclamation marker,
+  * invisible to every read). A reader overlapping any number of commits
+  * — a whole [[rebuild]] included — sees exactly the partition set of
+  * the version it resolved, never a mix (LayoutIsolationSpec).
+  * Superseded version dirs are reclaimed in
   * TWO phases by [[begin]]: a dir whose partitions are all unreferenced
   * is first TOMBSTONED (`_superseded` marker) and only deleted once the
   * marker is idle past the grace window — a reader that resolved within
@@ -107,9 +109,8 @@ object LayoutTxn {
     if (sub.isEmpty) base else base.resolve(sub)
 
   /** The version file's content: version, commit ts, and the per-sub
-    * partition→owning-version map ([[resolve]]'s input). A layout with
-    * no version file is pre-protocol / freshly rebuilt: version 0, no
-    * map — every sub root-lists. */
+    * partition→owning-version map ([[resolve]]'s input). A dir with no
+    * version file holds no committed layout. */
   private case class VersionState(version: Long, ts: Long,
                                   maps: Map[String, (String, Map[String, Seq[Long]])],
                                   batchId: Long = -1L,
@@ -122,10 +123,9 @@ object LayoutTxn {
     // runs a read unions (r18))
     // schemas: sub -> last committed replacement schema (DDL) — what lets
     // a sub EMPTIED by deletes still read as a typed empty relation
-    // commitId: random per published commit — unlike the version, never
-    // reused after a full rebuild restarts the history at 0
+    // commitId: random per published commit
     // ownerSchemas: (sub, owning version) -> the schema (DDL) that commit
-    // wrote the sub with, for every live owner but root (version 0)
+    // wrote the sub with, for every live owner
   }
 
   private val PropPrefix = "prop."
@@ -194,10 +194,8 @@ object LayoutTxn {
       commitId: Option[String] = None,
       ownerSchemas: Map[(String, Long), String] = Map.empty)
 
-  /** Capture the current committed snapshot of `dir` in one read. A
-    * pre-protocol layout (no version file) snapshots as version 0 with
-    * no props — its subs root-list at read time (the root dirs are
-    * immutable from the first commit onward, same contract as before). */
+  /** Capture the current committed snapshot of `dir` in one read. A dir
+    * with no committed layout snapshots as version 0 with no subs. */
   def snapshot(dir: String): LayoutSnapshot =
     readState(dir) match {
       case Some(st) =>
@@ -210,6 +208,16 @@ object LayoutTxn {
   def currentProps(dir: String): Map[String, String] =
     readState(dir).map(_.props).getOrElse(Map.empty)
 
+  /** An integer layout fact its builder recorded as a commit prop (a
+    * bucket or partition count, a hashing parameter). A missing fact
+    * fails loudly, naming the dir and the `builder` to call: guessing it
+    * would probe the wrong partitions and silently find nothing. */
+  def fact(snap: LayoutSnapshot, key: String, builder: String): Int =
+    snap.props.getOrElse(key, throw new IllegalArgumentException(
+      (if (snap.version == 0L) s"no committed layout at ${snap.dir}"
+       else s"layout at ${snap.dir} records no '$key'") +
+        s" — build it with $builder")).toInt
+
   /** Highest streaming batchId any commit recorded (monotone — a
     * non-stream commit between micro-batches never lowers it), -1 if none
     * — the [[graft.layout.MergeTable.lastBatchId]] exactly-once replay
@@ -218,31 +226,21 @@ object LayoutTxn {
   def lastBatchId(dir: String): Long =
     readState(dir).map(_.batchId).getOrElse(-1L)
 
-  /** Current committed version; 0 for a layout that predates the protocol
-    * (or was just [re]built whole — full builds wipe the dir, version
-    * state included, and restart history). */
+  /** Current committed version; 0 when nothing was committed yet (a
+    * [[rebuild]] is the next version, never a restart). */
   def currentVersion(dir: String): Long =
     readState(dir).map(_.version).getOrElse(0L)
 
   /** (version, commit wall-clock millis) of the current layout commit —
     * the MergeTable manifest-timestamp discipline at the layout layer
-    * (r14). ts = 0 for pre-protocol or freshly rebuilt layouts. */
+    * (r14). ts = 0 when nothing was committed yet. */
   def currentVersionInfo(dir: String): (Long, Long) =
     readState(dir).map(s => (s.version, s.ts)).getOrElse((0L, 0L))
 
-  /** List the root hive partitions of one subtree (the version-0 /
-    * pre-protocol layout form). */
-  private def rootParts(dir: String, sub: String, partCol: String): Seq[String] =
-    Option(subRoot(Paths.get(dir), sub).toFile.listFiles())
-      .getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith(s"$partCol="))
-      .map(_.getName).sorted
-
   /** The current snapshot's concrete partition directories for one
     * subtree: (partition dir name, absolute path), resolved ONCE from
-    * the version file — each path is immutable (a root dir the protocol
-    * never mutates, or an `_lv<k>` version dir). `partCol` is only used
-    * for the pre-protocol root-listing fallback. */
+    * the version file — each path is an immutable `_lv<k>` version dir.
+    * A sub no commit wrote resolves to nothing. */
   def resolve(dir: String, sub: String, partCol: String)
       : Seq[(String, String)] =
     resolveSnapshot(snapshot(dir), sub, partCol)
@@ -251,29 +249,22 @@ object LayoutTxn {
     * version-file re-read, so facts and partitions stay one snapshot. */
   def resolveSnapshot(snap: LayoutSnapshot, sub: String, partCol: String)
       : Seq[(String, String)] =
-    resolveOwned(snap, sub, partCol).map { case (p, _, path) => p -> path }
+    resolveOwned(snap, sub).map { case (p, _, path) => p -> path }
 
-  /** [[resolveSnapshot]] with each path's owning version (0 = root). */
-  private def resolveOwned(snap: LayoutSnapshot, sub: String, partCol: String)
-      : Seq[(String, Long, String)] = {
-    val dir = snap.dir
-    snap.maps.get(sub) match {
-      case None => // pre-protocol layout (or sub never committed): root
-        rootParts(dir, sub, partCol)
-          .map(p => (p, 0L, subRoot(Paths.get(dir), sub).resolve(p).toString))
-      case Some((_, m)) =>
-        // one entry PER RUN: a multi-run partition resolves to several
-        // immutable dirs and a read unions them (newest-last order is
-        // irrelevant to the flat row sets the append form is for)
-        m.toSeq.sortBy(_._1).flatMap { case (p, vs) =>
-          vs.map { v =>
-            val base = if (v == 0L) subRoot(Paths.get(dir), sub)
-              else subRoot(Log.versionDir(dir, v), sub)
-            (p, v, base.resolve(p).toString)
-          }
-        }
+  /** The partition dir names the snapshot maps for one sub. */
+  private def liveParts(snap: LayoutSnapshot, sub: String): Seq[String] =
+    snap.maps.get(sub).map(_._2.keys.toSeq.sorted).getOrElse(Seq.empty)
+
+  /** [[resolveSnapshot]] with each path's owning version. One entry PER
+    * RUN: a multi-run partition resolves to several immutable dirs and a
+    * read unions them (newest-last order is irrelevant to the flat row
+    * sets the append form is for). */
+  private def resolveOwned(snap: LayoutSnapshot, sub: String)
+      : Seq[(String, Long, String)] =
+    snap.maps.get(sub).toSeq.flatMap(_._2.toSeq.sortBy(_._1)).flatMap {
+      case (p, vs) => vs.map(v =>
+        (p, v, subRoot(Log.versionDir(snap.dir, v), sub).resolve(p).toString))
     }
-  }
 
   /** Snapshot-isolated read of one subtree, optionally restricted to a
     * partition subset (`only` = partition dir names, e.g. "cell=3") —
@@ -289,28 +280,29 @@ object LayoutTxn {
     readSnapshot(spark, snapshot(dir), sub, partCol, only)
 
   /** [[readLayout]] against an already-captured [[LayoutSnapshot]].
-    * Planning fires no Spark job when every scanned owner has a recorded
-    * schema: each owner's scan takes the data columns its own commit
-    * wrote (per owner, so an int batch and a bigint batch still widen in
-    * the union as inferred reads would). Root-owned partitions and
-    * owners published before schemas were recorded infer from footers. */
+    * Planning fires no Spark job: each owner's scan takes the data
+    * columns its own commit wrote (per owner, so an int batch and a
+    * bigint batch still widen in the union as inferred reads would); an
+    * owner rolled forward from a claim that recorded no schema scans
+    * with the sub's last recorded one. */
   def readSnapshot(spark: SparkSession, snap: LayoutSnapshot, sub: String,
                    partCol: String,
                    only: Option[Set[String]] = None): DataFrame = {
-    val all = resolveOwned(snap, sub, partCol)
-    // one scan per owner (root / each owning version dir): the basePath
-    // option is what turns the dir name into the partition column, and
-    // it must be a parent of every path in its scan
+    val all = resolveOwned(snap, sub)
+    // one scan per owning version dir: the basePath option is what turns
+    // the dir name into the partition column, and it must be a parent of
+    // every path in its scan
     def baseOf(p: String, path: String): String = path.stripSuffix("/" + p)
     def scan(owner: Long, base: String, paths: Seq[String]): DataFrame = {
-      val reader = snap.ownerSchemas.get((sub, owner)) match {
-        // the partition column stays out of the supplied schema: hive
-        // discovery types it from the dir names exactly as before
-        case Some(ddl) => spark.read.schema(StructType(
+      val ddl = snap.ownerSchemas.get((sub, owner))
+        .orElse(snap.schemas.get(sub)).getOrElse(throw new IllegalStateException(
+          s"layout at ${snap.dir} records no schema for sub '$sub' — " +
+            "rebuild it with its index writer"))
+      // the partition column stays out of the supplied schema: hive
+      // discovery types it from the dir names
+      spark.read.schema(StructType(
           StructType.fromDDL(ddl).filterNot(_.name == partCol)))
-        case None => spark.read
-      }
-      reader.option("basePath", base).parquet(paths: _*)
+        .option("basePath", base).parquet(paths: _*)
     }
     val scans = all.filter { case (p, _, _) => only.forall(_.contains(p)) }
       .groupBy { case (p, _, path) => baseOf(p, path) }.toSeq.sortBy(_._1)
@@ -321,29 +313,26 @@ object LayoutTxn {
       // (every doc deleted) reads as a typed empty relation off the
       // schema its last commit recorded (r18 — before that, an index
       // emptied by deletes threw UNABLE_TO_INFER_SCHEMA and was wedged
-      // for every later ingest; found by the index fuzz lane). Only a
-      // layout that truly never existed still throws the standard path
-      // error — the honest outcome.
+      // for every later ingest; found by the index fuzz lane). A sub no
+      // commit ever wrote fails loudly: reading it as an empty layout
+      // would turn every search into a silent miss.
       all.headOption match {
         case Some((p, owner, path)) =>
           scan(owner, baseOf(p, path), Seq(path)).limit(0)
         case None =>
-          snap.schemas.get(sub) match {
-            case Some(ddl) =>
-              spark.createDataFrame(
-                java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-                StructType.fromDDL(ddl))
-            case None =>
-              spark.read.parquet(subRoot(Paths.get(snap.dir), sub).toString)
-                .limit(0)
-          }
+          val ddl = snap.schemas.getOrElse(sub, throw new IllegalArgumentException(
+            s"no committed layout at ${snap.dir}" +
+              (if (sub.isEmpty) "" else s" (sub '$sub')") +
+              " — build it with its index writer first"))
+          spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            StructType.fromDDL(ddl))
       }
     }
   }
 
   /** LayoutTxn's format over the shared [[CommitLog]] protocol: the
-    * pointer swap installs [[nextState]], and version 0 is the
-    * pre-protocol (or freshly rebuilt) layout. */
+    * pointer swap installs [[nextState]]. */
   private val Log = new CommitLog.Format("graft layout commit",
     stagePrefix = "_lstage_", claimPrefix = "_layout_commit_v",
     dirPrefix = "_lv", pointer = "_layout_version",
@@ -356,7 +345,6 @@ object LayoutTxn {
     Log.finish(dir, pr)
 
   /** The version state a published claim installs: the parent maps
-    * (version file, or root listing for a sub's first versioned commit)
     * repointed by this commit's moves/dels. */
   private def nextState(dir: String, pr: Properties): Properties = {
     val version = pr.getProperty("version").toLong
@@ -370,9 +358,7 @@ object LayoutTxn {
         }
       val parentEntry = parent.flatMap(_.maps.get(sub))
       // a claim missing the partcol property (pre-r15 writer) must NOT
-      // default to "" — rootParts("") lists zero partitions and every
-      // untouched root partition would silently leave the map (data loss
-      // on the upgrade path). Derive it: parent map first, then the
+      // default to "": derive it from the parent map first, then the
       // touched dir names ("cell=3" → "cell"); refuse if neither knows.
       val pc = Option(pr.getProperty(s"group.$i.partcol", ""))
         .filter(_.nonEmpty)
@@ -383,9 +369,7 @@ object LayoutTxn {
           s"cannot roll forward layout claim v$version at $dir: no " +
             s"partition column recorded or derivable for sub '$sub' — " +
             "re-run the interrupted upsert"))
-      val parentMap: Map[String, Seq[Long]] =
-        parentEntry.map(_._2).getOrElse(
-          rootParts(dir, sub, pc).map(_ -> Seq(0L)).toMap)
+      val parentMap = parentEntry.map(_._2).getOrElse(Map.empty[String, Seq[Long]])
       val isAppend = pr.getProperty(s"group.$i.append", "false") == "true"
       val newMap =
         if (isAppend) // written partitions gain ONE MORE run; no deletes
@@ -403,17 +387,21 @@ object LayoutTxn {
     val vp = new Properties()
     vp.setProperty("version", version.toString)
     vp.setProperty("ts", pr.getProperty("ts", "0"))
+    // a rebuild is a new layout: the old one's stream watermark and facts
+    // end with it (a stream restarted against the rebuilt index must not
+    // skip its first batches)
+    val carry = parent.filterNot(_ => pr.getProperty("rebuild") == "true")
     // the recorded batchId is MONOTONE: a non-stream commit (no batchId
     // in its claim) carries the parent's forward, so a replay check can
     // never be defeated by an interleaved batch ingest
     val bid = math.max(
-      parent.map(_.batchId).getOrElse(-1L),
+      carry.map(_.batchId).getOrElse(-1L),
       Option(pr.getProperty("batchId")).map(_.toLong).getOrElse(-1L))
     if (bid >= 0) vp.setProperty("batchId", bid.toString)
     // layout properties: the parent's carry forward, this commit's
     // overwrite — so a fact like the partition count changes ATOMICALLY
     // with the partition map that embodies it
-    (parent.map(_.props).getOrElse(Map.empty) ++ propsOf(pr)).foreach {
+    (carry.map(_.props).getOrElse(Map.empty) ++ propsOf(pr)).foreach {
       case (k, v) => vp.setProperty(PropPrefix + k, v)
     }
     // per-sub replacement schemas: parent's carry, this commit's groups
@@ -441,7 +429,7 @@ object LayoutTxn {
         m.toSeq.sortBy(_._1)
           .map { case (p, vs) => s"$p:${vs.mkString("|")}" }.mkString(","))
       schemas.get(sub).foreach(vp.setProperty(s"sub.$i.schema", _))
-      m.valuesIterator.flatten.filter(_ > 0L).toSet.foreach { (v: Long) =>
+      m.valuesIterator.flatten.toSet.foreach { (v: Long) =>
         ownerSchema(sub, v).foreach(vp.setProperty(s"sub.$i.owner.$v", _))
       }
     }
@@ -457,15 +445,12 @@ object LayoutTxn {
     Log.sweepStages(dir, graceMs)
     val now = System.currentTimeMillis()
     // two-phase reclamation of SUPERSEDED immutable dirs: phase 1 plants
-    // a tombstone in any _lv<k>/root-partition dir no map entry
-    // references; phase 2 deletes it once the tombstone is idle past
-    // grace — a reader that resolved within the window keeps its
-    // snapshot on disk
+    // a tombstone in any _lv<k> dir no map entry references; phase 2
+    // deletes it once the tombstone is idle past grace — a reader that
+    // resolved within the window keeps its snapshot on disk
     readState(dir).foreach { st =>
-      val referenced: Set[(Long, String, String)] = st.maps.toSeq.flatMap {
-        case (sub, (_, m)) =>
-          m.toSeq.flatMap { case (p, vs) => vs.map(v => (v, sub, p)) }
-      }.toSet
+      val referenced: Set[Long] =
+        st.maps.valuesIterator.flatMap(_._2.valuesIterator.flatten).toSet
       def sweep(target: java.io.File): Unit = {
         val tomb = new java.io.File(target, Tombstone)
         if (!tomb.exists()) {
@@ -482,17 +467,8 @@ object LayoutTxn {
         .filter(f => f.isDirectory && f.getName.matches("_lv\\d+"))
         .foreach { f =>
           val k = f.getName.stripPrefix("_lv").toLong
-          if (k < st.version && !referenced.exists(_._1 == k)) sweep(f)
+          if (k < st.version && !referenced.contains(k)) sweep(f)
         }
-      // root partition dirs of MAPPED subs that the map no longer points
-      // at version 0 (a full rebuild wipes the version file first, so a
-      // mapless layout is never touched here)
-      st.maps.foreach { case (sub, (pc, _)) =>
-        rootParts(dir, sub, pc).foreach { p =>
-          if (!referenced.contains((0L, sub, p)))
-            sweep(subRoot(Paths.get(dir), sub).resolve(p).toFile)
-        }
-      }
     }
     v
   }
@@ -503,7 +479,43 @@ object LayoutTxn {
     * `parent + 1` first. */
   def commit(spark: SparkSession, dir: String, parent: Long,
              groups: Seq[Group], batchId: Long = -1L,
-             props: Map[String, String] = Map.empty): Long = {
+             props: Map[String, String] = Map.empty): Long =
+    commitClaim(spark, dir, parent, groups, batchId, props, rebuild = false)
+
+  /** The whole-sub form of `groups` against `snap`: each group touches
+    * its sub's live partitions plus every partition it declares it may
+    * write, so partitions its replacement no longer produces leave the
+    * map. The touched set of a whole rewrite ([[rebuild]], a rescale, a
+    * recluster). */
+  def whole(snap: LayoutSnapshot, groups: Seq[Group]): Seq[Group] =
+    groups.map(g =>
+      g.copy(touched = (liveParts(snap, g.sub) ++ g.touched).distinct.sorted))
+
+  /** Write a whole layout as ONE commit — the only way a layout comes
+    * into being. Each group is its sub's full contents ([[whole]]);
+    * every other sub the layout maps (tombstone runs, pair logs) is
+    * emptied, and the stream watermark and layout props restart from
+    * `props`. Version history continues: a reader that resolved the
+    * previous version keeps its snapshot, and [[begin]]'s sweep reclaims
+    * the superseded dirs after the grace window. */
+  def rebuild(spark: SparkSession, dir: String, groups: Seq[Group],
+              props: Map[String, String]): Long = {
+    val parent = begin(dir)
+    val snap = snapshot(dir)
+    val named = groups.map(_.sub).toSet
+    val emptied = snap.maps.toSeq.sortBy(_._1).collect {
+      case (sub, (pc, m)) if !named(sub) && m.nonEmpty =>
+        Group(sub, readSnapshot(spark, snap, sub, pc).limit(0), pc,
+          Seq.empty, m.keys.toSeq.sorted)
+    }
+    commitClaim(spark, dir, parent, whole(snap, groups) ++ emptied, -1L,
+      props, rebuild = true)
+  }
+
+  private def commitClaim(spark: SparkSession, dir: String, parent: Long,
+                          groups: Seq[Group], batchId: Long,
+                          props: Map[String, String],
+                          rebuild: Boolean): Long = {
     val newV = parent + 1
     val stage = Log.stageName(newV)
     Files.createDirectories(Paths.get(dir))
@@ -515,6 +527,7 @@ object LayoutTxn {
     pr.setProperty("stage", stage)
     if (batchId >= 0) pr.setProperty("batchId", batchId.toString)
     props.foreach { case (k, v) => pr.setProperty(PropPrefix + k, v) }
+    if (rebuild) pr.setProperty("rebuild", "true")
     pr.setProperty("ts", System.currentTimeMillis().toString)
     pr.setProperty("groups", groups.size.toString)
     groups.zipWithIndex.foreach { case (g, i) =>
@@ -553,10 +566,10 @@ object LayoutTxn {
     newV
   }
 
-  /** The number of distinct immutable OWNER dirs (root + `_lv<k>`) the
-    * current snapshot's partitions resolve to — the read fan-out a
-    * fragmented layout pays (one parquet scan per owner, unioned), and
-    * [[compactStale]]'s trigger metric. 0 for a pre-protocol layout. */
+  /** The number of distinct immutable OWNER dirs (`_lv<k>`) the current
+    * snapshot's partitions resolve to — the read fan-out a fragmented
+    * layout pays (one parquet scan per owner, unioned), and
+    * [[compactStale]]'s trigger metric. 0 when nothing was committed. */
   def ownerCount(dir: String): Int =
     readState(dir).map(_.maps.valuesIterator
       .flatMap(_._2.valuesIterator.flatten).toSet.size).getOrElse(0)
@@ -585,7 +598,6 @@ object LayoutTxn {
     require(maxOwners >= 1, s"maxOwners must be >= 1, got $maxOwners")
     val parent = begin(dir, txnGraceMs)
     val snap = snapshot(dir)
-    if (snap.maps.isEmpty) return parent // pre-protocol: one root owner
     val owners = snap.maps.valuesIterator
       .flatMap(_._2.valuesIterator.flatten).toSet
     if (owners.size <= maxOwners) return parent

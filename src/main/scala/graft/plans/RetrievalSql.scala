@@ -26,11 +26,10 @@ import graft.text.TextAnalysis
   * The first argument is the index layout DIRECTORY (index layouts are
   * not registered tables — they are named by location, like every other
   * LayoutTxn layout). The bucket count resolves from the layout's
-  * own persisted count (version-state prop since r18's rescale, else
-  * `_idx_meta`), resolved INSIDE the search in the same snapshot as the
-  * partition set, so SQL callers never pass it and a concurrent rescale
-  * can never pair a stale count with new directories; a pre-r17 meta-less
-  * index falls back to the writer default (16). Query terms are whitespace-split from the second
+  * own commit-recorded count, INSIDE the search in the same snapshot as
+  * the partition set, so SQL callers never pass it and a concurrent
+  * rescale can never pair a stale count with new directories; a dir
+  * holding no committed index fails loudly. Query terms are whitespace-split from the second
   * argument — the same tokenizer the index writer used. */
 object RetrievalSql {
 

@@ -218,13 +218,17 @@ object Similarity {
   }
 
   /** The ANN-at-rest layout: the assigned corpus written hive-partitioned
-    * by `cell` with in-file order on `vec_id` — at 100 TB the partition
+    * by `cell` with in-file order on `vec_id`, as one
+    * [[graft.layout.LayoutTxn.rebuild]] commit — at 100 TB the partition
     * directory IS the inverted list, so a probe reads nprobe/k of the
     * corpus FILES, not just nprobe/k of its rows. */
   def writeIvfLayout(corpus: DataFrame, cents: Array[Seq[Float]],
-                     outDir: String): Unit =
-    graft.layout.DataLayout.writePartitionedSorted(
-      ivfAssign(corpus, cents), outDir, Seq("cell"), Seq("vec_id"))
+                     outDir: String): Unit = {
+    graft.layout.LayoutTxn.rebuild(corpus.sparkSession, outDir, Seq(
+      graft.layout.LayoutTxn.Group("", ivfAssign(corpus, cents), "cell",
+        Seq("vec_id"), cents.indices.map(c => s"cell=$c"))), Map.empty)
+    ()
+  }
 
   /** IVF ANN top-k against the at-rest layout: the union of the queries'
     * probe cells becomes a LITERAL `isin` partition filter (the set is
@@ -394,8 +398,8 @@ object Similarity {
     * = balanced) this is a NO-OP — the index is fine, don't rewrite 100 TB
     * — otherwise centroids RETRAIN over the current at-rest corpus
     * ([[ivfCentroids]]' deterministic Lloyd) and the whole layout rewrites
-    * once (static overwrite; the corpus is checkpointed first so the plan
-    * never reads the directory it replaces). Returns the new centroids,
+    * once (one whole-layout commit; the corpus is checkpointed first so
+    * the plan never reads the dirs it supersedes). Returns the new centroids,
     * or None when below threshold. Maintenance stays cheap and
     * delta-shaped (upsert); rebalance is this explicit, skew-gated batch
     * op — the FAISS retrain discipline at the layout layer. */
@@ -406,7 +410,8 @@ object Similarity {
     // same maintenance-writer entry as ivfUpsertLayout: roll forward /
     // conflict BEFORE reading the layout the rewrite is computed from
     val parent = graft.layout.LayoutTxn.begin(layoutDir, txnGraceMs)
-    val atRest = graft.layout.LayoutTxn.readLayout(spark, layoutDir, "", "cell")
+    val snap = graft.layout.LayoutTxn.snapshot(layoutDir)
+    val atRest = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", "cell")
       .select(col("vec_id"), col("embedding"), col("cell"))
     val skew = graft.ops.Relational.skewProfile(atRest, "cell")
       .select(col("skew_factor")).head().getDouble(0)
@@ -418,13 +423,10 @@ object Similarity {
       // a full rewrite touches every live cell plus every cell the
       // retrained assignment can produce — cells emptied by the retrain
       // become deletions at swap, exactly like an upsert's emptied cell
-      val existingDirs = graft.layout.LayoutTxn
-        .resolve(layoutDir, "", "cell").map(_._1).toSet
-      val touched = (existingDirs ++ (0 until cells).map(c => s"cell=$c"))
-        .toSeq.sorted
-      graft.layout.LayoutTxn.commit(spark, layoutDir, parent, Seq(
-        graft.layout.LayoutTxn.Group("", ivfAssign(corpus, cents), "cell",
-          Seq("vec_id"), touched)))
+      graft.layout.LayoutTxn.commit(spark, layoutDir, parent,
+        graft.layout.LayoutTxn.whole(snap, Seq(
+          graft.layout.LayoutTxn.Group("", ivfAssign(corpus, cents), "cell",
+            Seq("vec_id"), (0 until cells).map(c => s"cell=$c")))))
       Some(cents)
     }
   }

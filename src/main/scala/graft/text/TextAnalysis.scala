@@ -289,35 +289,10 @@ object TextAnalysis {
     writeIndexLayoutImpl(invertedIndex(docs, idCol, text), dir, buckets,
       rawDocs = Some((docs, idCol, text)))
 
-  private val IdxMeta = "_idx_meta"
-
-  /** The layout's bucket count is a LAYOUT FACT (the `_lsh_meta`
-    * discipline at the text tier, r17): a probe/delete/search computing
-    * `tb`/`dm` with a different count would silently find nothing (search)
-    * or miss victim rows (delete). Persisted at write time; readers
-    * REFUSE a mismatched caller value rather than trusting it. Indexes
-    * written before the meta file existed fall back to the caller's value
-    * (the legacy contract: caller-consistent parameters). */
-  private def metaFileBuckets(dir: String): Option[Int] = {
-    val p = java.nio.file.Paths.get(dir, IdxMeta)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val pr = new java.util.Properties()
-      val in = java.nio.file.Files.newInputStream(p)
-      try pr.load(in) finally in.close()
-      Some(pr.getProperty("buckets").toInt)
-    }
-  }
-
-  /** The layout's PERSISTED bucket count, or None for a pre-r17 index —
-    * the SQL TVFs resolve the count from the layout itself so a pure-SQL
-    * caller never has to know it. Since r18's [[indexRescaleLayout]] the
-    * authoritative copy rides the LayoutTxn version state (it must change
-    * ATOMICALLY with the partition map); `_idx_meta` remains as the
-    * write-time copy for never-rescaled layouts. */
+  /** The layout's PERSISTED bucket count (its builder's commit prop),
+    * or None when `dir` holds no index layout. */
   def persistedIndexBuckets(dir: String): Option[Int] =
     graft.layout.LayoutTxn.currentProps(dir).get("buckets").map(_.toInt)
-      .orElse(metaFileBuckets(dir))
 
   /** Callers pass this (the parameter default) to mean "the layout's own
     * persisted count" — after an [[indexRescaleLayout]] no caller should
@@ -325,44 +300,54 @@ object TextAnalysis {
     * cross-checked against the persisted one and refused on mismatch. */
   private val LayoutResolvedBuckets = -1
 
+  /** The bucket count is a LAYOUT FACT: a probe/delete/search computing
+    * `tb`/`dm` with a different count would silently find nothing
+    * (search) or miss victim rows (delete). The builder records it as a
+    * commit prop and a rescale changes it in the same commit as the
+    * partition map; readers REFUSE a mismatched caller value rather than
+    * trusting it. */
   private def bucketsFromSnapshot(snap: graft.layout.LayoutTxn.LayoutSnapshot,
-                                  caller: Int): Int =
-    snap.props.get("buckets").map(_.toInt)
-      .orElse(metaFileBuckets(snap.dir)) match {
-      case None =>
-        if (caller == LayoutResolvedBuckets) 16 // the historical writer default
-        else caller
-      case Some(persisted) =>
-        require(caller == LayoutResolvedBuckets || caller == persisted,
-          s"index at ${snap.dir} was written with buckets=$persisted but " +
-            s"the call passed buckets=$caller — a mismatched bucket count " +
-            "probes the wrong partitions silently; pass the index's own value")
-        persisted
-    }
+                                  caller: Int): Int = {
+    val persisted = graft.layout.LayoutTxn.fact(snap, "buckets",
+      "TextAnalysis.writeIndexLayout")
+    require(caller == LayoutResolvedBuckets || caller == persisted,
+      s"index at ${snap.dir} was written with buckets=$persisted but " +
+        s"the call passed buckets=$caller — a mismatched bucket count " +
+        "probes the wrong partitions silently; pass the index's own value")
+    persisted
+  }
 
   private def layoutBuckets(dir: String, caller: Int): Int =
     bucketsFromSnapshot(graft.layout.LayoutTxn.snapshot(dir), caller)
 
+  /** One [[graft.layout.LayoutTxn.rebuild]] commit writes the postings
+    * (`tb=` buckets, sorted by term) and the doc→bucket reverse map every
+    * real index keeps beside them (the "doc store"): without it,
+    * REPLACING a document cannot find the buckets holding its old terms
+    * without scanning the whole index. `_`-prefixed, so the postings'
+    * partition discovery skips it; partitioned by a doc bucket so
+    * maintenance rewrites only touched dm= dirs. */
   private def writeIndexLayoutImpl(index: DataFrame, dir: String,
                                    buckets: Int,
                                    rawDocs: Option[(DataFrame, String, Column)])
       : Unit = {
     val bucketed = index.withColumn("tb", termBucket(col("term"), buckets))
       .transform(graft.util.Cleanup.checkpoint(_))
-    bucketed.write.partitionBy("tb").mode("overwrite").parquet(dir)
-    val pr = new java.util.Properties()
-    pr.setProperty("buckets", buckets.toString)
-    val out = java.nio.file.Files.newOutputStream(
-      java.nio.file.Paths.get(dir, IdxMeta))
-    try pr.store(out, "graft inverted-index layout parameters")
-    finally out.close()
-    // the doc→bucket reverse map every real index keeps beside its
-    // postings (the "doc store"): without it, REPLACING a document cannot
-    // find the buckets holding its old terms without scanning the whole
-    // index. `_`-prefixed, so the layout's own partition discovery skips
-    // it; partitioned by a doc bucket so maintenance rewrites only
-    // touched dm= dirs.
-    writeDocMap(docMapOf(bucketed, buckets, rawDocs), s"$dir/$DocMapDir")
+    graft.layout.LayoutTxn.rebuild(bucketed.sparkSession, dir,
+      indexGroups(bucketed, docMapOf(bucketed, buckets, rawDocs), buckets),
+      Map("buckets" -> buckets.toString))
+    ()
+  }
+
+  /** A whole index as commit groups: postings over `tb=0..buckets-1`
+    * (sorted by term) and the doc store over `dm=0..buckets-1`. */
+  private def indexGroups(postings: DataFrame, docMap: DataFrame,
+                          buckets: Int): Seq[graft.layout.LayoutTxn.Group] = {
+    val parts = 0 until buckets
+    Seq(graft.layout.LayoutTxn.Group("", postings, "tb", Seq("term"),
+        parts.map(b => s"tb=$b")),
+      graft.layout.LayoutTxn.Group(DocMapDir, docMap, "dm", Seq("doc_id"),
+        parts.map(b => s"dm=$b")))
   }
 
   private val DocMapDir = "_docmap"
@@ -408,21 +393,15 @@ object TextAnalysis {
 
   /** Memoize `compute` per (layout dir, commit id) in `cache` — the r19
     * streaming schema-cache discipline: a commit id names ONE immutable
-    * published state, and unlike the version number it is never reused
-    * (a full rebuild restarts versions at 0, so (dir, version) could name
-    * two different states in one JVM). A snapshot without a commit id
-    * (freshly rebuilt, or written before ids existed) is computed every
-    * time. Bounded by a clear past 4096 entries (the fuzz lane builds
-    * thousands of layouts); process-local, dies with the JVM. */
+    * published state and is never reused. Bounded by a clear past 4096
+    * entries (the fuzz lane builds thousands of layouts); process-local,
+    * dies with the JVM. */
   private def perCommit[V](
       cache: java.util.concurrent.ConcurrentHashMap[(String, String), V],
-      snap: graft.layout.LayoutTxn.LayoutSnapshot)(compute: => V): V =
-    snap.commitId match {
-      case None => compute
-      case Some(id) =>
-        if (cache.size > 4096) cache.clear()
-        cache.computeIfAbsent((snap.dir, id), _ => compute)
-    }
+      snap: graft.layout.LayoutTxn.LayoutSnapshot)(compute: => V): V = {
+    if (cache.size > 4096) cache.clear()
+    cache.computeIfAbsent((snap.dir, snap.commitId.get), _ => compute)
+  }
 
   /** A hot search path pays the tombstone read (one collect job) once
     * per commit instead of once per query run — see [[perCommit]]. */
@@ -585,18 +564,6 @@ object TextAnalysis {
         mapped.unionByName(sentinels)
     }
     whole.withColumn("dm", pmod(col("doc_id"), lit(buckets)))
-  }
-  private def writeDocMap(dm: DataFrame, dir: String): Unit = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val spark = dm.sparkSession
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try dm.repartition(col("dm"))
-      .write.mode("overwrite").partitionBy("dm").parquet(dir)
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 
   /** Incremental maintenance of a [[writeIndexLayout]] directory — the
@@ -863,24 +830,15 @@ object TextAnalysis {
     * never a mix; a concurrent writer's CAS conflicts loudly; batchId
     * carries so streaming replay protection survives the rescale. Cost is
     * O(index bytes) — the deliberate amortized full rewrite, exactly
-    * MergeTable REBUCKET's contract. `_idx_meta` is refreshed after the
-    * commit as the legacy copy (the version-state prop is authoritative
-    * and wins in every reader). */
+    * MergeTable REBUCKET's contract. */
   def indexRescaleLayout(spark: org.apache.spark.sql.SparkSession,
                          layoutDir: String, newBuckets: Int,
                          txnGraceMs: Long = 600000L): Long = {
     require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
     val parent = graft.layout.LayoutTxn.begin(layoutDir, txnGraceMs)
     val snap = graft.layout.LayoutTxn.snapshot(layoutDir)
-    val oldBuckets = snap.props.get("buckets").map(_.toInt)
-      .orElse(metaFileBuckets(layoutDir))
-      .getOrElse(throw new IllegalStateException(
-        s"no persisted bucket count at $layoutDir — not an index layout?"))
-    if (oldBuckets == newBuckets) return snap.version
-    val oldTb = graft.layout.LayoutTxn.resolveSnapshot(snap, "", "tb")
-      .map(_._1)
-    val oldDm = graft.layout.LayoutTxn
-      .resolveSnapshot(snap, DocMapDir, "dm").map(_._1)
+    if (bucketsFromSnapshot(snap, LayoutResolvedBuckets) == newBuckets)
+      return snap.version
     // pending delete tombstones materialize for free inside the full
     // rewrite (r20 merge-on-read delete): the liveIndex filter drops the
     // victims' postings before re-bucketing, the doc store rebuilds from
@@ -899,32 +857,16 @@ object TextAnalysis {
       .withColumn("dm", pmod(col("doc_id"), lit(newBuckets.toLong)))
     val newDocMap = docMapOf(rebucketed, newBuckets).unionByName(sentinels)
       .select(col("doc_id"), col("tb"), col("len"), col("dm"))
-    val tbTouched = (oldTb ++ (0 until newBuckets).map(b => s"tb=$b"))
-      .distinct.sorted
-    val dmTouched = (oldDm ++ (0 until newBuckets).map(b => s"dm=$b"))
-      .distinct.sorted
     val tombClear =
       if (tombParts.isEmpty) Seq.empty
       else Seq(graft.layout.LayoutTxn.Group(TombDir,
         graft.layout.LayoutTxn.readSnapshot(spark, snap, TombDir, "tr")
           .limit(0),
         "tr", Seq("doc_id"), tombParts.map(_._1).distinct))
-    val v = graft.layout.LayoutTxn.commit(spark, layoutDir, parent,
-      Seq(graft.layout.LayoutTxn.Group("", rebucketed, "tb", Seq("term"),
-          tbTouched),
-        graft.layout.LayoutTxn.Group(DocMapDir, newDocMap, "dm",
-          Seq("doc_id"), dmTouched)) ++ tombClear,
+    graft.layout.LayoutTxn.commit(spark, layoutDir, parent,
+      graft.layout.LayoutTxn.whole(snap,
+        indexGroups(rebucketed, newDocMap, newBuckets)) ++ tombClear,
       props = Map("buckets" -> newBuckets.toString))
-    // refresh the legacy write-time copy (best-effort, post-commit: every
-    // reader prefers the version-state prop, so a crash between the two
-    // writes is benign)
-    val pr = new java.util.Properties()
-    pr.setProperty("buckets", newBuckets.toString)
-    val out = java.nio.file.Files.newOutputStream(
-      java.nio.file.Paths.get(layoutDir, IdxMeta))
-    try pr.store(out, "graft inverted-index layout parameters")
-    finally out.close()
-    v
   }
 
   /** Fold a fragmented index layout — [[graft.layout.LayoutTxn

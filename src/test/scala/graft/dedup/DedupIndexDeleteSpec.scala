@@ -11,9 +11,8 @@ import graft.layout.LayoutTxn
   * r17 — VERDICT r16 task 2). Pinned here: maintained-after-delete equals
   * a rebuild without the victims (content, per index type), deletes
   * compose with upserts through the `_docmap` reverse map, post-delete
-  * probes equal probes against the rebuilt index, emptied partitions
-  * leave the snapshot, and a pre-r17 index (no reverse map) refuses the
-  * delete loudly instead of scanning or missing rows. */
+  * probes equal probes against the rebuilt index, and emptied partitions
+  * leave the snapshot. */
 class DedupIndexDeleteSpec extends SparkSpec {
   import spark.implicits._
 
@@ -90,21 +89,6 @@ class DedupIndexDeleteSpec extends SparkSpec {
     assert(touched.nonEmpty, "int-typed victims must still locate rows")
     assert(LayoutTxn.readLayout(spark, d, "", "lb")
       .filter(col("doc_id").isin(30L, 31L)).count() === 0)
-  }
-
-  test("LSH: a pre-r17 index (no _docmap) refuses delete loudly") {
-    val d = fresh("lsh_leg")
-    Dedup.writeLshIndex(corpus, "doc_id", col("text"), d, partitions = 8)
-    // simulate the legacy at-rest form by removing the reverse map
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(d, "_docmap"))
-    val e = intercept[IllegalArgumentException] {
-      Dedup.lshIndexDelete(spark, d, victims.select("doc_id"), "doc_id")
-    }
-    assert(e.getMessage.contains("_docmap"))
   }
 
   test("LSH: a narrower-typed ingest batch still lands docmap rows a later delete finds") {

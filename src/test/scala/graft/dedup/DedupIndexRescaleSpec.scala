@@ -12,8 +12,8 @@ import graft.layout.LayoutTxn
   * stored columns (the corpus is never re-read). Pinned here, per index
   * type: rescaled ≡ rebuilt-at-new-count (index rows AND `_docmap`
   * reverse map), post-rescale probes/ingests/deletes resolve the new
-  * count from the layout itself and agree with the rebuilt index, the
-  * legacy meta file refreshes, same-count rescale is a no-op, and
+  * count from the layout itself and agree with the rebuilt index,
+  * same-count rescale is a no-op, and
   * compaction folds a fragmented index with contents intact. */
 class DedupIndexRescaleSpec extends SparkSpec {
   import spark.implicits._
@@ -35,14 +35,6 @@ class DedupIndexRescaleSpec extends SparkSpec {
   private def fresh(tag: String): String =
     Files.createTempDirectory(s"dd_rsc_$tag").toString + "/idx"
 
-  private def metaProp(dir: String, file: String, key: String): String = {
-    val pr = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(
-      java.nio.file.Paths.get(dir, file))
-    try pr.load(in) finally in.close()
-    pr.getProperty(key)
-  }
-
   test("LSH: rescale == rebuild at the new count; probe/delete run at the new hash") {
     val a = fresh("lsh_a"); val b = fresh("lsh_b")
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), a, partitions = 8)
@@ -56,7 +48,6 @@ class DedupIndexRescaleSpec extends SparkSpec {
       .select(col("doc_id"), col("pb"), col("dm"))
       .as[(Long, Int, Int)].collect().toSet
     assert(dm(a) === dm(b), "reverse map incl. dm must match a 5-part build")
-    assert(metaProp(a, "_lsh_meta", "partitions") === "5")
     assert(LayoutTxn.currentProps(a).get("partitions") === Some("5"))
     // post-rescale ingest probes the NEW partitions and agrees with the
     // rebuilt index's probe
@@ -84,7 +75,6 @@ class DedupIndexRescaleSpec extends SparkSpec {
       .select(col("doc_id"), col("fp"), col("fb"))
       .as[(Long, Long, Int)].collect().toSet
     assert(rows(a) === rows(b))
-    assert(metaProp(a, "_winnow_meta", "partitions") === "3")
     def pairs(d: String) = Dedup.winnowIndexUpsert(spark, d, batch,
         "doc_id", col("text"))
       .select(col("a"), col("b"), col("n_shared"))
@@ -106,7 +96,6 @@ class DedupIndexRescaleSpec extends SparkSpec {
       .select(col("doc_id"), col("sh"), col("band"), col("bval"), col("sb"))
       .as[(Long, String, Int, String, Int)].collect().toSet
     assert(rows(a) === rows(b))
-    assert(metaProp(a, "_simhash_meta", "partitions") === "6")
     def pairs(d: String) = Dedup.simhashIndexUpsert(spark, d, batch,
         "doc_id", col("text"))
       .select(col("a"), col("b"), col("dist"))

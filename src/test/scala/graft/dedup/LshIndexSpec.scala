@@ -27,6 +27,7 @@ class LshIndexSpec extends SparkSpec {
   test("upsert probes and rewrites ONLY the batch's lb partitions; pairs match the batch-vs-corpus slice of full LSH") {
     val dir = Files.createTempDirectory("lsh_idx").toString + "/idx"
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), dir, partitions = 8)
+    val v0 = LayoutTxn.currentVersion(dir)
     val before = LayoutTxn.resolve(dir, "", "lb").toMap
     // the delta: a near-clone of doc 1/2 plus an unrelated doc
     val delta = docsOf(
@@ -46,9 +47,10 @@ class LshIndexSpec extends SparkSpec {
     assert(pairs === want, s"pairs $pairs vs full-LSH slice $want")
     assert(pairs.nonEmpty, "the near-clone must collide with its source")
     // file-level: untouched lb partitions still resolve to their ORIGINAL
-    // (root) dirs; only the batch's partitions repointed into _lv1
+    // (build) dirs; only the batch's partitions repointed into the
+    // ingest's version dir
     val after = LayoutTxn.resolve(dir, "", "lb").toMap
-    val touched = after.filter { case (_, p) => p.contains("_lv1") }.keySet
+    val touched = after.filter { case (_, p) => p.contains(s"_lv${v0 + 1}") }.keySet
     val batchLbs = Dedup.lshProbePartitions(delta, "doc_id", col("text"),
       partitions = 8)
     assert(touched === batchLbs.map(b => s"lb=$b").toSet)
@@ -64,14 +66,15 @@ class LshIndexSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(pairs2.contains((10L, 20L)),
       s"second ingest must see the first's docs: $pairs2")
-    assert(LayoutTxn.currentVersion(dir) === 2L)
+    assert(LayoutTxn.currentVersion(dir) === v0 + 2)
   }
 
   test("a live concurrent ingest CONFLICTS loudly; the index and the failed batch leave no trace") {
     val dir = Files.createTempDirectory("lsh_conflict").toString + "/idx"
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), dir, partitions = 8)
-    Files.writeString(java.nio.file.Paths.get(dir, "_layout_commit_v1"),
-      "version=1\n")
+    val next = LayoutTxn.currentVersion(dir) + 1
+    Files.writeString(java.nio.file.Paths.get(dir, s"_layout_commit_v$next"),
+      s"version=$next\n")
     val before = LayoutTxn.readLayout(spark, dir, "", "lb").count()
     intercept[LayoutTxn.ConflictException] {
       Dedup.lshIndexUpsert(spark, dir,

@@ -32,6 +32,7 @@ class SimhashIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("sh_idx").toString + "/idx"
     Dedup.writeSimhashIndex(corpus, "doc_id", col("text"), dir,
       maxDist = 2, partitions = 8)
+    val v0 = LayoutTxn.currentVersion(dir)
     val before = LayoutTxn.resolve(dir, "", "sb").toMap
     // doc 10 is doc 1 REORDERED: the word-multiset simhash is
     // order-invariant, so its distance to doc 1 is exactly 0 (a one-word
@@ -53,7 +54,8 @@ class SimhashIndexSpec extends SparkSpec {
     }
     assert(pairs === want, s"pairs $pairs vs full slice $want")
     assert(pairs.nonEmpty, "the near-clone must land within maxDist")
-    // file-level: only the batch's band partitions repointed into _lv1
+    // file-level: only the batch's band partitions repointed into the
+    // ingest's version dir
     val cuts = Dedup.simhashBandCuts(3)
     val batchSbs = delta
       .select(Dedup.simhash16(col("text")).as("sh"))
@@ -62,7 +64,7 @@ class SimhashIndexSpec extends SparkSpec {
       .select(pmod(hash(col("band"), col("bval")), lit(8)))
       .distinct().collect().map(_.getInt(0)).toSet
     val after = LayoutTxn.resolve(dir, "", "sb").toMap
-    val touched = after.filter { case (_, p) => p.contains("_lv1") }.keySet
+    val touched = after.filter { case (_, p) => p.contains(s"_lv${v0 + 1}") }.keySet
     assert(touched === batchSbs.map(b => s"sb=$b"))
     before.foreach { case (part, path) =>
       if (!touched.contains(part))
@@ -76,15 +78,16 @@ class SimhashIndexSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(pairs2.contains((10L, 20L, 0L)),
       s"second ingest must see the first's docs: $pairs2")
-    assert(LayoutTxn.currentVersion(dir) === 2L)
+    assert(LayoutTxn.currentVersion(dir) === v0 + 2)
   }
 
   test("a live concurrent ingest CONFLICTS loudly; no stage residue") {
     val dir = Files.createTempDirectory("sh_conflict").toString + "/idx"
     Dedup.writeSimhashIndex(corpus, "doc_id", col("text"), dir,
       maxDist = 2, partitions = 8)
-    Files.writeString(java.nio.file.Paths.get(dir, "_layout_commit_v1"),
-      "version=1\n")
+    val next = LayoutTxn.currentVersion(dir) + 1
+    Files.writeString(java.nio.file.Paths.get(dir, s"_layout_commit_v$next"),
+      s"version=$next\n")
     val before = LayoutTxn.readLayout(spark, dir, "", "sb").count()
     intercept[LayoutTxn.ConflictException] {
       Dedup.simhashIndexUpsert(spark, dir,

@@ -27,6 +27,7 @@ class WinnowIndexSpec extends SparkSpec {
   test("probe pairs equal the cross-split slice of winnowingCandidates; only the batch's partitions rewrite; ingests compose") {
     val dir = Files.createTempDirectory("winnow_idx").toString + "/idx"
     Dedup.writeWinnowIndex(corpus, "doc_id", col("text"), dir, partitions = 8)
+    val v0 = LayoutTxn.currentVersion(dir)
     val delta = Seq(
       10L -> s"brand new prose surrounds $shared and continues differently",
       11L -> "nothing in common with anything previously indexed at all")
@@ -46,12 +47,14 @@ class WinnowIndexSpec extends SparkSpec {
     assert(got === want, s"got $got want $want")
     assert(got.exists { case (a, b, _) => a == 1L && b == 10L },
       "the contained copy must collide with its source")
-    // only the batch's fb= partitions repointed; the rest still at root
+    // only the batch's fb= partitions repointed; the rest still in the
+    // build's dir
     val after = LayoutTxn.resolve(dir, "", "fb").toMap
-    val touched = after.filter(_._2.contains("_lv1")).keySet
+    val touched = after.filter(_._2.contains(s"_lv${v0 + 1}")).keySet
     assert(touched.nonEmpty && touched.forall(_.startsWith("fb=")))
     after.foreach { case (part, path) =>
-      if (!touched.contains(part)) assert(!path.contains("_lv"), s"$part moved")
+      if (!touched.contains(part))
+        assert(path.contains(s"_lv$v0/"), s"$part moved")
     }
     // compose: a second batch containing the same shared run finds BOTH
     // doc 1 (original corpus) and doc 10 (first ingest)
@@ -61,6 +64,6 @@ class WinnowIndexSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(got2.map(t => (t._1, t._2)).intersect(Set((1L, 20L), (10L, 20L)))
       === Set((1L, 20L), (10L, 20L)), s"second ingest pairs: $got2")
-    assert(LayoutTxn.currentVersion(dir) === 2L)
+    assert(LayoutTxn.currentVersion(dir) === v0 + 2)
   }
 }

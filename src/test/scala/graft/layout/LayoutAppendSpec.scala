@@ -20,9 +20,9 @@ class LayoutAppendSpec extends SparkSpec {
 
   private def fresh(tag: String, n: Int): String = {
     val dir = Files.createTempDirectory(s"lapp_$tag").toString + "/lay"
-    DataLayout.writePartitionedSorted(
-      (0 until n).map(i => (i, s"base_$i")).toDF("pt", "v"), dir,
-      Seq("pt"), Seq("v"))
+    LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir, 0L), Seq(
+      LayoutTxn.Group("", (0 until n).map(i => (i, s"base_$i")).toDF("pt", "v"),
+        "pt", Seq("v"), (0 until n).map(i => s"pt=$i"))))
     dir
   }
 
@@ -38,7 +38,7 @@ class LayoutAppendSpec extends SparkSpec {
   test("appends stack as runs: reads union, prior files untouched, new dir holds only the batch") {
     val dir = fresh("stack", 3)
     val base = state(dir)
-    // fingerprint the root partition files BEFORE any append
+    // fingerprint the base commit's files BEFORE any append
     def files(root: String): Map[String, Long] = {
       val b = Map.newBuilder[String, Long]
       java.nio.file.Files.walk(Paths.get(root)).forEach { p =>
@@ -47,18 +47,18 @@ class LayoutAppendSpec extends SparkSpec {
       }
       b.result()
     }
-    val before = files(dir).filter(!_._1.contains("_lv"))
+    val before = files(s"$dir/_lv1")
     append(dir, Seq((0, "a0"), (1, "a1")))
     append(dir, Seq((0, "b0")))
     assert(state(dir) === base ++ Set((0, "a0"), (1, "a1"), (0, "b0")),
       "reads must union base + every run")
-    // O(batch) file-level claim: _lv1 holds exactly the first batch's
-    // rows, _lv2 exactly the second's — the base was never rewritten
-    assert(spark.read.parquet(s"$dir/_lv1").count() === 2L)
-    assert(spark.read.parquet(s"$dir/_lv2").count() === 1L)
-    val after = files(dir).filter(!_._1.contains("_lv"))
+    // O(batch) file-level claim: _lv2 holds exactly the first batch's
+    // rows, _lv3 exactly the second's — the base was never rewritten
+    assert(spark.read.parquet(s"$dir/_lv2").count() === 2L)
+    assert(spark.read.parquet(s"$dir/_lv3").count() === 1L)
+    val after = files(s"$dir/_lv1")
     assert(after === before, "append must not touch any pre-existing file")
-    assert(LayoutTxn.ownerCount(dir) === 3) // root + two run dirs
+    assert(LayoutTxn.ownerCount(dir) === 3) // base + two run dirs
   }
 
   test("a REPLACE of a multi-run partition materializes it to one run; others keep theirs") {
@@ -83,14 +83,14 @@ class LayoutAppendSpec extends SparkSpec {
     append(dir, Seq((0, "b0")))
     val before = state(dir)
     assert(LayoutTxn.ownerCount(dir) === 3)
-    LayoutTxn.compactStale(spark, dir, Map("" -> Seq("v")), maxOwners = 1,
-      txnGraceMs = 0L)
+    val v = LayoutTxn.compactStale(spark, dir, Map("" -> Seq("v")),
+      maxOwners = 1, txnGraceMs = 0L)
     assert(LayoutTxn.ownerCount(dir) === 1)
     assert(state(dir) === before, "folding runs must not change contents")
     assert(LayoutTxn.resolve(dir, "", "pt")
       .groupBy(_._1).forall(_._2.size == 1), "every partition single-run")
     LayoutTxn.begin(dir, 0L); LayoutTxn.begin(dir, 0L)
-    (1 to 2).foreach { k =>
+    (1L until v).foreach { k =>
       assert(!Files.exists(Paths.get(dir, s"_lv$k")),
         s"fully-folded run dir _lv$k must be swept")
     }
@@ -98,12 +98,13 @@ class LayoutAppendSpec extends SparkSpec {
 
   test("append commits survive the crash/roll-forward path and carry batchId") {
     val dir = fresh("crash", 2)
+    val v0 = LayoutTxn.currentVersion(dir)
     // stage+claim an append commit, then 'crash' before publish: write
     // the claim by hand from a real commit's shape via the public API,
     // then verify a replayed begin() rolls it forward idempotently
     append(dir, Seq((0, "a0")))
     val v1 = LayoutTxn.currentVersion(dir)
-    assert(v1 === 1L)
+    assert(v1 === v0 + 1)
     // batchId rides an append commit like any other
     LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir, 0L), Seq(
       LayoutTxn.Group("", Seq((1, "s1")).toDF("pt", "v"), "pt", Seq("v"),

@@ -13,8 +13,8 @@ import graft.SparkSpec
   *     file ONCE and then read only immutable directories — a reader
   *     overlapping any number of commits sees exactly the partition set of
   *     the version it resolved, never a mix.
-  *  2. `_lv<k>` dirs are never modified after their rename; root dirs are
-  *     never modified after the version file exists (commits only repoint
+  *  2. `_lv<k>` dirs are never modified after their rename, including
+  *     the ones later commits leave partly mapped (commits only repoint
   *     the map).
   *  3. Tombstone grace reclamation never deletes a snapshot a within-grace
   *     reader resolved — phase 1 only plants the marker; deletion needs the
@@ -56,9 +56,9 @@ class LayoutIsolationSpec extends SparkSpec {
 
   test("immutability: committed _lv dirs and mapped root dirs are bit-for-bit identical across later commits") {
     val dir = newDir("iso_immutable")
-    // version-0 root layout, then v1 touches ONLY p=0 — p=1 stays a root dir
-    DataLayout.writePartitionedSorted(
-      Seq((0, 0L), (1, 0L)).toDF("p", "id"), dir, Seq("p"), Seq("id"))
+    // v1 writes both partitions, then v2 touches ONLY p=0 — p=1 stays
+    // mapped to _lv1
+    LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir), bothParts(0L))
     LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir), Seq(
       LayoutTxn.Group("", Seq((0, 1L)).toDF("p", "id"), "p", Seq("id"), Seq("p=0"))))
     // DATA immutability: every regular file keeps its bytes and mtime.
@@ -72,17 +72,17 @@ class LayoutIsolationSpec extends SparkSpec {
           !p.endsWith("_superseded"))
         .map(p => (p, Files.size(Paths.get(p)),
           Files.getLastModifiedTime(Paths.get(p))))
+    val lv2 = fingerprint(s"$dir/_lv2")
     val lv1 = fingerprint(s"$dir/_lv1")
-    val rootP1 = fingerprint(s"$dir/p=1")
-    // v2 replaces p=0 again; v3 replaces both (p=1 finally leaves the root)
+    // v3 replaces p=0 again; v4 replaces both (p=1 finally leaves _lv1)
     LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir), Seq(
       LayoutTxn.Group("", Seq((0, 2L)).toDF("p", "id"), "p", Seq("id"), Seq("p=0"))))
+    assert(fingerprint(s"$dir/_lv2") === lv2,
+      "_lv2 must never be modified after its rename")
     assert(fingerprint(s"$dir/_lv1") === lv1,
-      "_lv1 must never be modified after its rename")
-    assert(fingerprint(s"$dir/p=1") === rootP1,
-      "a mapped root dir must never be modified — commits only repoint the map")
+      "a mapped dir must never be modified — commits only repoint the map")
     LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir), bothParts(3L))
-    assert(fingerprint(s"$dir/_lv1") === lv1)
+    assert(fingerprint(s"$dir/_lv2") === lv2)
     assert(snapshotOf(dir) === Seq(0 -> 3L, 1 -> 3L))
   }
 

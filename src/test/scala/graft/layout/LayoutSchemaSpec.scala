@@ -12,9 +12,7 @@ import graft.{JobCounter, SparkSpec}
 
 /** The commit record carries what a read needs to plan: a commit id per
   * published version and the schema each live owner wrote. Reads of
-  * committed owners plan without a Spark job; owners with no recorded
-  * schema (root dirs, pre-change version files) infer from footers and
-  * read back the same rows and schema. */
+  * committed owners plan without a Spark job. */
 class LayoutSchemaSpec extends SparkSpec {
   import spark.implicits._
 
@@ -93,37 +91,6 @@ class LayoutSchemaSpec extends SparkSpec {
     val df = LayoutTxn.readSnapshot(spark, snap, "", "p")
     assert(df.schema("id").dataType === org.apache.spark.sql.types.LongType)
     assert(rowsOf(df) === Seq((0, 1L), (1, 2L), (2, 3L)))
-  }
-
-  test("a version file without owner schemas (the older format) reads back the same rows and schema by inference") {
-    val dir = newDir("lschema_legacy")
-    commitRows(dir, Seq((0, 1L), (1, 2L)).toDF("p", "id")
-      .withColumn("tags", array(lit("a"), lit("b"))), Seq(0, 1))
-    commitRows(dir, Seq((1, 3L)).toDF("p", "id")
-      .withColumn("tags", array(lit("c"))), Seq(1))
-    val recorded = LayoutTxn.readLayout(spark, dir, "", "p")
-    val want = recorded.orderBy("p", "id").collect().toSeq
-    // strip the keys this format added, as a version file written before
-    // them would look
-    val pr = versionProps(dir)
-    pr.stringPropertyNames().asScala
-      .filter(k => k == "commit" || k.matches("""sub\.\d+\.owner\.\d+"""))
-      .foreach(pr.remove)
-    val out = Files.newOutputStream(Paths.get(dir, "_layout_version"))
-    try pr.store(out, "older format") finally out.close()
-    val snap = LayoutTxn.snapshot(dir)
-    assert(snap.commitId.isEmpty && snap.ownerSchemas.isEmpty)
-    val (inferred, jobs) = JobCounter.during(spark)(
-      LayoutTxn.readSnapshot(spark, snap, "", "p"))
-    assert(jobs > 0, "the fallback should infer the schema from footers")
-    assert(inferred.schema === recorded.schema)
-    assert(inferred.orderBy("p", "id").collect().toSeq === want)
-    // the next commit records owner schemas again — for its own owner only
-    commitRows(dir, Seq((0, 5L)).toDF("p", "id")
-      .withColumn("tags", array(lit("d"))), Seq(0))
-    assert(ownerKeys(dir) === Set("" -> 3L))
-    assert(rowsOf(LayoutTxn.readLayout(spark, dir, "", "p")) ===
-      Seq((0, 5L), (1, 3L)))
   }
 
   test("after compactStale the version file holds schema entries for live owners only") {

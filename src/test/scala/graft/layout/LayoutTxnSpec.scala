@@ -12,8 +12,8 @@ import graft.SparkSpec
   * crash/claim fabrication: the protocol's failure states are fabricated on
   * disk exactly as a crashed or racing writer would leave them, then the
   * recovery/conflict behavior is asserted. The r15 format's observables:
-  * committed data lives in IMMUTABLE `_lv<n>` version dirs (plus untouched
-  * version-0 root dirs), the `_layout_version` map names each partition's
+  * committed data lives in IMMUTABLE `_lv<n>` version dirs, the
+  * `_layout_version` map names each partition's
   * owning version, and reads go through [[LayoutTxn.readLayout]] — a plain
   * hive read skips the `_`-prefixed version dirs BY DESIGN (that is what
   * makes them invisible while staged and immutable once published).
@@ -103,26 +103,6 @@ class LayoutTxnSpec extends SparkSpec {
     // no stage residue beyond the immutable history files
     val names = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(!names.exists(_.startsWith("_lstage_")), s"stage residue in $names")
-  }
-
-  test("a plain-rebuilt (version-0) layout commits its first delta: untouched ROOT partitions stay mapped at version 0 and are never rewritten") {
-    val dir = newDir("ltxn_v0")
-    // the writeIvfLayout shape: a full rebuild writes plain hive dirs, no
-    // version file — the pre-protocol / freshly-rebuilt state
-    DataLayout.writePartitionedSorted(rows(0 -> 1L, 1 -> 2L), dir, Seq("p"), Seq("id"))
-    assert(LayoutTxn.currentVersion(dir) === 0L)
-    val rootP1 = Files.list(Paths.get(s"$dir/p=1")).toArray.toSeq
-      .map(_.toString).sorted
-      .map(p => p -> Files.getLastModifiedTime(Paths.get(p)))
-    LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir),
-      Seq(group(rows(0 -> 9L), Seq(0))))
-    val m = LayoutTxn.resolve(dir, "", "p").toMap
-    assert(m("p=0").contains("_lv1"))
-    assert(m("p=1") === s"$dir/p=1", "untouched root partition reads in place")
-    assert(Files.list(Paths.get(s"$dir/p=1")).toArray.toSeq
-      .map(_.toString).sorted
-      .map(p => p -> Files.getLastModifiedTime(Paths.get(p))) === rootP1)
-    assert(readIds(dir) === Seq(0 -> 9L, 1 -> 2L))
   }
 
   test("racing writers against one parent: exactly one wins the CAS, the loser conflicts with its stage cleaned") {
@@ -265,32 +245,17 @@ class LayoutTxnSpec extends SparkSpec {
     assert(readIds(dir) === Seq(0 -> 9L, 1 -> 20L))
   }
 
-  test("an emptied version-0 ROOT partition of a mapped sub is reclaimed the same two-phase way") {
-    val dir = newDir("ltxn_rootreclaim")
-    DataLayout.writePartitionedSorted(rows(0 -> 1L, 1 -> 2L), dir, Seq("p"), Seq("id"))
-    // v1 empties p=1 (empty replacement): the root dir leaves the map but
-    // stays on disk
-    LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir),
-      Seq(group(rows(0 -> 1L).filter(col("p") === 99), Seq(1))))
-    assert(livedParts(dir) === Set("p=0"))
-    assert(Files.isDirectory(Paths.get(s"$dir/p=1")), "immutable until swept")
-    LayoutTxn.begin(dir, graceMs = 3600000L) // phase 1: tombstone
-    assert(Files.isDirectory(Paths.get(s"$dir/p=1")))
-    LayoutTxn.begin(dir, graceMs = 0L)       // phase 2: delete
-    assert(!Files.exists(Paths.get(s"$dir/p=1")))
-    assert(readIds(dir) === Seq(0 -> 1L))
-  }
-
   test("a pre-partcol claim (no group.i.partcol) rolls forward WITHOUT dropping untouched root partitions — the column derives from the touched names") {
     val dir = newDir("ltxn_oldclaim")
-    // version-0 root layout with TWO partitions; a legacy claim touching
-    // only p=0 must not orphan the untouched root p=1 (the advisory's
-    // upgrade-path data-loss scenario: partcol "" listed zero root parts)
-    DataLayout.writePartitionedSorted(rows(0 -> 1L, 1 -> 2L), dir, Seq("p"), Seq("id"))
-    fabricateClaimedCommit(dir, 1L, rows(0 -> 9L), Seq(0), partcol = None)
-    assert(LayoutTxn.begin(dir, graceMs = 0L) === 1L)
+    // a first commit with TWO partitions; a legacy claim touching only
+    // p=0 must not orphan the untouched p=1 (the advisory's upgrade-path
+    // data-loss scenario: a partcol of "" dropped every untouched part)
+    LayoutTxn.commit(spark, dir, LayoutTxn.begin(dir),
+      Seq(group(rows(0 -> 1L, 1 -> 2L), Seq(0, 1))))
+    fabricateClaimedCommit(dir, 2L, rows(0 -> 9L), Seq(0), partcol = None)
+    assert(LayoutTxn.begin(dir, graceMs = 0L) === 2L)
     assert(readIds(dir) === Seq(0 -> 9L, 1 -> 2L),
-      "untouched root partition must stay mapped after a legacy roll-forward")
+      "untouched partition must stay mapped after a legacy roll-forward")
     assert(livedParts(dir) === Set("p=0", "p=1"))
   }
 

@@ -9,7 +9,7 @@ import graft.text.TextAnalysis
 /** The SQL front door for the RETRIEVAL tier (r18 — VERDICT r17 task 7):
   * `graft_search(dir, query)` / `graft_bm25(dir, query, k)` TVFs injected
   * by [[graft.GraftExtensions]] must equal the Scala-API searches they
-  * wrap, resolve the bucket count from the layout's own `_idx_meta`, cut
+  * wrap, resolve the bucket count from the layout's own commit, cut
   * the BM25 top-k deterministically, and refuse malformed arguments at
   * analysis time. */
 class RetrievalSqlSpec extends SparkSpec {
@@ -32,7 +32,8 @@ class RetrievalSqlSpec extends SparkSpec {
 
   test("graft_search equals searchIndexLayout, bucket count from _idx_meta") {
     // a NON-default bucket count: the SQL caller never states it — the
-    // TVF must read _idx_meta (a wrong count would silently find nothing)
+    // TVF must read the layout's own count (a wrong count would silently
+    // find nothing)
     val dir = freshIndex("search", buckets = 5)
     assert(TextAnalysis.persistedIndexBuckets(dir) === Some(5))
     val sql = spark.sql(
@@ -83,20 +84,5 @@ class RetrievalSqlSpec extends SparkSpec {
     fails(s"SELECT * FROM graft_bm25('$dir', 'cat', 0)", "k must be >= 1")
     fails(s"SELECT * FROM graft_bm25('$dir', 'cat', 1.5)",
       "must be an integer literal")
-  }
-
-  test("a pre-meta index (no _idx_meta) still searches via the writer-default count") {
-    val dir = Files.createTempDirectory("rsql_legacy").toString + "/idx"
-    // index-only write at the default 16 buckets, then strip the meta file
-    // to model a pre-r17 layout
-    TextAnalysis.writeIndexLayout(
-      TextAnalysis.invertedIndex(docs, "doc_id", col("text")), dir)
-    val meta = java.nio.file.Paths.get(dir, "_idx_meta")
-    assert(java.nio.file.Files.deleteIfExists(meta))
-    assert(TextAnalysis.persistedIndexBuckets(dir) === None)
-    val got = spark.sql(
-        s"SELECT doc_id, score FROM graft_search('$dir', 'cat dog') ORDER BY doc_id")
-      .as[(Long, Long)].collect().toSeq
-    assert(got === Seq((1L, 3L), (4L, 2L)))
   }
 }

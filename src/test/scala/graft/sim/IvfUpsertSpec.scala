@@ -33,7 +33,10 @@ class IvfUpsertSpec extends SparkSpec {
       2L -> Seq(0.1f, 0.9f, 0f, 0f),
       3L -> Seq(0f, 0f, 1f, 0.2f),
       4L -> Seq(0f, 0f, 0.1f, 0.9f)), cents, dir)
-    val c3Before = Files.list(Paths.get(s"$dir/cell=3")).toArray.toSeq
+    val v0 = graft.layout.LayoutTxn.currentVersion(dir)
+    val c3Dir = graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
+      .apply("cell=3")
+    val c3Before = Files.list(Paths.get(c3Dir)).toArray.toSeq
       .map(_.toString).sorted
     val c3Mtimes = c3Before.map(p => Files.getLastModifiedTime(Paths.get(p)))
 
@@ -45,25 +48,26 @@ class IvfUpsertSpec extends SparkSpec {
     // touched = old cell of the moved id (0) ∪ new cells (1, 2); NOT 3
     assert(touched === Seq(0, 1, 2))
     // cell0 lost its only row: it must be GONE from the committed snapshot
-    // (the physical root dir stays immutable until begin()'s two-phase
-    // sweep reclaims it — r15 reader snapshot isolation)
+    // (its bytes stay in the immutable build dir until begin()'s
+    // two-phase sweep reclaims that dir — r15 reader snapshot isolation)
     val resolved = graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
     assert(!resolved.contains("cell=0"), "emptied cell must leave the map")
-    // touched cells repoint into the immutable _lv1 version dir;
-    // cell3 stays mapped to its untouched ROOT dir, bit-for-bit intact
-    assert(resolved("cell=1").contains("_lv1"))
-    assert(resolved("cell=2").contains("_lv1"))
-    assert(resolved("cell=3") === s"$dir/cell=3")
-    val c3After = Files.list(Paths.get(s"$dir/cell=3")).toArray.toSeq
+    // touched cells repoint into the next immutable version dir; cell3
+    // stays mapped to its untouched build dir, bit-for-bit intact
+    assert(resolved("cell=1").contains(s"_lv${v0 + 1}"))
+    assert(resolved("cell=2").contains(s"_lv${v0 + 1}"))
+    assert(resolved("cell=3") === c3Dir)
+    val c3After = Files.list(Paths.get(c3Dir)).toArray.toSeq
       .map(_.toString).sorted
     assert(c3After === c3Before)
     assert(c3After.map(p => Files.getLastModifiedTime(Paths.get(p))) === c3Mtimes)
     // final content = fresh assignment of the updated corpus, exactly once per id
     assert(readCells(dir) === Seq(1L -> 2, 2L -> 1, 3L -> 2, 4L -> 3, 5L -> 1))
-    // two begin()s past grace physically reclaim the emptied root dir
+    // two begin()s past grace keep the build dir whole while it still
+    // holds the live cell3 (reclamation is per version dir)
     graft.layout.LayoutTxn.begin(dir, graceMs = 0L)
     graft.layout.LayoutTxn.begin(dir, graceMs = 0L)
-    assert(!Files.exists(Paths.get(s"$dir/cell=0")))
+    assert(Files.exists(Paths.get(c3Dir)))
     assert(readCells(dir) === Seq(1L -> 2, 2L -> 1, 3L -> 2, 4L -> 3, 5L -> 1))
   }
 
@@ -180,14 +184,16 @@ class IvfUpsertSpec extends SparkSpec {
     Similarity.writeIvfLayout(vecs(
       1L -> Seq(0.9f, 0.1f, 0f, 0f),
       2L -> Seq(0f, 0.9f, 0f, 0f)), cents, dir)
+    val built = graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
     val touched = Similarity.ivfUpsertLayout(spark, dir, cents,
       vecs(9L -> Seq(0.8f, 0.2f, 0f, 0f)))
     assert(touched === Seq(0))
     assert(readCells(dir).map(_._1) === Seq(1L, 2L, 9L))
-    // the untouched cell reads in place at the root; only cell=0 repointed
+    // the untouched cell reads in place in the build dir; only cell=0
+    // repointed
     val resolved = graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
-    assert(resolved("cell=1") === s"$dir/cell=1")
-    assert(resolved("cell=0").contains("_lv1"))
+    assert(resolved("cell=1") === built("cell=1"))
+    assert(resolved("cell=0") !== built("cell=0"))
   }
 
   test("a live concurrent committer makes the upsert CONFLICT loudly — the layout is untouched, not interleaved") {
@@ -197,7 +203,9 @@ class IvfUpsertSpec extends SparkSpec {
       2L -> Seq(0.1f, 0.9f, 0f, 0f)), cents, dir)
     // fabricate another writer's FRESH claim for the next version — the
     // state a live upsert mid-commit leaves on disk
-    Files.writeString(Paths.get(dir, "_layout_commit_v1"), "version=1\n")
+    val next = graft.layout.LayoutTxn.currentVersion(dir) + 1
+    Files.writeString(Paths.get(dir, s"_layout_commit_v$next"),
+      s"version=$next\n")
     val before = readCells(dir)
     intercept[graft.layout.LayoutTxn.ConflictException] {
       Similarity.ivfUpsertLayout(spark, dir, cents,
@@ -213,6 +221,7 @@ class IvfUpsertSpec extends SparkSpec {
     Similarity.writeIvfLayout(vecs(
       1L -> Seq(0.9f, 0.1f, 0f, 0f),
       2L -> Seq(0.1f, 0.9f, 0f, 0f)), cents, dir)
+    val v0 = graft.layout.LayoutTxn.currentVersion(dir)
     // the documented caller policy: on ConflictException re-run the upsert
     // against the new current version (each retry re-reads the layout). A
     // FileNotFoundException under the retry is the OTHER documented
@@ -251,7 +260,7 @@ class IvfUpsertSpec extends SparkSpec {
     assert(errs.isEmpty, s"writer died: ${Option(errs.peek()).map(_.toString)}")
     // both deltas composed — one linear history, nothing lost or interleaved
     assert(readCells(dir) === Seq(1L -> 0, 2L -> 1, 10L -> 0, 11L -> 2))
-    assert(graft.layout.LayoutTxn.currentVersion(dir) === 2L,
+    assert(graft.layout.LayoutTxn.currentVersion(dir) === v0 + 2,
       "two commits = two versions, a linear history")
     assert(!new java.io.File(dir).listFiles()
       .exists(_.getName.startsWith("_lstage_")), "no stage residue")

@@ -34,34 +34,41 @@ class IndexCommitCacheSpec extends SparkSpec {
     TextAnalysis.writeIndexLayout(docs, "doc_id", col("text"), dir, 4)
     TextAnalysis.indexDeleteLayout(spark, dir, ids(1L), "doc_id")
     assert(hits(dir, "alpha") === Set(2L, 3L, 5L, 6L))
-    // the rebuild restarts versions at 0, so this delete publishes the
-    // same version number the first one did
+    // the rebuild is the next commit; this delete commits right after it
     TextAnalysis.writeIndexLayout(docs, "doc_id", col("text"), dir, 4)
+    val rebuilt = LayoutTxn.currentVersion(dir)
     TextAnalysis.indexDeleteLayout(spark, dir, ids(2L), "doc_id")
-    assert(LayoutTxn.currentVersion(dir) === 1L)
+    assert(LayoutTxn.currentVersion(dir) === rebuilt + 1)
     assert(hits(dir, "alpha") === Set(1L, 3L, 5L, 6L))
   }
 
   test("a repeated bm25SearchLayout on an unchanged snapshot plans with zero Spark jobs") {
-    val dir = newDir("idx_zero_jobs")
-    TextAnalysis.writeIndexLayout(docs, "doc_id", col("text"), dir, 4)
-    // the rescale rewrites every partition under a committed owner (root
-    // owners would infer), the delete leaves a pending tombstone
-    TextAnalysis.indexRescaleLayout(spark, dir, 2)
-    TextAnalysis.indexDeleteLayout(spark, dir, ids(6L), "doc_id")
     val terms = Seq("alpha", "delta")
-    val first = TextAnalysis.bm25SearchLayout(spark, dir, terms)
-      .orderBy("doc_id").collect().toSeq
-    val (again, jobs) = JobCounter.during(spark)(
-      TextAnalysis.bm25SearchLayout(spark, dir, terms))
-    assert(jobs === 0, "a warm search planned with Spark jobs")
-    assert(again.orderBy("doc_id").collect().toSeq === first)
-    val want = TextAnalysis.bm25(docs.filter(col("doc_id") =!= 6L), "doc_id",
-      col("text"), terms)
     def trunc(df: org.apache.spark.sql.DataFrame) =
       df.select(col("doc_id"), (floor(col("bm25") * 1e6) / 1e6).as("s"))
         .orderBy("doc_id").collect().toSeq
-    assert(trunc(again) === trunc(want))
+    def warmSearch(dir: String, live: org.apache.spark.sql.DataFrame)
+        : Unit = {
+      val first = TextAnalysis.bm25SearchLayout(spark, dir, terms)
+        .orderBy("doc_id").collect().toSeq
+      val (again, jobs) = JobCounter.during(spark)(
+        TextAnalysis.bm25SearchLayout(spark, dir, terms))
+      assert(jobs === 0, s"a warm search of $dir planned with Spark jobs")
+      assert(again.orderBy("doc_id").collect().toSeq === first)
+      assert(trunc(again) ===
+        trunc(TextAnalysis.bm25(live, "doc_id", col("text"), terms)))
+    }
+    // a build alone: every owner is a commit with a recorded schema
+    val built = newDir("idx_zero_jobs_build")
+    TextAnalysis.writeIndexLayout(docs, "doc_id", col("text"), built, 4)
+    warmSearch(built, docs)
+    val dir = newDir("idx_zero_jobs")
+    TextAnalysis.writeIndexLayout(docs, "doc_id", col("text"), dir, 4)
+    // the rescale rewrites every partition, the delete leaves a pending
+    // tombstone
+    TextAnalysis.indexRescaleLayout(spark, dir, 2)
+    TextAnalysis.indexDeleteLayout(spark, dir, ids(6L), "doc_id")
+    warmSearch(dir, docs.filter(col("doc_id") =!= 6L))
     // a new commit is a new key: the deletion shows in N and the hits
     TextAnalysis.indexDeleteLayout(spark, dir, ids(3L), "doc_id")
     val after = TextAnalysis.bm25SearchLayout(spark, dir, terms)

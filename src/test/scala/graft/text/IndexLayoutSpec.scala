@@ -34,7 +34,7 @@ class IndexLayoutSpec extends SparkSpec {
     }
 
   test("layout write is lossless: every (term, df) row survives partitioning") {
-    val back = spark.read.parquet(layoutDir)
+    val back = graft.layout.LayoutTxn.readLayout(spark, layoutDir, "", "tb")
     assert(back.count() === index.count())
     // JVM-side bucket derivation matches the Spark column used at write
     val sample = back.select("term", "tb").as[(String, Long)].take(50)
@@ -60,8 +60,7 @@ class IndexLayoutSpec extends SparkSpec {
       .map(_.stripPrefix("tb=").toLong).toSet
     assert(readBuckets.nonEmpty && readBuckets.subsetOf(expected),
       s"scan read buckets $readBuckets outside the query's $expected")
-    val allBuckets = new java.io.File(layoutDir).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("tb="))
+    val allBuckets = graft.layout.LayoutTxn.resolve(layoutDir, "", "tb").size
     assert(expected.size < allBuckets, "fixture degenerate: nothing to prune")
   }
 
@@ -79,8 +78,8 @@ class IndexLayoutSpec extends SparkSpec {
       df.select("term", "df", "postings")
         .collect().map(r => (r.getString(0), r.getLong(1),
           r.getSeq[Row](2))).toSet
-    // the maintained layout's committed snapshot (touched tb= dirs live in
-    // _lv1, which a plain hive read would skip)
+    // the maintained layout's committed snapshot (its tb= dirs live in
+    // _lv<n> version dirs, which a plain hive read would skip)
     val maintained = canon(
       graft.layout.LayoutTxn.readLayout(spark, d, "", "tb"))
     val rebuilt = canon(TextAnalysis.invertedIndex(docs, "doc_id", col("text")))
@@ -100,7 +99,8 @@ class IndexLayoutSpec extends SparkSpec {
       .toDF("doc_id", "text")
     TextAnalysis.writeIndexLayout(
       TextAnalysis.invertedIndex(base, "doc_id", col("text")), d, buckets = 4)
-    assert(new java.io.File(s"$d/_docmap/dm=1").isDirectory)
+    assert(graft.layout.LayoutTxn.resolve(d, "_docmap", "dm")
+      .exists(_._1 == "dm=1"))
     // upsert doc 5 to empty text: its postings vanish, but the doc stays
     // a corpus member — the doc store keeps ONE sentinel row (tb=-1,
     // len=0) so BM25's N/avg-length over the at-rest index still equal
@@ -127,7 +127,8 @@ class IndexLayoutSpec extends SparkSpec {
       (5L, "gamma delta unique terms"))  // doc 3 = dm=3's SOLE occupant
       .toDF("doc_id", "text")
     TextAnalysis.writeIndexLayout(base, "doc_id", col("text"), d, buckets = 4)
-    assert(new java.io.File(s"$d/_docmap/dm=3").isDirectory)
+    val dm3 = graft.layout.LayoutTxn.resolve(d, "_docmap", "dm").toMap
+      .apply("dm=3")
     TextAnalysis.indexDeleteLayout(spark, d,
       Seq(3L, 5L).toDF("doc_id"), "doc_id", buckets = 4)
     // the delete is O(victims): ONE tombstone run appended, no postings
@@ -181,7 +182,7 @@ class IndexLayoutSpec extends SparkSpec {
       "emptied dm= partition must leave the committed snapshot")
     graft.layout.LayoutTxn.begin(d, graceMs = 0L)
     graft.layout.LayoutTxn.begin(d, graceMs = 0L)
-    assert(!new java.io.File(s"$d/_docmap/dm=3").exists(),
+    assert(!new java.io.File(dm3).exists(),
       "swept dm= partition must be deleted from disk")
     // and BM25 is unchanged by the materialization
     val a2 = TextAnalysis.bm25SearchLayout(spark, d, terms, buckets = 4)
@@ -298,9 +299,11 @@ class IndexLayoutSpec extends SparkSpec {
       .toDF("doc_id", "text")
     TextAnalysis.writeIndexLayout(
       TextAnalysis.invertedIndex(base, "doc_id", col("text")), d, buckets = 4)
+    val v0 = graft.layout.LayoutTxn.currentVersion(d)
     // another writer's FRESH claim for the next layout version
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(d, "_layout_commit_v1"), "version=1\n")
+      java.nio.file.Paths.get(d, s"_layout_commit_v${v0 + 1}"),
+      s"version=${v0 + 1}\n")
     def snap(path: String): Set[(String, Long)] =
       graft.layout.LayoutTxn.readLayout(spark, path, "", "tb")
         .select("term", "df").as[(String, Long)].collect().toSet
@@ -319,12 +322,14 @@ class IndexLayoutSpec extends SparkSpec {
       "conflicted upsert must not touch the doc map")
     assert(!new java.io.File(d).listFiles()
       .exists(_.getName.startsWith("_lstage_")), "no stage residue")
-    // withdraw the fabricated claim: the upsert then lands cleanly as v1
-    java.nio.file.Files.delete(java.nio.file.Paths.get(d, "_layout_commit_v1"))
+    // withdraw the fabricated claim: the upsert then lands cleanly as the
+    // next version
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(d, s"_layout_commit_v${v0 + 1}"))
     TextAnalysis.indexUpsertLayout(spark, d,
       Seq((9L, "epsilon zeta")).toDF("doc_id", "text"),
       "doc_id", col("text"), buckets = 4)
-    assert(graft.layout.LayoutTxn.currentVersion(d) === 1L)
+    assert(graft.layout.LayoutTxn.currentVersion(d) === v0 + 1)
     assert(snap(d).map(_._1).contains("epsilon"))
   }
 

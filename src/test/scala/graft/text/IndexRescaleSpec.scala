@@ -13,8 +13,7 @@ import graft.layout.LayoutTxn
   * rescaled ≡ rebuilt-at-new-count (postings AND doc store, sentinels
   * included), searches resolve the new count from the layout itself,
   * maintenance composes across the rescale, batchId/replay protection
-  * survives, the legacy `_idx_meta` copy refreshes, and an explicit
-  * stale caller count is refused loudly. */
+  * survives, and an explicit stale caller count is refused loudly. */
 class IndexRescaleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -105,12 +104,6 @@ class IndexRescaleSpec extends SparkSpec {
     val v0 = LayoutTxn.currentVersion(dir)
     assert(TextAnalysis.indexRescaleLayout(spark, dir, 4) === v0)
     TextAnalysis.indexRescaleLayout(spark, dir, 8)
-    // the legacy meta-file copy refreshed too
-    val pr = new java.util.Properties()
-    val in = java.nio.file.Files.newInputStream(
-      java.nio.file.Paths.get(dir, "_idx_meta"))
-    try pr.load(in) finally in.close()
-    assert(pr.getProperty("buckets") === "8")
     // an explicit caller count from before the rescale must refuse, not
     // silently probe the wrong partitions
     val e = intercept[IllegalArgumentException] {
