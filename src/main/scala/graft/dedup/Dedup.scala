@@ -926,18 +926,8 @@ object Dedup {
                      batch: DataFrame, idCol: String, text: Column,
                      batchId: Long, maxBucketSize: Int = 10000,
                      txnGraceMs: Long = 600000L): Unit = {
-    if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(dir) >= batchId)
-      return // fast path: the PUBLISHED state already has it
-    val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
-    // The authoritative replay check runs AFTER begin(): lastBatchId reads
-    // only the published version state, so a commit that crashed between
-    // its claim CAS and its publish is invisible to the pre-check — begin
-    // rolls that claim forward, and only THEN is the published batchId
-    // trustworthy. Guarding only before begin would re-commit the rolled-
-    // forward batch on top of itself: duplicate band rows, and the batch
-    // colliding with itself in `existing` (ADVICE r16, high).
-    if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(dir) >= batchId)
-      return // the claimed-but-unpublished commit was just rolled forward
+    val parent = graft.layout.LayoutTxn.beginBatch(dir, batchId, txnGraceMs)
+      .getOrElse(return) // a replayed batch
     val p = lshProbe(spark, dir, batch, idCol, text, maxBucketSize)
     // index rows + pair log + _docmap reverse map: ONE commit (r17 adds
     // the map so lshIndexDelete can locate a victim's partitions)
@@ -1072,11 +1062,8 @@ object Dedup {
                         text: Column, batchId: Long, maxDocFreq: Int = 10,
                         minShared: Int = 2,
                         txnGraceMs: Long = 600000L): Unit = {
-    if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(dir) >= batchId)
-      return // fast path: the PUBLISHED state already has it
-    val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
-    if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(dir) >= batchId)
-      return // claim-without-publish window, rolled forward by begin()
+    val parent = graft.layout.LayoutTxn.beginBatch(dir, batchId, txnGraceMs)
+      .getOrElse(return) // a replayed batch
     val p = winnowProbe(spark, dir, batch, idCol, text, maxDocFreq,
       minShared)
     graft.layout.LayoutTxn.commit(spark, dir, parent,
@@ -1260,11 +1247,8 @@ object Dedup {
                          dir: String, batch: DataFrame, idCol: String,
                          text: Column, batchId: Long,
                          txnGraceMs: Long = 600000L): Unit = {
-    if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(dir) >= batchId)
-      return // fast path: the PUBLISHED state already has it
-    val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
-    if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(dir) >= batchId)
-      return // claim-without-publish window, rolled forward by begin()
+    val parent = graft.layout.LayoutTxn.beginBatch(dir, batchId, txnGraceMs)
+      .getOrElse(return) // a replayed batch
     val p = simhashProbe(spark, dir, batch, idCol, text)
     graft.layout.LayoutTxn.commit(spark, dir, parent,
       p.groups(idCol) ++ Seq(graft.layout.LayoutTxn.Group("pairs",

@@ -49,12 +49,13 @@ import org.apache.spark.sql.types.StructType
   * invisible to every read). A reader overlapping any number of commits
   * — a whole [[rebuild]] included — sees exactly the partition set of
   * the version it resolved, never a mix (LayoutIsolationSpec).
-  * Superseded version dirs are reclaimed in
-  * TWO phases by [[begin]]: a dir whose partitions are all unreferenced
-  * is first TOMBSTONED (`_superseded` marker) and only deleted once the
-  * marker is idle past the grace window — a reader that resolved within
-  * the grace period keeps its snapshot on disk (reads longer than the
-  * grace window are out of contract, the standard retention rule).
+  * Superseded version dirs, and superseded partition dirs inside live
+  * ones, are reclaimed in TWO phases by [[begin]]: a dir no map entry
+  * references is first TOMBSTONED (`_superseded` marker) and only
+  * deleted once the marker is idle past the grace window — a reader
+  * that resolved within the grace period keeps its snapshot on disk
+  * (reads longer than the grace window are out of contract, the
+  * standard retention rule).
   */
 object LayoutTxn {
 
@@ -107,6 +108,10 @@ object LayoutTxn {
   private val Tombstone = "_superseded"
   private def subRoot(base: Path, sub: String): Path =
     if (sub.isEmpty) base else base.resolve(sub)
+  /** The `<partCol>=…` partition dirs directly under `root`. */
+  private def partDirs(root: Path, partCol: String): Seq[java.io.File] =
+    Option(root.toFile.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith(s"$partCol="))
 
   /** The version file's content: version, commit ts, and the per-sub
     * partition→owning-version map ([[resolve]]'s input). A dir with no
@@ -195,8 +200,21 @@ object LayoutTxn {
       ownerSchemas: Map[(String, Long), String] = Map.empty)
 
   /** Capture the current committed snapshot of `dir` in one read. A dir
-    * with no committed layout snapshots as version 0 with no subs. */
-  def snapshot(dir: String): LayoutSnapshot =
+    * with no committed layout snapshots as version 0 with no subs. A
+    * version file an older format wrote (a partition owned by the root,
+    * version 0, or no commit id) is refused: its root owners have no
+    * recorded schema and no immutable dir. */
+  def snapshot(dir: String): LayoutSnapshot = {
+    val snap = anySnapshot(dir)
+    require(snap.version == 0L || snap.commitId.nonEmpty &&
+        !snap.maps.valuesIterator.exists(_._2.valuesIterator.exists(_.contains(0L))),
+      s"layout at $dir was written by an older layout format (root " +
+        "partitions or no commit id) — rebuild it with its index writer")
+    snap
+  }
+
+  /** [[snapshot]] without the format check — what [[rebuild]] replaces. */
+  private def anySnapshot(dir: String): LayoutSnapshot =
     readState(dir) match {
       case Some(st) =>
         LayoutSnapshot(dir, st.version, st.batchId, st.props, st.maps,
@@ -241,19 +259,13 @@ object LayoutTxn {
     * subtree: (partition dir name, absolute path), resolved ONCE from
     * the version file — each path is an immutable `_lv<k>` version dir.
     * A sub no commit wrote resolves to nothing. */
-  def resolve(dir: String, sub: String, partCol: String)
-      : Seq[(String, String)] =
-    resolveSnapshot(snapshot(dir), sub, partCol)
+  def resolve(dir: String, sub: String): Seq[(String, String)] =
+    resolveSnapshot(snapshot(dir), sub)
 
   /** [[resolve]] against an already-captured [[LayoutSnapshot]] — no
     * version-file re-read, so facts and partitions stay one snapshot. */
-  def resolveSnapshot(snap: LayoutSnapshot, sub: String, partCol: String)
-      : Seq[(String, String)] =
+  def resolveSnapshot(snap: LayoutSnapshot, sub: String): Seq[(String, String)] =
     resolveOwned(snap, sub).map { case (p, _, path) => p -> path }
-
-  /** The partition dir names the snapshot maps for one sub. */
-  private def liveParts(snap: LayoutSnapshot, sub: String): Seq[String] =
-    snap.maps.get(sub).map(_._2.keys.toSeq.sorted).getOrElse(Seq.empty)
 
   /** [[resolveSnapshot]] with each path's owning version. One entry PER
     * RUN: a multi-run partition resolves to several immutable dirs and a
@@ -319,16 +331,22 @@ object LayoutTxn {
       all.headOption match {
         case Some((p, owner, path)) =>
           scan(owner, baseOf(p, path), Seq(path)).limit(0)
-        case None =>
-          val ddl = snap.schemas.getOrElse(sub, throw new IllegalArgumentException(
-            s"no committed layout at ${snap.dir}" +
-              (if (sub.isEmpty) "" else s" (sub '$sub')") +
-              " — build it with its index writer first"))
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            StructType.fromDDL(ddl))
+        case None => emptyOf(spark, snap, sub)
       }
     }
+  }
+
+  /** `sub` as a typed empty relation, off the schema its last commit
+    * recorded. A sub no commit ever wrote fails loudly. */
+  private def emptyOf(spark: SparkSession, snap: LayoutSnapshot,
+                      sub: String): DataFrame = {
+    val ddl = snap.schemas.getOrElse(sub, throw new IllegalArgumentException(
+      s"no committed layout at ${snap.dir}" +
+        (if (sub.isEmpty) "" else s" (sub '$sub')") +
+        " — build it with its index writer first"))
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType.fromDDL(ddl))
   }
 
   /** LayoutTxn's format over the shared [[CommitLog]] protocol: the
@@ -445,12 +463,15 @@ object LayoutTxn {
     Log.sweepStages(dir, graceMs)
     val now = System.currentTimeMillis()
     // two-phase reclamation of SUPERSEDED immutable dirs: phase 1 plants
-    // a tombstone in any _lv<k> dir no map entry references; phase 2
-    // deletes it once the tombstone is idle past grace — a reader that
-    // resolved within the window keeps its snapshot on disk
+    // a tombstone in any _lv<k> dir, or partition dir inside one, that no
+    // map entry references; phase 2 deletes it once the tombstone is idle
+    // past grace — a reader that resolved within the window keeps its
+    // snapshot on disk
     readState(dir).foreach { st =>
-      val referenced: Set[Long] =
-        st.maps.valuesIterator.flatMap(_._2.valuesIterator.flatten).toSet
+      val referenced: Set[(Long, String, String)] = st.maps.toSeq.flatMap {
+        case (sub, (_, m)) =>
+          m.toSeq.flatMap { case (p, vs) => vs.map(v => (v, sub, p)) }
+      }.toSet
       def sweep(target: java.io.File): Unit = {
         val tomb = new java.io.File(target, Tombstone)
         if (!tomb.exists()) {
@@ -462,15 +483,34 @@ object LayoutTxn {
         } else if (now - tomb.lastModified() >= graceMs)
           CommitLog.deleteRecursively(target)
       }
-      // whole _lv<k> dirs (k < current) with zero referenced partitions
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      // _lv<k> dirs (k < current): whole when no partition is referenced,
+      // else each partition dir of a mapped sub that no entry names
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
         .filter(f => f.isDirectory && f.getName.matches("_lv\\d+"))
         .foreach { f =>
           val k = f.getName.stripPrefix("_lv").toLong
-          if (k < st.version && !referenced.contains(k)) sweep(f)
+          if (k < st.version) {
+            if (!referenced.exists(_._1 == k)) sweep(f)
+            else st.maps.foreach { case (sub, (pc, _)) =>
+              partDirs(subRoot(f.toPath, sub), pc)
+                .filterNot(p => referenced((k, sub, p.getName))).foreach(sweep)
+            }
+          }
         }
     }
     v
+  }
+
+  /** [[begin]] for streaming micro-batch `batchId` (-1 = none): None when
+    * the layout already holds the batch — a replay to skip whole. The
+    * check runs before begin (the fast path) and again after it: a commit
+    * that crashed between its claim and its publish is invisible to
+    * [[lastBatchId]] until begin rolls it forward, and applying its batch
+    * again on top would duplicate its rows. */
+  private[graft] def beginBatch(dir: String, batchId: Long,
+                                graceMs: Long): Option[Long] = {
+    def applied = batchId >= 0 && lastBatchId(dir) >= batchId
+    if (applied) None else Some(begin(dir, graceMs)).filterNot(_ => applied)
   }
 
   /** Stage + CAS-claim + publish one commit of `groups` against `parent`
@@ -489,7 +529,8 @@ object LayoutTxn {
     * recluster). */
   def whole(snap: LayoutSnapshot, groups: Seq[Group]): Seq[Group] =
     groups.map(g =>
-      g.copy(touched = (liveParts(snap, g.sub) ++ g.touched).distinct.sorted))
+      g.copy(touched = (snap.maps.get(g.sub).toSeq.flatMap(_._2.keys) ++
+        g.touched).distinct.sorted))
 
   /** Write a whole layout as ONE commit — the only way a layout comes
     * into being. Each group is its sub's full contents ([[whole]]);
@@ -501,15 +542,20 @@ object LayoutTxn {
   def rebuild(spark: SparkSession, dir: String, groups: Seq[Group],
               props: Map[String, String]): Long = {
     val parent = begin(dir)
-    val snap = snapshot(dir)
+    val snap = anySnapshot(dir)
     val named = groups.map(_.sub).toSet
     val emptied = snap.maps.toSeq.sortBy(_._1).collect {
       case (sub, (pc, m)) if !named(sub) && m.nonEmpty =>
-        Group(sub, readSnapshot(spark, snap, sub, pc).limit(0), pc,
-          Seq.empty, m.keys.toSeq.sorted)
+        Group(sub, emptyOf(spark, snap, sub), pc, Seq.empty, m.keys.toSeq.sorted)
     }
-    commitClaim(spark, dir, parent, whole(snap, groups) ++ emptied, -1L,
-      props, rebuild = true)
+    val v = commitClaim(spark, dir, parent, whole(snap, groups) ++ emptied,
+      -1L, props, rebuild = true)
+    // partition dirs at a sub's root are an older format's (a plain
+    // overwrite build): no read reaches them once this commit owns the
+    // layout, so they go now, as that overwrite's would have
+    (groups ++ emptied).foreach(g => partDirs(subRoot(Paths.get(dir), g.sub),
+      g.partCol).foreach(CommitLog.deleteRecursively))
+    v
   }
 
   private def commitClaim(spark: SparkSession, dir: String, parent: Long,
@@ -540,9 +586,7 @@ object LayoutTxn {
         g.replacement, stageSub.toString, Seq(g.partCol), g.sortCols)
       // partitions the replacement actually produced; a touched partition
       // with no surviving rows becomes a deletion (it leaves the map)
-      val present = Option(stageSub.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith(s"${g.partCol}="))
-        .map(_.getName).toSet
+      val present = partDirs(stageSub, g.partCol).map(_.getName).toSet
       val unexpected = present -- g.touched.toSet
       require(unexpected.isEmpty,
         s"replacement for '${g.sub}' wrote partitions outside its declared " +
@@ -578,9 +622,7 @@ object LayoutTxn {
     * the layout tier (r18, VERDICT r17 task 3). After many incremental
     * commits a layout's live partitions are owned by many distinct
     * immutable dirs: each distinct owner is one more parquet scan unioned
-    * into every read, and a version dir stays ON DISK until every one of
-    * its partitions is superseded (reclamation is whole-dir), so a single
-    * live partition pins a dir's dead bytes indefinitely. This op
+    * into every read. This op
     * rewrites the partitions owned by the OLDEST owners verbatim into one
     * commit until at most `maxOwners` owners remain (the new version
     * counts as one), unpinning the folded dirs for the next [[begin]]'s

@@ -289,19 +289,11 @@ object Similarity {
                       batchId: Long = -1L): Seq[Int] = {
     // exactly-once streaming replay guard (r16, the q200 discipline at
     // the vector tier): a micro-batch at-or-below the recorded id has
-    // already been applied whole — skip it (crash-after-commit window)
-    if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(layoutDir) >= batchId)
-      return Seq.empty // fast path: the PUBLISHED state already has it
-    // roll forward any crashed commit / conflict on a live one BEFORE
-    // reading the layout, and learn the version this commit must succeed
-    val parent = graft.layout.LayoutTxn.begin(layoutDir, txnGraceMs)
-    // authoritative replay check AFTER begin(): a commit that crashed
-    // between claim and publish is invisible to lastBatchId until begin
-    // rolls it forward — re-checking here prevents re-applying the batch
-    // on top of its own rolled-forward commit (ADVICE r16, high; content-
-    // idempotent here but an extra version churns the touched cells)
-    if (batchId >= 0 && graft.layout.LayoutTxn.lastBatchId(layoutDir) >= batchId)
-      return Seq.empty
+    // already been applied whole — skip it. Otherwise roll forward any
+    // crashed commit / conflict on a live one BEFORE reading the layout,
+    // and learn the version this commit must succeed
+    val parent = graft.layout.LayoutTxn.beginBatch(layoutDir, batchId,
+      txnGraceMs).getOrElse(return Seq.empty)
     val existing = graft.layout.LayoutTxn.readLayout(spark, layoutDir, "", "cell")
     // the replacement must carry the layout's FULL schema: writeIvfLayout
     // keeps whatever passenger columns the corpus carried (label, source,

@@ -375,7 +375,7 @@ object TextAnalysis {
 
   private def tombRunsOf(snap: graft.layout.LayoutTxn.LayoutSnapshot)
       : Seq[(String, String)] =
-    graft.layout.LayoutTxn.resolveSnapshot(snap, TombDir, "tr")
+    graft.layout.LayoutTxn.resolveSnapshot(snap, TombDir)
 
   /** One snapshot's pending tombstones in the form its readers consume.
     * [[NoTombs]]: reads stay on their raw, byte-identical plans.
@@ -615,21 +615,14 @@ object TextAnalysis {
                        text: Column, buckets: Int = LayoutResolvedBuckets,
                        txnGraceMs: Long = 600000L,
                        batchId: Long = -1L): Seq[Long] = {
-    if (batchId >= 0 &&
-        graft.layout.LayoutTxn.lastBatchId(layoutDir) >= batchId)
-      return Seq.empty // fast path: the PUBLISHED state already has it
     // roll forward any crashed commit / conflict on a live one BEFORE
     // reading the layout this delta is computed against
-    val parent = graft.layout.LayoutTxn.begin(layoutDir, txnGraceMs)
+    val parent = graft.layout.LayoutTxn.beginBatch(layoutDir, batchId,
+      txnGraceMs).getOrElse(return Seq.empty) // a replayed batch
     // the bucket count resolves AFTER begin() (r18): a rescale committing
     // just before would otherwise leave this window computed at the OLD
     // count; one landing later conflicts at the CAS
     val bks = layoutBuckets(layoutDir, buckets) // layout fact, refuse mismatch
-    // authoritative replay check AFTER begin() (ADVICE r16 high): a
-    // commit crashed between claim and publish is invisible above
-    if (batchId >= 0 &&
-        graft.layout.LayoutTxn.lastBatchId(layoutDir) >= batchId)
-      return Seq.empty
     val delta = invertedIndex(newDocs, idCol, text)
       .withColumn("tb", termBucket(col("term"), bks))
       .transform(graft.util.Cleanup.checkpoint(_))
@@ -706,7 +699,7 @@ object TextAnalysis {
     // the SAME commit — which is what lets a DELETED doc re-enter through
     // an upsert without its new postings being filtered. Entries for docs
     // outside this window stay (their dead postings stay physically too).
-    val tombParts = graft.layout.LayoutTxn.resolve(layoutDir, TombDir, "tr")
+    val tombParts = graft.layout.LayoutTxn.resolve(layoutDir, TombDir)
     val tombGroup =
       if (tombParts.isEmpty) Seq.empty
       else Seq(graft.layout.LayoutTxn.Group(TombDir,

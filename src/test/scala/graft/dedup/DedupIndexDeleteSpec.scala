@@ -148,8 +148,8 @@ class DedupIndexDeleteSpec extends SparkSpec {
     assert(rows(a) === rows(b))
     // the committed snapshots expose the same partition SET: a partition
     // whose every row was a victim's must have left the version map
-    assert(LayoutTxn.resolve(a, "", "sb").map(_._1).toSet ===
-      LayoutTxn.resolve(b, "", "sb").map(_._1).toSet)
+    assert(LayoutTxn.resolve(a, "").map(_._1).toSet ===
+      LayoutTxn.resolve(b, "").map(_._1).toSet)
     def pairs(d: String) = Dedup.simhashIndexUpsert(spark, d, probe,
       "doc_id", col("text")).as[(Long, Long, Long)].collect().toSet
     assert(pairs(a) === pairs(b))

@@ -28,7 +28,7 @@ class LshIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("lsh_idx").toString + "/idx"
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), dir, partitions = 8)
     val v0 = LayoutTxn.currentVersion(dir)
-    val before = LayoutTxn.resolve(dir, "", "lb").toMap
+    val before = LayoutTxn.resolve(dir, "").toMap
     // the delta: a near-clone of doc 1/2 plus an unrelated doc
     val delta = docsOf(
       10L -> "alpha beta gamma delta epsilon theta",
@@ -49,7 +49,7 @@ class LshIndexSpec extends SparkSpec {
     // file-level: untouched lb partitions still resolve to their ORIGINAL
     // (build) dirs; only the batch's partitions repointed into the
     // ingest's version dir
-    val after = LayoutTxn.resolve(dir, "", "lb").toMap
+    val after = LayoutTxn.resolve(dir, "").toMap
     val touched = after.filter { case (_, p) => p.contains(s"_lv${v0 + 1}") }.keySet
     val batchLbs = Dedup.lshProbePartitions(delta, "doc_id", col("text"),
       partitions = 8)

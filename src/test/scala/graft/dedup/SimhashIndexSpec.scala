@@ -33,7 +33,7 @@ class SimhashIndexSpec extends SparkSpec {
     Dedup.writeSimhashIndex(corpus, "doc_id", col("text"), dir,
       maxDist = 2, partitions = 8)
     val v0 = LayoutTxn.currentVersion(dir)
-    val before = LayoutTxn.resolve(dir, "", "sb").toMap
+    val before = LayoutTxn.resolve(dir, "").toMap
     // doc 10 is doc 1 REORDERED: the word-multiset simhash is
     // order-invariant, so its distance to doc 1 is exactly 0 (a one-word
     // swap can flip several of 16 bits — reordering is the deterministic
@@ -63,7 +63,7 @@ class SimhashIndexSpec extends SparkSpec {
         substring(col("sh"), st, ln) }: _*)).as(Seq("band", "bval")))
       .select(pmod(hash(col("band"), col("bval")), lit(8)))
       .distinct().collect().map(_.getInt(0)).toSet
-    val after = LayoutTxn.resolve(dir, "", "sb").toMap
+    val after = LayoutTxn.resolve(dir, "").toMap
     val touched = after.filter { case (_, p) => p.contains(s"_lv${v0 + 1}") }.keySet
     assert(touched === batchSbs.map(b => s"sb=$b"))
     before.foreach { case (part, path) =>

@@ -49,7 +49,7 @@ class WinnowIndexSpec extends SparkSpec {
       "the contained copy must collide with its source")
     // only the batch's fb= partitions repointed; the rest still in the
     // build's dir
-    val after = LayoutTxn.resolve(dir, "", "fb").toMap
+    val after = LayoutTxn.resolve(dir, "").toMap
     val touched = after.filter(_._2.contains(s"_lv${v0 + 1}")).keySet
     assert(touched.nonEmpty && touched.forall(_.startsWith("fb=")))
     after.foreach { case (part, path) =>

@@ -71,7 +71,7 @@ class LayoutAppendSpec extends SparkSpec {
         Seq("v"), Seq("pt=0"))))
     assert(state(dir) === Set((0, "final0"), (1, "base_1"), (1, "a1"),
       (2, "base_2")))
-    val runs = LayoutTxn.resolve(dir, "", "pt")
+    val runs = LayoutTxn.resolve(dir, "")
       .groupBy(_._1).view.mapValues(_.size).toMap
     assert(runs("pt=0") === 1, "replaced partition must be single-run")
     assert(runs("pt=1") === 2, "untouched partition keeps its runs")
@@ -87,7 +87,7 @@ class LayoutAppendSpec extends SparkSpec {
       maxOwners = 1, txnGraceMs = 0L)
     assert(LayoutTxn.ownerCount(dir) === 1)
     assert(state(dir) === before, "folding runs must not change contents")
-    assert(LayoutTxn.resolve(dir, "", "pt")
+    assert(LayoutTxn.resolve(dir, "")
       .groupBy(_._1).forall(_._2.size == 1), "every partition single-run")
     LayoutTxn.begin(dir, 0L); LayoutTxn.begin(dir, 0L)
     (1L until v).foreach { k =>
@@ -113,7 +113,7 @@ class LayoutAppendSpec extends SparkSpec {
     assert(state(dir).contains((1, "s1")))
     // the version map round-trips the multi-run encoding (p:v1|v2)
     append(dir, Seq((0, "c0")))
-    val snap = LayoutTxn.resolve(dir, "", "pt").groupBy(_._1)
+    val snap = LayoutTxn.resolve(dir, "").groupBy(_._1)
     assert(snap("pt=0").size === 3)
   }
 }

@@ -64,12 +64,12 @@ class LayoutCompactSpec extends SparkSpec {
   test("maxOwners > 1 folds the OLDEST owners only; newest stay in place") {
     val dir = build("part", 8, Seq(Seq(0), Seq(1), Seq(2), Seq(3)))
     val before = state(dir)
-    val owned = LayoutTxn.resolve(dir, "", "pt").toMap
+    val owned = LayoutTxn.resolve(dir, "").toMap
     val v = LayoutTxn.compactStale(spark, dir, Map("" -> Seq("v")),
       maxOwners = 2, txnGraceMs = 0L)
     assert(LayoutTxn.ownerCount(dir) === 2)
     assert(state(dir) === before)
-    val after = LayoutTxn.resolve(dir, "", "pt").toMap
+    val after = LayoutTxn.resolve(dir, "").toMap
     // the NEWEST pre-compact owner (holding pt=3) must not move
     assert(after("pt=3") === owned("pt=3"),
       "newest owner's partition must be untouched")

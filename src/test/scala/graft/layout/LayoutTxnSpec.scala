@@ -40,7 +40,7 @@ class LayoutTxnSpec extends SparkSpec {
 
   /** The current snapshot's partition dir names (map keys). */
   private def livedParts(dir: String, sub: String = ""): Set[String] =
-    LayoutTxn.resolve(dir, sub, "p").map(_._1).toSet
+    LayoutTxn.resolve(dir, sub).map(_._1).toSet
 
   /** Fabricate a CLAIMED-but-unpublished commit: stage the replacement and
     * publish the claim file exactly as commit() would, then stop — the
@@ -82,7 +82,7 @@ class LayoutTxnSpec extends SparkSpec {
     assert(ts1 > 0L && ts1 <= System.currentTimeMillis())
     // v1 data lives in the immutable _lv1 dir, invisible to plain hive reads
     assert(Files.isDirectory(Paths.get(s"$dir/_lv1/p=2")))
-    val p2Path = LayoutTxn.resolve(dir, "", "p").toMap.apply("p=2")
+    val p2Path = LayoutTxn.resolve(dir, "").toMap.apply("p=2")
     val p2Before = Files.list(Paths.get(p2Path)).toArray.toSeq
       .map(_.toString).sorted
       .map(p => p -> Files.getLastModifiedTime(Paths.get(p)))
@@ -91,9 +91,9 @@ class LayoutTxnSpec extends SparkSpec {
       Seq(group(rows(0 -> 9L), Seq(0, 1))))
     assert(LayoutTxn.currentVersion(dir) === 2L)
     // emptied partition leaves the MAP (its bytes in _lv1 stay immutable
-    // until the whole dir is unreferenced — reclamation is begin()'s job)
+    // until begin()'s two-phase sweep reclaims them)
     assert(livedParts(dir) === Set("p=0", "p=2"))
-    assert(LayoutTxn.resolve(dir, "", "p").toMap.apply("p=0")
+    assert(LayoutTxn.resolve(dir, "").toMap.apply("p=0")
       .contains("_lv2"), "touched partition must repoint to the new version dir")
     val p2After = Files.list(Paths.get(p2Path)).toArray.toSeq
       .map(_.toString).sorted
@@ -243,6 +243,24 @@ class LayoutTxnSpec extends SparkSpec {
     LayoutTxn.begin(dir, graceMs = 0L)
     assert(!Files.exists(Paths.get(s"$dir/_lv1")))
     assert(readIds(dir) === Seq(0 -> 9L, 1 -> 20L))
+  }
+
+  test("a version file an older format wrote (a root owner, no commit id) is refused loudly; a rebuild replaces it and reclaims its root partitions") {
+    val dir = newDir("ltxn_older")
+    rows(0 -> 1L).write.partitionBy("p").parquet(dir)
+    val pr = new Properties()
+    Seq("version" -> "1", "subs" -> "1", "sub.0.name" -> "",
+      "sub.0.partcol" -> "p", "sub.0.map" -> "p=0:0")
+      .foreach { case (k, v) => pr.setProperty(k, v) }
+    val out = Files.newOutputStream(Paths.get(dir, "_layout_version"))
+    try pr.store(out, null) finally out.close()
+    val e = intercept[IllegalArgumentException](readIds(dir))
+    assert(e.getMessage.contains(s"layout at $dir was written by an older layout format"))
+    assert(LayoutTxn.rebuild(spark, dir, Seq(group(rows(1 -> 2L), Seq(1))),
+      Map.empty) === 2L)
+    assert(readIds(dir) === Seq(1 -> 2L))
+    assert(!Files.exists(Paths.get(dir, "p=0")),
+      "the older format's root partition goes with the rebuild")
   }
 
   test("a pre-partcol claim (no group.i.partcol) rolls forward WITHOUT dropping untouched root partitions — the column derives from the touched names") {

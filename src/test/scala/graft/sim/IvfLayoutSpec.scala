@@ -27,7 +27,7 @@ class IvfLayoutSpec extends SparkSpec {
   test("layout write is lossless and one directory per cell") {
     val back = LayoutTxn.readLayout(spark, layoutDir, "", "cell")
     assert(back.count() === emb.count())
-    val cellDirs = LayoutTxn.resolve(layoutDir, "", "cell").map(_._1).sorted
+    val cellDirs = LayoutTxn.resolve(layoutDir, "").map(_._1).sorted
     val cells = back.select("cell").distinct().as[Int].collect().sorted
     assert(cellDirs.toSeq === cells.toSeq.map(c => s"cell=$c"))
   }
@@ -57,7 +57,7 @@ class IvfLayoutSpec extends SparkSpec {
     // post-execution metrics: only the probed cells' files were read
     val probed = Similarity.probeCells(queries, cents, 2)
       .select("cell").distinct().as[Int].collect()
-    val cellPaths = LayoutTxn.resolve(layoutDir, "", "cell").toMap
+    val cellPaths = LayoutTxn.resolve(layoutDir, "").toMap
     val probedFiles = probed.map(c =>
       DataLayout.fileStats(spark, cellPaths(s"cell=$c"))._1).sum
     assert(scan.metrics("numFiles").value === probedFiles)

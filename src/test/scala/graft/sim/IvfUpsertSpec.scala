@@ -34,8 +34,8 @@ class IvfUpsertSpec extends SparkSpec {
       3L -> Seq(0f, 0f, 1f, 0.2f),
       4L -> Seq(0f, 0f, 0.1f, 0.9f)), cents, dir)
     val v0 = graft.layout.LayoutTxn.currentVersion(dir)
-    val c3Dir = graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
-      .apply("cell=3")
+    val built = graft.layout.LayoutTxn.resolve(dir, "").toMap
+    val c3Dir = built("cell=3")
     val c3Before = Files.list(Paths.get(c3Dir)).toArray.toSeq
       .map(_.toString).sorted
     val c3Mtimes = c3Before.map(p => Files.getLastModifiedTime(Paths.get(p)))
@@ -48,9 +48,9 @@ class IvfUpsertSpec extends SparkSpec {
     // touched = old cell of the moved id (0) ∪ new cells (1, 2); NOT 3
     assert(touched === Seq(0, 1, 2))
     // cell0 lost its only row: it must be GONE from the committed snapshot
-    // (its bytes stay in the immutable build dir until begin()'s
-    // two-phase sweep reclaims that dir — r15 reader snapshot isolation)
-    val resolved = graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
+    // (its dir in the immutable build stays until begin()'s two-phase
+    // sweep reclaims it — r15 reader snapshot isolation)
+    val resolved = graft.layout.LayoutTxn.resolve(dir, "").toMap
     assert(!resolved.contains("cell=0"), "emptied cell must leave the map")
     // touched cells repoint into the next immutable version dir; cell3
     // stays mapped to its untouched build dir, bit-for-bit intact
@@ -63,11 +63,10 @@ class IvfUpsertSpec extends SparkSpec {
     assert(c3After.map(p => Files.getLastModifiedTime(Paths.get(p))) === c3Mtimes)
     // final content = fresh assignment of the updated corpus, exactly once per id
     assert(readCells(dir) === Seq(1L -> 2, 2L -> 1, 3L -> 2, 4L -> 3, 5L -> 1))
-    // two begin()s past grace keep the build dir whole while it still
-    // holds the live cell3 (reclamation is per version dir)
+    // two begin()s past grace physically reclaim the emptied cell's dir
     graft.layout.LayoutTxn.begin(dir, graceMs = 0L)
     graft.layout.LayoutTxn.begin(dir, graceMs = 0L)
-    assert(Files.exists(Paths.get(c3Dir)))
+    assert(!Files.exists(Paths.get(built("cell=0"))))
     assert(readCells(dir) === Seq(1L -> 2, 2L -> 1, 3L -> 2, 4L -> 3, 5L -> 1))
   }
 
@@ -166,7 +165,7 @@ class IvfUpsertSpec extends SparkSpec {
       3L -> Seq(0f, 0f, 1f, 0.2f),
       4L -> Seq(0f, 0f, 0.1f, 0.9f)), cents, dir2)
     assert(readCells(dir) === readCells(dir2))
-    assert(!graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
+    assert(!graft.layout.LayoutTxn.resolve(dir, "").toMap
       .contains("cell=0"), "emptied cell must leave the snapshot")
     // deleting absent ids is a no-op (no commit)
     val v = graft.layout.LayoutTxn.currentVersion(dir)
@@ -184,14 +183,14 @@ class IvfUpsertSpec extends SparkSpec {
     Similarity.writeIvfLayout(vecs(
       1L -> Seq(0.9f, 0.1f, 0f, 0f),
       2L -> Seq(0f, 0.9f, 0f, 0f)), cents, dir)
-    val built = graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
+    val built = graft.layout.LayoutTxn.resolve(dir, "").toMap
     val touched = Similarity.ivfUpsertLayout(spark, dir, cents,
       vecs(9L -> Seq(0.8f, 0.2f, 0f, 0f)))
     assert(touched === Seq(0))
     assert(readCells(dir).map(_._1) === Seq(1L, 2L, 9L))
     // the untouched cell reads in place in the build dir; only cell=0
     // repointed
-    val resolved = graft.layout.LayoutTxn.resolve(dir, "", "cell").toMap
+    val resolved = graft.layout.LayoutTxn.resolve(dir, "").toMap
     assert(resolved("cell=1") === built("cell=1"))
     assert(resolved("cell=0") !== built("cell=0"))
   }

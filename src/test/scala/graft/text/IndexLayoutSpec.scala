@@ -60,7 +60,7 @@ class IndexLayoutSpec extends SparkSpec {
       .map(_.stripPrefix("tb=").toLong).toSet
     assert(readBuckets.nonEmpty && readBuckets.subsetOf(expected),
       s"scan read buckets $readBuckets outside the query's $expected")
-    val allBuckets = graft.layout.LayoutTxn.resolve(layoutDir, "", "tb").size
+    val allBuckets = graft.layout.LayoutTxn.resolve(layoutDir, "").size
     assert(expected.size < allBuckets, "fixture degenerate: nothing to prune")
   }
 
@@ -99,7 +99,7 @@ class IndexLayoutSpec extends SparkSpec {
       .toDF("doc_id", "text")
     TextAnalysis.writeIndexLayout(
       TextAnalysis.invertedIndex(base, "doc_id", col("text")), d, buckets = 4)
-    assert(graft.layout.LayoutTxn.resolve(d, "_docmap", "dm")
+    assert(graft.layout.LayoutTxn.resolve(d, "_docmap")
       .exists(_._1 == "dm=1"))
     // upsert doc 5 to empty text: its postings vanish, but the doc stays
     // a corpus member — the doc store keeps ONE sentinel row (tb=-1,
@@ -127,13 +127,13 @@ class IndexLayoutSpec extends SparkSpec {
       (5L, "gamma delta unique terms"))  // doc 3 = dm=3's SOLE occupant
       .toDF("doc_id", "text")
     TextAnalysis.writeIndexLayout(base, "doc_id", col("text"), d, buckets = 4)
-    val dm3 = graft.layout.LayoutTxn.resolve(d, "_docmap", "dm").toMap
+    val dm3 = graft.layout.LayoutTxn.resolve(d, "_docmap").toMap
       .apply("dm=3")
     TextAnalysis.indexDeleteLayout(spark, d,
       Seq(3L, 5L).toDF("doc_id"), "doc_id", buckets = 4)
     // the delete is O(victims): ONE tombstone run appended, no postings
     // bucket and no doc-store dir rewritten (merge-on-read)
-    assert(graft.layout.LayoutTxn.resolve(d, "_tomb", "tr").nonEmpty,
+    assert(graft.layout.LayoutTxn.resolve(d, "_tomb").nonEmpty,
       "delete must append a tombstone run")
     assert(graft.layout.LayoutTxn.readLayout(spark, d, "", "tb")
       .select(explode(col("postings")).as("p")).select(col("p.doc_id"))
@@ -168,7 +168,7 @@ class IndexLayoutSpec extends SparkSpec {
     // the runs are gone, and doc 3 (dm=3's sole occupant) leaves the
     // snapshot so the two-phase sweep reclaims the dir physically
     TextAnalysis.indexCompactLayout(spark, d, maxOwners = 1, txnGraceMs = 0L)
-    assert(graft.layout.LayoutTxn.resolve(d, "_tomb", "tr").isEmpty,
+    assert(graft.layout.LayoutTxn.resolve(d, "_tomb").isEmpty,
       "materialization must clear the tombstone runs")
     def rawPostings(dir: String) = graft.layout.LayoutTxn
       .readLayout(spark, dir, "", "tb")
@@ -177,7 +177,7 @@ class IndexLayoutSpec extends SparkSpec {
       .as[(String, Long, Long, Long)].collect().toSet
     assert(rawPostings(d) === postings(d2),
       "after materialization the PHYSICAL rows equal the rebuild")
-    assert(!graft.layout.LayoutTxn.resolve(d, "_docmap", "dm")
+    assert(!graft.layout.LayoutTxn.resolve(d, "_docmap")
       .exists(_._1 == "dm=3"),
       "emptied dm= partition must leave the committed snapshot")
     graft.layout.LayoutTxn.begin(d, graceMs = 0L)
@@ -225,7 +225,7 @@ class IndexLayoutSpec extends SparkSpec {
     // doc 2 was the only tombstoned id and the apply cleared its entry in
     // the same commit that removed its postings physically — the runs are
     // empty again, so readers are back on the raw untouched plans
-    assert(graft.layout.LayoutTxn.resolve(d, "_tomb", "tr").isEmpty,
+    assert(graft.layout.LayoutTxn.resolve(d, "_tomb").isEmpty,
       "apply must clear its own victims' tombstone entries")
   }
 
@@ -241,7 +241,7 @@ class IndexLayoutSpec extends SparkSpec {
     TextAnalysis.indexDeleteLayout(spark, d,
       Seq(2L, 4L).toDF("doc_id"), "doc_id")
     TextAnalysis.indexRescaleLayout(spark, d, 7)
-    assert(graft.layout.LayoutTxn.resolve(d, "_tomb", "tr").isEmpty,
+    assert(graft.layout.LayoutTxn.resolve(d, "_tomb").isEmpty,
       "rescale must clear the tombstone runs")
     // physical state == rebuild of the survivors at the new count
     val d2 = Files.createTempDirectory("idx_del_rs2").toString + "/idx"
