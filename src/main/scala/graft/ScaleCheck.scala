@@ -571,7 +571,7 @@ object ScaleCheck {
         dedup.Dedup.writeLshIndex(docs, "doc_id", col("text"), lshDir)
       }
       time(s"index_delete_lsh_${nVict}_victims", nVict) {
-        dedup.Dedup.lshIndexDelete(spark, lshDir, victims, "doc_id")
+        dedup.Dedup.Lsh().delete(spark, lshDir, victims, "doc_id")
       }
       // r18 (VERDICT r17 task 3): the same fixed-victim delete RE-RUN at
       // a doubled partition count after an in-place rescale — the delete
@@ -590,10 +590,10 @@ object ScaleCheck {
           "doc_id")
       }
       time(s"index_delete_rescale_lsh_${nDocs}_docs", nDocs) {
-        dedup.Dedup.lshIndexRescale(spark, lshDir, "doc_id", 32)
+        dedup.Dedup.Lsh().rescale(spark, lshDir, "doc_id", 32)
       }
       time(s"index_delete_lsh_rescaled_${nVict2}_victims", nVict2) {
-        dedup.Dedup.lshIndexDelete(spark, lshDir, victims2, "doc_id")
+        dedup.Dedup.Lsh().delete(spark, lshDir, victims2, "doc_id")
       }
     }
 
@@ -985,7 +985,7 @@ object ScaleCheck {
         partitions = 64)
       val nBatch = batch.count()
       time(s"lsh_ingest_probe_${nCorpus}_corpus", nBatch) {
-        dedup.Dedup.lshIndexUpsert(spark, dir, batch, "doc_id", col("text"))
+        dedup.Dedup.Lsh().upsert(spark, dir, batch, "doc_id", col("text"))
           .count()
         ()
       }
@@ -996,10 +996,10 @@ object ScaleCheck {
         .transform(util.Cleanup.checkpoint(_))
       val nBatch2 = batch2.count()
       time(s"lsh_ingest_rescale_${nCorpus}_corpus", nCorpus) {
-        dedup.Dedup.lshIndexRescale(spark, dir, "doc_id", 128)
+        dedup.Dedup.Lsh().rescale(spark, dir, "doc_id", 128)
       }
       time(s"lsh_ingest_probe_rescaled_${nCorpus}_corpus", nBatch2) {
-        dedup.Dedup.lshIndexUpsert(spark, dir, batch2, "doc_id", col("text"))
+        dedup.Dedup.Lsh().upsert(spark, dir, batch2, "doc_id", col("text"))
           .count()
         ()
       }

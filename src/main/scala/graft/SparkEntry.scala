@@ -73,6 +73,24 @@ object SparkEntry {
   private def ordersMergeTableShared(s: SparkSession, d: String): String =
     sharedFixture("merge_tbl", d)(dir => buildOrdersMergeTable(s, d, s"$dir/t")) + "/t"
 
+  /** Lay `batches` out as single-file parquet micro-batches `<dir>/b<i>`
+    * with increasing mtimes, so a file stream reads them one per trigger,
+    * in order. Returns `dir`. */
+  private def batchFiles(dir: String, batches: Seq[DataFrame]): String = {
+    val files = new java.io.File(dir); files.mkdirs()
+    batches.zipWithIndex.foreach { case (df, i) =>
+      val tmp = s"$dir.tmp$i"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(files, s"b$i.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      dst.setLastModified(1700000000000L + i * 60000L)
+    }
+    dir
+  }
+
   private def copyTree(src: java.io.File, dst: java.io.File): Unit =
     if (src.isDirectory) {
       dst.mkdirs()
@@ -697,7 +715,8 @@ object SparkEntry {
         .filter(col("l_shipdate") < lit("1995-06-01").cast("timestamp"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
           (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("net_price"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
+          col("net_price"))),
 
     // §2.6 ⊕A8: per-group top-k via the bounded-heap `top_k_by` aggregate —
     // k rows per (map task × group) cross the shuffle instead of every row
@@ -1106,7 +1125,8 @@ object SparkEntry {
           Array(col("l_orderkey"), col("l_linenumber")),
           Array(col("l_quantity"), col("l_extendedprice"), col("l_discount")),
           "metric", "val")
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("metric"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber"), col("metric"),
+          col("val"))),
 
     // §2.4: GROUPING SETS beyond rollup/cube — three explicit
     // granularities in ONE pass (one shuffle, partial agg per set);
@@ -3351,7 +3371,7 @@ object SparkEntry {
     // ⊕ INCREMENTAL near-dup ingest against the AT-REST LSH index (r16 —
     // q61's incremental discipline upgraded from exact-hash to NEAR-dup):
     // the fixture indexes 80% of the corpus (writeLshIndex: band buckets
-    // hive-partitioned by a band-bucket hash), then lshIndexUpsert probes
+    // hive-partitioned by a band-bucket hash), then Lsh().upsert probes
     // the remaining 20% batch — reading ONLY the partitions the batch's
     // band keys hash into — returns the batch-vs-corpus candidate pairs,
     // and appends the batch's band rows through the LayoutTxn protocol.
@@ -3365,7 +3385,7 @@ object SparkEntry {
       val base = sharedFixture("lsh_idx", d) { fx =>
         Dedup.writeLshIndex(docs.filter(col("doc_id") % 5 =!= 0), "doc_id",
           col("text"), s"$fx/idx")
-        Dedup.lshIndexUpsert(s, s"$fx/idx",
+        Dedup.Lsh().upsert(s, s"$fx/idx",
             docs.filter(col("doc_id") % 5 === 0), "doc_id", col("text"))
           .coalesce(1).write.mode("overwrite").parquet(s"$fx/pairs")
       }
@@ -3387,7 +3407,7 @@ object SparkEntry {
       val base = sharedFixture("winnow_idx", d) { fx =>
         Dedup.writeWinnowIndex(docs.filter(col("doc_id") % 5 =!= 0),
           "doc_id", col("text"), s"$fx/idx")
-        Dedup.winnowIndexUpsert(s, s"$fx/idx",
+        Dedup.Winnow().upsert(s, s"$fx/idx",
             docs.filter(col("doc_id") % 5 === 0), "doc_id", col("text"))
           .coalesce(1).write.mode("overwrite").parquet(s"$fx/pairs")
       }
@@ -3408,7 +3428,7 @@ object SparkEntry {
       val base = sharedFixture("simhash_idx", d) { fx =>
         Dedup.writeSimhashIndex(docs.filter(col("doc_id") % 5 =!= 0),
           "doc_id", col("text"), s"$fx/idx")
-        Dedup.simhashIndexUpsert(s, s"$fx/idx",
+        Dedup.Simhash.upsert(s, s"$fx/idx",
             docs.filter(col("doc_id") % 5 === 0), "doc_id", col("text"))
           .coalesce(1).write.mode("overwrite").parquet(s"$fx/pairs")
       }
@@ -3508,22 +3528,11 @@ object SparkEntry {
         cents.indices.map(i => (i, cents(i))).toDF("cell", "cw")
           .coalesce(1).write.mode("overwrite").parquet(s"$fx/centroids.parquet")
         // the delta as two single-file micro-batches (vec_id %14: 0 vs 7)
-        val files = new java.io.File(s"$fx/files"); files.mkdirs()
-        Seq(0, 7).zipWithIndex.foreach { case (m, i) =>
-          val tmp = s"$fx/tmp$i"
+        val files = batchFiles(s"$fx/files", Seq(0, 7).map(m =>
           emb.filter(col("vec_id") % 14 === m)
-            .select(col("vec_id"), col("embedding"))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(files, s"b$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(1700000000000L + i * 60000L)
-          ()
-        }
-        graft.streaming.EventStreams.ivfIngestStream(s, files.toString,
-          s"$fx/layout", cents)
+            .select(col("vec_id"), col("embedding"))))
+        graft.streaming.EventStreams.fileIngestStream(s, files,
+          Similarity.ivfUpsertSink(s"$fx/layout", cents))
         marker.createNewFile()
       }
       graft.layout.LayoutTxn.readLayout(s, s"$fx/layout", "", "cell")
@@ -3532,7 +3541,7 @@ object SparkEntry {
     }),
 
     // ⊕K8 × ⊕J25 EXACTLY-ONCE streaming near-dup ingest (r16, q200): a
-    // file stream (one micro-batch per file) drives lshIngestSink — each
+    // file stream (one micro-batch per file) drives Lsh().ingestSink — each
     // batch's index append AND its candidate pairs commit in ONE
     // LayoutTxn CAS keyed by the batchId, so a crash-replayed batch is
     // skipped whole (the two-store atomicity problem solved by sharing
@@ -3545,22 +3554,11 @@ object SparkEntry {
       val base = sharedFixture("lsh_stream", d) { fx =>
         Dedup.writeLshIndex(docs.filter(col("doc_id") % 5 < 3), "doc_id",
           col("text"), s"$fx/idx")
-        val filesDir = new java.io.File(s"$fx/files")
-        filesDir.mkdirs()
-        Seq(3, 4).zipWithIndex.foreach { case (m, i) =>
-          val tmp = s"$fx/tmp$i"
-          docs.filter(col("doc_id") % 5 === m).select("doc_id", "text")
-            .coalesce(1).write.parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(filesDir, s"b$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          dst.setLastModified(1700000000000L + i * 60000L)
-          ()
-        }
-        graft.streaming.EventStreams.lshIngestStream(s, s"$fx/files",
-          s"$fx/idx")
-        Dedup.lshIngestPairs(s, s"$fx/idx")
+        val files = batchFiles(s"$fx/files", Seq(3, 4).map(m =>
+          docs.filter(col("doc_id") % 5 === m).select("doc_id", "text")))
+        graft.streaming.EventStreams.fileIngestStream(s, files,
+          Dedup.Lsh().ingestSink(s"$fx/idx", "doc_id", col("text")))
+        Dedup.ingestPairs(s, s"$fx/idx")
           .select(least(col("a"), col("b")).as("a"),
             greatest(col("a"), col("b")).as("b"))
           .coalesce(1).write.mode("overwrite").parquet(s"$fx/pairs")
@@ -3662,7 +3660,7 @@ object SparkEntry {
 
     // ⊕K8 × ⊕J26 EXACTLY-ONCE streaming contained-copy ingest (r17 —
     // q200's discipline at the fingerprint tier): a file stream drives
-    // winnowIngestSink; each micro-batch's fingerprint rows, its
+    // Winnow().ingestSink; each micro-batch's fingerprint rows, its
     // (a, b, n_shared) pairs, and its reverse-map rows share ONE
     // LayoutTxn CAS keyed by the batchId. The oracle recomputes each
     // batch's pairs with the df-cap over exactly the state THAT batch
@@ -3673,22 +3671,11 @@ object SparkEntry {
       val base = sharedFixture("winnow_stream", d) { fx =>
         Dedup.writeWinnowIndex(docs.filter(col("doc_id") % 5 < 3), "doc_id",
           col("text"), s"$fx/idx")
-        val filesDir = new java.io.File(s"$fx/files")
-        filesDir.mkdirs()
-        Seq(3, 4).zipWithIndex.foreach { case (m, i) =>
-          val tmp = s"$fx/tmp$i"
-          docs.filter(col("doc_id") % 5 === m).select("doc_id", "text")
-            .coalesce(1).write.parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(filesDir, s"b$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          dst.setLastModified(1700000000000L + i * 60000L)
-          ()
-        }
-        graft.streaming.EventStreams.winnowIngestStream(s, s"$fx/files",
-          s"$fx/idx")
-        Dedup.winnowIngestPairs(s, s"$fx/idx")
+        val files = batchFiles(s"$fx/files", Seq(3, 4).map(m =>
+          docs.filter(col("doc_id") % 5 === m).select("doc_id", "text")))
+        graft.streaming.EventStreams.fileIngestStream(s, files,
+          Dedup.Winnow().ingestSink(s"$fx/idx", "doc_id", col("text")))
+        Dedup.ingestPairs(s, s"$fx/idx")
           .select(col("a"), col("b"), col("n_shared"))
           .coalesce(1).write.mode("overwrite").parquet(s"$fx/pairs")
       }
@@ -3706,22 +3693,11 @@ object SparkEntry {
       val base = sharedFixture("simhash_stream", d) { fx =>
         Dedup.writeSimhashIndex(docs.filter(col("doc_id") % 5 < 3),
           "doc_id", col("text"), s"$fx/idx")
-        val filesDir = new java.io.File(s"$fx/files")
-        filesDir.mkdirs()
-        Seq(3, 4).zipWithIndex.foreach { case (m, i) =>
-          val tmp = s"$fx/tmp$i"
-          docs.filter(col("doc_id") % 5 === m).select("doc_id", "text")
-            .coalesce(1).write.parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(filesDir, s"b$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          dst.setLastModified(1700000000000L + i * 60000L)
-          ()
-        }
-        graft.streaming.EventStreams.simhashIngestStream(s, s"$fx/files",
-          s"$fx/idx")
-        Dedup.simhashIngestPairs(s, s"$fx/idx")
+        val files = batchFiles(s"$fx/files", Seq(3, 4).map(m =>
+          docs.filter(col("doc_id") % 5 === m).select("doc_id", "text")))
+        graft.streaming.EventStreams.fileIngestStream(s, files,
+          Dedup.Simhash.ingestSink(s"$fx/idx", "doc_id", col("text")))
+        Dedup.ingestPairs(s, s"$fx/idx")
           .select(col("a"), col("b"), col("dist"))
           .coalesce(1).write.mode("overwrite").parquet(s"$fx/pairs")
       }
@@ -3771,9 +3747,9 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       val base = sharedFixture("lsh_del", d) { fx =>
         Dedup.writeLshIndex(docs, "doc_id", col("text"), s"$fx/idx")
-        Dedup.lshIndexDelete(s, s"$fx/idx",
+        Dedup.Lsh().delete(s, s"$fx/idx",
           docs.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
-        Dedup.lshIndexUpsert(s, s"$fx/idx",
+        Dedup.Lsh().upsert(s, s"$fx/idx",
             docs.filter(col("doc_id") % 5 === 0)
               .select((col("doc_id") + 1000000L).as("doc_id"), col("text")),
             "doc_id", col("text"))
@@ -3791,9 +3767,9 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       val base = sharedFixture("winnow_del", d) { fx =>
         Dedup.writeWinnowIndex(docs, "doc_id", col("text"), s"$fx/idx")
-        Dedup.winnowIndexDelete(s, s"$fx/idx",
+        Dedup.Winnow().delete(s, s"$fx/idx",
           docs.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
-        Dedup.winnowIndexUpsert(s, s"$fx/idx",
+        Dedup.Winnow().upsert(s, s"$fx/idx",
             docs.filter(col("doc_id") % 5 === 0)
               .select((col("doc_id") + 1000000L).as("doc_id"), col("text")),
             "doc_id", col("text"))
@@ -3809,9 +3785,9 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       val base = sharedFixture("simhash_del", d) { fx =>
         Dedup.writeSimhashIndex(docs, "doc_id", col("text"), s"$fx/idx")
-        Dedup.simhashIndexDelete(s, s"$fx/idx",
+        Dedup.Simhash.delete(s, s"$fx/idx",
           docs.filter(col("doc_id") % 5 === 0).select("doc_id"), "doc_id")
-        Dedup.simhashIndexUpsert(s, s"$fx/idx",
+        Dedup.Simhash.upsert(s, s"$fx/idx",
             docs.filter(col("doc_id") % 5 === 0)
               .select((col("doc_id") + 1000000L).as("doc_id"), col("text")),
             "doc_id", col("text"))
@@ -4095,7 +4071,7 @@ object SparkEntry {
     }),
 
     // ⊕J25 RESCALE (r18): the q192 incremental-ingest protocol with a
-    // lshIndexRescale(16 → 7) between the corpus build and the batch
+    // Lsh().rescale(16 → 7) between the corpus build and the batch
     // probe — lb recomputes from the stored (band, bucket) columns, the
     // _docmap re-derives, and the post-rescale probe resolves the new
     // count from the layout itself. The candidate pairs are a function of
@@ -4106,8 +4082,8 @@ object SparkEntry {
       val base = sharedFixture("lsh_rsc", d) { fx =>
         Dedup.writeLshIndex(docs.filter(col("doc_id") % 5 =!= 0), "doc_id",
           col("text"), s"$fx/idx")
-        Dedup.lshIndexRescale(s, s"$fx/idx", "doc_id", 7)
-        Dedup.lshIndexUpsert(s, s"$fx/idx",
+        Dedup.Lsh().rescale(s, s"$fx/idx", "doc_id", 7)
+        Dedup.Lsh().upsert(s, s"$fx/idx",
             docs.filter(col("doc_id") % 5 === 0), "doc_id", col("text"))
           .coalesce(1).write.mode("overwrite").parquet(s"$fx/pairs")
       }
@@ -4124,7 +4100,7 @@ object SparkEntry {
       """SELECT l_orderkey, l_linenumber, l_returnflag,
         |  l_extendedprice * (1 - l_discount) AS net_price
         |FROM lineitem WHERE l_shipdate < TIMESTAMP '1995-06-01'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber, l_returnflag, net_price""".stripMargin,
 
     "q02_lookup_join" ->
       s"""SELECT r_name, count(*) AS n_cust, ${sqlDsum("c_acctbal", 18, 2)} AS total_bal
@@ -4488,7 +4464,7 @@ object SparkEntry {
         |SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM f
         |UNION ALL
         |SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM f
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber, metric, val""".stripMargin,
 
     "q70_grouping_sets" ->
       s"""SELECT coalesce(l_returnflag, '<all>') AS rf,

@@ -1,9 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.layout.LayoutTxn
 import graft.ops.Relational
 import graft.text.TextAnalysis
 
@@ -47,7 +49,6 @@ object Dedup {
     * Returns (id, fp, survivor, n_copies, is_survivor), survivor = min id
     * of the cluster. */
   def canonicalDedupMap(docs: DataFrame, idCol: String, text: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val canon = trim(regexp_replace(
       regexp_replace(lower(coalesce(text, lit(""))), "[^a-z\\s]", " "),
       "\\s+", " "))
@@ -116,11 +117,7 @@ object Dedup {
                     maxBucketSize: Int = 10000,
                     minAgree: Int = 0): DataFrame = {
     val numHashes = bands * rowsPerBand
-    val bandCols = (0 until bands).map { b =>
-      val hs = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), concat_ws("_", hs: _*).as("bucket"))
-    }
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")
+    val w = Window.partitionBy("band", "bucket")
     // localCheckpoint (not cache): the sized bucket table feeds THREE
     // consumers — both sides of the self-join below and the star-edge
     // branch (and every CC iteration downstream) — without reuse the whole
@@ -140,7 +137,7 @@ object Dedup {
     val sigCols =
       if (minAgree > 0) Seq(array((0 until numHashes).map(i => col(s"h$i")): _*).as("__sig"))
       else Nil
-    val sized = sig.select(col(idCol) +: explode(array(bandCols: _*)).as("bb") +: sigCols: _*)
+    val sized = sig.select(col(idCol) +: explode(lshBands(bands, rowsPerBand)).as("bb") +: sigCols: _*)
       .select(col(idCol) +: col("bb.band").as("band") +: col("bb.bucket").as("bucket") +:
         sigCols.map(_ => col("__sig")): _*)
       .withColumn("__bsz", count(lit(1)).over(w))
@@ -165,6 +162,14 @@ object Dedup {
       .select(col("__bmin").as("a"), col(idCol).as("b"))
     smallPairs.union(starPairs).distinct()
   }
+
+  /** A minhash signature's LSH bands: one (band, bucket) struct per band,
+    * `bucket` the band's `rowsPerBand` hashes joined by `_`. */
+  private def lshBands(bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      val hs = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
+      struct(lit(b).as("band"), concat_ws("_", hs: _*).as("bucket"))
+    }: _*)
 
   /** MinHash-estimate prefilter between candidate generation and exact
     * verification: keep only pairs whose signatures agree on at least
@@ -367,7 +372,6 @@ object Dedup {
     * degenerate toward n²; sample or shard the corpus first. */
   def prefixFilterJaccard(docs: DataFrame, idCol: String, text: Column,
                           threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // tokenization feeds df counting AND the ordered join; prefixes feed
     // both sides of the candidate self-join — materialize each once
     val wd = docs.select(col(idCol).as("__id"),
@@ -598,712 +602,376 @@ object Dedup {
     definiteNew.unionByName(verifiedNew).drop("__fp")
   }
 
-  /** The minhash band-bucket rows behind [[writeLshIndex]]: one row per
-    * (doc, band) with the band's concatenated hash bucket and the hive
-    * partition key `lb = pmod(hash(band, bucket), partitions)`. */
-  private def lshBandRows(sig: DataFrame, idCol: String, bands: Int,
-                          rowsPerBand: Int, partitions: Int): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      val hs = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), concat_ws("_", hs: _*).as("bucket"))
-    }
-    sig.select(col(idCol), explode(array(bandCols: _*)).as("bb"))
-      .select(col(idCol), col("bb.band").as("band"),
-        col("bb.bucket").as("bucket"))
-      .withColumn("lb", pmod(hash(col("band"), col("bucket")), lit(partitions)))
-  }
-
-  // ---- id → index-partition reverse map ("_docmap", r17) -------------------
-  // Every dedup ingest index keeps a tiny doc store beside its rows: one
-  // (id, pb) row per index partition holding that id's rows, hive-
-  // partitioned by dm = hash(id) mod partitions. Without it, DELETE(ids)
-  // cannot find the partitions holding a victim's rows short of scanning
-  // the whole index (a doc's band/fingerprint partitions are functions of
+  // ---- at-rest near-dup indexes: three tiers, one lifecycle -----------------
+  // An index tier is a value: its layout (partition column, in-partition
+  // sort keys), its index rows computed from docs plus the layout facts,
+  // and its corpus×batch pair algebra. Build, probe+append, streaming
+  // ingest, delete, rescale and compact are written once over it.
+  //
+  // Every tier keeps a tiny doc store beside its rows, the `_docmap`
+  // reverse map (r17): one (id, pb) row per index partition holding that
+  // id's rows, hive-partitioned by dm = hash(id) mod partitions. Without
+  // it, DELETE(ids) cannot find the partitions holding a victim's rows
+  // short of scanning the whole index (a doc's partitions are functions of
   // its TEXT, which a delete no longer has) — the same reason the ⊕A53
-  // inverted-index layout keeps its doc store (VERDICT r16 task 2). The
-  // map rides the SAME LayoutTxn commit as the index rows, so the two can
-  // never diverge under a crash or a racing writer.
+  // inverted-index layout keeps its doc store. The map rides the SAME
+  // LayoutTxn commit as the index rows, so the two never diverge under a
+  // crash or a racing writer.
   private val DedupDocMap = "_docmap"
 
-  private def dedupDocMapRows(rows: DataFrame, idCol: String, pCol: String,
-                              partitions: Int): DataFrame =
-    rows.select(col(idCol), col(pCol).cast("int").as("pb")).distinct()
-      .withColumn("dm", pmod(hash(col(idCol)), lit(partitions)))
+  /** A near-dup index tier: [[Lsh]] (minhash band buckets, whole-doc
+    * Jaccard), [[Winnow]] (winnowing fingerprints, contained copies) or
+    * [[Simhash]] (pigeonhole bands, Hamming distance). Each is built by its
+    * `write*Index` builder, whose hashing parameters and partition count
+    * are commit props — the layout facts every probe, delete and rescale
+    * reads back from the snapshot instead of trusting caller arguments (a
+    * probe with different parameters would silently find nothing).
+    *
+    * Every partition key is `hash(keys) mod partitions` over STORED row
+    * columns (`lb = hash(band, bucket)`, `fb = hash(fp)`, `sb = hash(band,
+    * bval)`), so a rescale is a column rewrite over the index rows and the
+    * corpus text is never re-read. */
+  sealed abstract class Tier(builder: String, pCol: String,
+                             keys: Seq[String]) {
 
-  /** A whole dedup index as commit groups: its rows partitioned by
-    * `pCol` and their `_docmap`, both over `0 until partitions`. */
-  private def dedupGroups(rows: DataFrame, idCol: String, pCol: String,
-                          sortCols: Seq[String], partitions: Int)
-      : Seq[graft.layout.LayoutTxn.Group] = {
-    val parts = 0 until partitions
-    Seq(graft.layout.LayoutTxn.Group("", rows, pCol, sortCols,
-        parts.map(b => s"$pCol=$b")),
-      graft.layout.LayoutTxn.Group(DedupDocMap,
-        dedupDocMapRows(rows, idCol, pCol, partitions), "dm",
-        Seq("pb", idCol), parts.map(b => s"dm=$b")))
+    /** The index rows of `docs` without their partition key, hashing
+      * parameters from `fact`. */
+    protected def stored(docs: DataFrame, idCol: String, text: Column,
+                         fact: String => Int): DataFrame
+
+    /** Candidate pairs (corpus id `a`, batch id `b`, tier columns) between
+      * the probed corpus rows and a batch's rows. */
+    protected def pairsOf(corpus: DataFrame, batch: DataFrame, idCol: String,
+                          fact: String => Int): DataFrame
+
+    private def sortCols(idCol: String): Seq[String] = keys :+ idCol
+
+    private def partition(n: Int): Column =
+      pmod(hash(keys.map(col): _*), lit(n))
+
+    private def parts(c: String, ids: Seq[Int]): Seq[String] =
+      ids.map(b => s"$c=$b")
+
+    /** The index rows of `docs` with their partition key. */
+    private[dedup] def rows(docs: DataFrame, idCol: String, text: Column,
+                            fact: String => Int): DataFrame =
+      stored(docs, idCol, text, fact)
+        .withColumn(pCol, partition(fact("partitions")))
+
+    /** A whole index as commit groups: its rows partitioned by the tier's
+      * column and their `_docmap`, both over `0 until partitions`. */
+    private[Dedup] def groups(rows: DataFrame, idCol: String,
+                              partitions: Int): Seq[LayoutTxn.Group] =
+      Seq(LayoutTxn.Group("", rows, pCol, sortCols(idCol),
+          parts(pCol, 0 until partitions)),
+        LayoutTxn.Group(DedupDocMap, docMapRows(rows, idCol, partitions),
+          "dm", Seq("pb", idCol), parts("dm", 0 until partitions)))
+
+    private def docMapRows(rows: DataFrame, idCol: String,
+                           partitions: Int): DataFrame =
+      rows.select(col(idCol), col(pCol).cast("int").as("pb")).distinct()
+        .withColumn("dm", pmod(hash(col(idCol)), lit(partitions)))
+
+    /** The index's persisted id type: victims and batches are cast to it
+      * before hashing, because Murmur3 of an INT 5 differs from a LONG 5 —
+      * a narrower caller type would land (or probe) the wrong dm= partition
+      * and a delete would silently miss. */
+    private def idType(spark: SparkSession, dir: String, idCol: String) =
+      LayoutTxn.readLayout(spark, dir, DedupDocMap, "dm").schema(idCol).dataType
+
+    /** The shared probe behind [[upsert]] and [[ingestBatch]]: compute the
+      * batch's rows from the snapshot's facts, read ONLY the partitions they
+      * hash into (driver-pruned immutable dirs — snapshot isolated, so the
+      * returned pair plan stays valid across later ingests), and pair
+      * corpus × batch. Returns the pairs, the index group and the `_docmap`
+      * group. Both groups are APPEND runs (r18): the probed corpus rows are
+      * read for the pairs but never rewritten, so ingest write cost is
+      * O(batch); compaction folds runs back. */
+    private def probe(spark: SparkSession, dir: String, newDocs: DataFrame,
+                      idCol: String, text: Column)
+        : (DataFrame, LayoutTxn.Group, LayoutTxn.Group) = {
+      val snap = LayoutTxn.snapshot(dir)
+      val fact = (key: String) => LayoutTxn.fact(snap, key, builder)
+      val partitions = fact("partitions")
+      val newRows = rows(newDocs, idCol, text, fact)
+        .transform(graft.util.Cleanup.checkpoint(_))
+      val touched = newRows.select(pCol).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      val existing = LayoutTxn.readSnapshot(spark, snap, "", pCol,
+        Some(parts(pCol, touched).toSet))
+      // the map's dm partitions are hash(id) of the PERSISTED id type
+      val nm = docMapRows(
+        newRows.withColumn(idCol, col(idCol).cast(idType(spark, dir, idCol))),
+        idCol, partitions)
+      val dmTouched = nm.select("dm").distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      (pairsOf(existing, newRows, idCol, fact),
+        LayoutTxn.Group("", newRows, pCol, sortCols(idCol),
+          parts(pCol, touched), append = true),
+        LayoutTxn.Group(DedupDocMap, nm, "dm", Seq("pb", idCol),
+          parts("dm", dmTouched), append = true))
+    }
+
+    /** Probe + append one NEW batch against the tier's index at `dir`:
+      * returns the (corpus id `a`, new id `b`, …) candidate pairs and
+      * appends the batch's rows through the [[graft.layout.LayoutTxn]]
+      * stage/CAS-claim/publish protocol (a concurrent ingest gets
+      * `ConflictException`; a crashed one rolls forward; readers keep
+      * their snapshot). Probe cost follows the BATCH's partitions, never
+      * the corpus (the ⊕J25 shape). Append-only: batch ids are assumed new
+      * (the q61 ingest contract) — re-ingesting an id duplicates its rows. */
+    def upsert(spark: SparkSession, dir: String, newDocs: DataFrame,
+               idCol: String, text: Column,
+               txnGraceMs: Long = 600000L): DataFrame = {
+      val parent = LayoutTxn.begin(dir, txnGraceMs)
+      val (pairs, index, docMap) = probe(spark, dir, newDocs, idCol, text)
+      LayoutTxn.commit(spark, dir, parent, Seq(index, docMap))
+      pairs
+    }
+
+    /** EXACTLY-ONCE streaming ingest (⊕K8 × ⊕J25): the foreachBatch form
+      * of [[upsert]] whose candidate pairs are delivered through the
+      * index's own commit. Each micro-batch commits its index rows, its
+      * pairs partitioned by batch (sub "pairs") and its `_docmap` rows in
+      * ONE LayoutTxn CAS with the batchId recorded in the version state. A
+      * replayed micro-batch (crash after the commit, before the streaming
+      * checkpoint ack) is skipped WHOLE — including one whose commit was
+      * claimed but not yet published ([[LayoutTxn.beginBatch]]) — so the
+      * index gains the batch's rows exactly once AND the pair log holds
+      * its pairs exactly once: the two-store atomicity problem solved by
+      * sharing the commit. */
+    def ingestBatch(spark: SparkSession, dir: String, batch: DataFrame,
+                    idCol: String, text: Column, batchId: Long,
+                    txnGraceMs: Long = 600000L): Unit = {
+      val parent = LayoutTxn.beginBatch(dir, batchId, txnGraceMs)
+        .getOrElse(return) // a replayed batch
+      val (pairs, index, docMap) = probe(spark, dir, batch, idCol, text)
+      LayoutTxn.commit(spark, dir, parent, Seq(index,
+        LayoutTxn.Group("pairs", pairs.withColumn("batch", lit(batchId)),
+          "batch", Seq("a", "b"), Seq(s"batch=$batchId")),
+        docMap), batchId = batchId)
+      ()
+    }
+
+    /** foreachBatch adapter for [[ingestBatch]] — plug straight into
+      * `writeStream.foreachBatch`. */
+    def ingestSink(dir: String, idCol: String,
+                   text: Column): (DataFrame, Long) => Unit =
+      (batch, id) =>
+        ingestBatch(batch.sparkSession, dir, batch, idCol, text, id)
+
+    /** DELETE(ids) (⊕J25/⊕J26/⊕J27, r17): the victims' `dm=` reverse-map
+      * partitions are read (driver-pruned) to locate exactly the index
+      * partitions holding their rows; those partitions are rewritten minus
+      * the victims and the victims' map rows are removed — BOTH subtrees in
+      * ONE LayoutTxn commit. Cost follows the victims' partitions, never
+      * the corpus; a partition emptied by the delete leaves the snapshot
+      * (physical reclamation by begin()'s two-phase sweep). The maintained
+      * index equals one rebuilt without the victims, so probes can never
+      * return a victim. Returns the touched index partition ids. */
+    def delete(spark: SparkSession, dir: String, victims: DataFrame,
+               idCol: String, txnGraceMs: Long = 600000L): Seq[Int] = {
+      val parent = LayoutTxn.begin(dir, txnGraceMs)
+      // the partition count resolves AFTER begin() (r18): a rescale that
+      // committed before it would otherwise leave dm probes computed with
+      // the OLD count silently missing every victim — resolved here, any
+      // rescale landing later conflicts at the CAS
+      val partitions = LayoutTxn.fact(LayoutTxn.snapshot(dir), "partitions",
+        builder)
+      val ids = victims
+        .select(col(idCol).cast(idType(spark, dir, idCol)).as(idCol))
+        .distinct().transform(graft.util.Cleanup.checkpoint(_))
+      val dmTouched = ids
+        .select(pmod(hash(col(idCol)), lit(partitions)).as("dm")).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      val dmAll = LayoutTxn.readLayout(spark, dir, DedupDocMap,
+        "dm", Some(parts("dm", dmTouched).toSet))
+      val pbTouched = dmAll.join(ids, Seq(idCol), "left_semi")
+        .select("pb").distinct().collect().map(_.getInt(0)).toSeq.sorted
+      if (pbTouched.isEmpty) return Seq.empty // no victim has indexed rows
+      val survivors = LayoutTxn.readLayout(spark, dir, "", pCol,
+          Some(parts(pCol, pbTouched).toSet))
+        .join(ids, Seq(idCol), "left_anti")
+      val dmSurvivors = dmAll.join(ids, Seq(idCol), "left_anti")
+        .select(col(idCol), col("pb"), col("dm"))
+      LayoutTxn.commit(spark, dir, parent, Seq(
+        LayoutTxn.Group("", survivors, pCol, sortCols(idCol),
+          parts(pCol, pbTouched)),
+        LayoutTxn.Group(DedupDocMap, dmSurvivors, "dm",
+          Seq("pb", idCol), parts("dm", dmTouched))))
+      pbTouched
+    }
+
+    /** RESCALE to a new partition count (r18 — the MergeTable REBUCKET
+      * shape at the index tier): the partition key recomputes from the
+      * stored key columns, the `_docmap` re-derives from the re-keyed rows
+      * (its `pb` values ARE partition ids) in the SAME commit, and the
+      * `partitions` prop flips atomically with the partition map; probes,
+      * ingests and deletes then read the new count from the layout itself.
+      * The pair log (partitioned by batch) is count-independent and rides
+      * untouched. Cost is O(index bytes) — the deliberate amortized full
+      * rewrite. Returns the committed (or, for the current count, the
+      * current) version. */
+    def rescale(spark: SparkSession, dir: String, idCol: String,
+                newPartitions: Int, txnGraceMs: Long = 600000L): Long = {
+      require(newPartitions >= 1,
+        s"newPartitions must be >= 1, got $newPartitions")
+      val parent = LayoutTxn.begin(dir, txnGraceMs)
+      val snap = LayoutTxn.snapshot(dir)
+      if (LayoutTxn.fact(snap, "partitions", builder) == newPartitions)
+        return snap.version
+      val rows = LayoutTxn.readSnapshot(spark, snap, "", pCol)
+        .withColumn(pCol, partition(newPartitions))
+        .transform(graft.util.Cleanup.checkpoint(_))
+      LayoutTxn.commit(spark, dir, parent,
+        LayoutTxn.whole(snap, groups(rows, idCol, newPartitions)),
+        props = Map("partitions" -> newPartitions.toString))
+    }
+
+    /** Fold a fragmented index — [[graft.layout.LayoutTxn.compactStale]]
+      * with this layout's own in-partition sort orders. */
+    def compact(spark: SparkSession, dir: String, idCol: String,
+                maxOwners: Int = 4, txnGraceMs: Long = 600000L): Long =
+      LayoutTxn.compactStale(spark, dir,
+        Map("" -> sortCols(idCol), DedupDocMap -> Seq("pb", idCol),
+          "pairs" -> Seq("a", "b")),
+        maxOwners, txnGraceMs)
   }
 
-  /** One [[graft.layout.LayoutTxn.rebuild]] commit writes a dedup index,
-    * with its hashing parameters (and `partitions`) as commit props — the
-    * facts every probe, delete and rescale reads back instead of trusting
-    * caller arguments. */
-  private def writeDedupIndex(rows: DataFrame, dir: String, idCol: String,
-                              pCol: String, sortCols: Seq[String],
-                              partitions: Int,
+  /** The minhash band-bucket tier: one row per (doc, band) with the band's
+    * concatenated hash bucket. Pairs are docs sharing any band bucket —
+    * feed [[jaccardVerify]] / [[minhashPrefilter]] exactly as with
+    * [[lshCandidates]]. `maxBucketSize` df-caps degenerate corpus buckets
+    * before the equi-join (boilerplate-heavy buckets cost recall, never
+    * n²). */
+  final case class Lsh(maxBucketSize: Int = 10000)
+      extends Tier("Dedup.writeLshIndex", "lb", Seq("band", "bucket")) {
+    protected def stored(docs: DataFrame, idCol: String, text: Column,
+                         fact: String => Int): DataFrame = {
+      val (numHashes, bands) = (fact("numHashes"), fact("bands"))
+      minhashSignature(docs, idCol, text, numHashes, fact("k"))
+        .select(col(idCol), explode(lshBands(bands, numHashes / bands)).as("bb"))
+        .select(col(idCol), col("bb.band").as("band"),
+          col("bb.bucket").as("bucket"))
+    }
+
+    protected def pairsOf(corpus: DataFrame, batch: DataFrame, idCol: String,
+                          fact: String => Int): DataFrame =
+      corpus.withColumn("__bsz",
+          count(lit(1)).over(Window.partitionBy("band", "bucket")))
+        .filter(col("__bsz") <= maxBucketSize)
+        .select(col("band"), col("bucket"), col(idCol).as("a"))
+        .join(batch.select(col("band"), col("bucket"), col(idCol).as("b")),
+          Seq("band", "bucket"))
+        .filter(col("a") =!= col("b"))
+        .select(col("a"), col("b")).distinct()
+  }
+
+  /** The winnowing-fingerprint tier — [[winnowingCandidates]]' algebra
+    * restricted across the corpus×batch split: pairs share at least
+    * `minShared` fingerprints, with (a, b, n_shared) rows. All rows of one
+    * fingerprint share a partition, so the `maxDocFreq` df-cap computed
+    * over (probed corpus ∪ batch) is the fingerprint's TRUE corpus-wide
+    * frequency and matches a full recomputation exactly — after deletes
+    * and rescales too. MinHash scores WHOLE-doc similarity; this catches a
+    * pasted paragraph inside an otherwise-new doc. */
+  final case class Winnow(maxDocFreq: Int = 10, minShared: Int = 2)
+      extends Tier("Dedup.writeWinnowIndex", "fb", Seq("fp")) {
+    protected def stored(docs: DataFrame, idCol: String, text: Column,
+                         fact: String => Int): DataFrame =
+      winnowRows(docs, idCol, text, fact("k"), fact("w"))
+
+    protected def pairsOf(corpus: DataFrame, batch: DataFrame, idCol: String,
+                          fact: String => Int): DataFrame = {
+      val all = corpus.select(col(idCol), col("fp"))
+        .withColumn("__new", lit(false))
+        .unionByName(batch.select(col(idCol), col("fp"))
+          .withColumn("__new", lit(true)))
+        .withColumn("__df", count(lit(1)).over(Window.partitionBy("fp")))
+        .filter(col("__df") <= maxDocFreq)
+      all.filter(!col("__new")).select(col("fp"), col(idCol).as("a"))
+        .join(all.filter(col("__new")).select(col("fp"), col(idCol).as("b")),
+          Seq("fp"))
+        .filter(col("a") =!= col("b"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared)
+    }
+  }
+
+  /** The SimHash pigeonhole tier: one row per (doc, band) carrying the
+    * FULL fingerprint, so the exact Hamming verify needs no second corpus
+    * read; (a, b, dist) pairs within the index's `maxDist`, one row per
+    * pair (the first-matching-band rule). The split is LOSSLESS for that
+    * `maxDist`: a pair within it differs in ≤ maxDist positions, so one of
+    * the maxDist+1 bands matches exactly and its partition is among the
+    * batch's — a per-pair property of the banding, untouched by deletes
+    * and rescales. */
+  case object Simhash
+      extends Tier("Dedup.writeSimhashIndex", "sb", Seq("band", "bval")) {
+    protected def stored(docs: DataFrame, idCol: String, text: Column,
+                         fact: String => Int): DataFrame =
+      simhashRows(docs, idCol, text, fact("maxDist"))
+
+    protected def pairsOf(corpus: DataFrame, batch: DataFrame, idCol: String,
+                          fact: String => Int): DataFrame =
+      simhashJoin(corpus, batch, idCol, col("a") =!= col("b"),
+        fact("maxDist"))
+  }
+
+  /** One [[graft.layout.LayoutTxn.rebuild]] commit writes a whole index,
+    * with `facts` (hashing parameters and `partitions`) as commit props. */
+  private def writeDedupIndex(tier: Tier, docs: DataFrame, idCol: String,
+                              text: Column, dir: String,
                               facts: Map[String, Int]): Unit = {
-    graft.layout.LayoutTxn.rebuild(rows.sparkSession, dir,
-      dedupGroups(rows, idCol, pCol, sortCols, partitions),
-      (facts + ("partitions" -> partitions)).map { case (k, v) =>
-        k -> v.toString })
+    val rows = tier.rows(docs, idCol, text, facts)
+      .transform(graft.util.Cleanup.checkpoint(_))
+    LayoutTxn.rebuild(rows.sparkSession, dir,
+      tier.groups(rows, idCol, facts("partitions")),
+      facts.map { case (k, v) => k -> v.toString })
     ()
   }
 
-  /** The `_docmap` append group for one ingested batch. */
-  private def docMapAppendGroup(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, newRows: DataFrame,
-                                idCol: String, pCol: String,
-                                partitions: Int)
-      : graft.layout.LayoutTxn.Group = {
-    // the map's dm partitions are hash(id) of the PERSISTED id type — a
-    // batch with a narrower type (Int into a Long index) must be widened
-    // BEFORE hashing, or its rows land under the int-hash dm and a later
-    // delete (which casts victims to the persisted type, the 47673e0 fix)
-    // probes the long-hash partition and silently misses them
-    val idType = graft.layout.LayoutTxn
-      .readLayout(spark, dir, DedupDocMap, "dm").schema(idCol).dataType
-    val nm = dedupDocMapRows(
-      newRows.withColumn(idCol, col(idCol).cast(idType)),
-      idCol, pCol, partitions)
-    val touched = nm.select("dm").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    // append-run commit (r18): only the batch's own map rows are written
-    graft.layout.LayoutTxn.Group(DedupDocMap, nm,
-      "dm", Seq("pb", idCol), touched.map(b => s"dm=$b"), append = true)
+  /** Every pair a tier's streaming ingest has delivered so far, with its
+    * micro-batch id: (batch, a, b, …) with the tier's pair columns — a
+    * snapshot-isolated read of the commits' own pair log. */
+  def ingestPairs(spark: SparkSession, dir: String): DataFrame = {
+    val log = LayoutTxn.readLayout(spark, dir, "pairs", "batch")
+    log.select(col("batch") +: log.columns.filter(_ != "batch").map(col): _*)
   }
 
-  /** DELETE(ids) against an at-rest dedup index (⊕J25/⊕J26/⊕J27 — VERDICT
-    * r16 task 2), shared machinery: the victims' `dm=` reverse-map
-    * partitions are read (driver-pruned) to locate exactly the index
-    * partitions holding their rows; those partitions are rewritten minus
-    * the victims and the victims' map rows are removed — BOTH subtrees in
-    * ONE LayoutTxn commit. Cost follows the victims' partitions, never
-    * the corpus; a partition emptied by the delete is recorded as a
-    * deletion and leaves the snapshot (physical reclamation by begin()'s
-    * two-phase sweep). Returns the touched index partition ids. */
-  private def dedupIndexDelete(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, victims: DataFrame, idCol: String,
-                               pCol: String, builder: String,
-                               sortCols: Seq[String],
-                               txnGraceMs: Long): Seq[Int] = {
-    val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
-    // the partition count resolves AFTER begin() (r18): a rescale that
-    // committed before it would otherwise leave dm probes computed with
-    // the OLD count silently missing every victim — resolved here, any
-    // rescale landing later conflicts at the CAS
-    val partitions = graft.layout.LayoutTxn.fact(
-      graft.layout.LayoutTxn.snapshot(dir), "partitions", builder)
-    // victims' ids must hash EXACTLY like the map's: Murmur3 of an INT 5
-    // differs from a LONG 5, so a caller passing a narrower id type would
-    // probe the wrong dm= partitions and silently delete NOTHING — cast
-    // to the index's own id type first (the type is a layout fact)
-    val idType = graft.layout.LayoutTxn
-      .readLayout(spark, dir, DedupDocMap, "dm").schema(idCol).dataType
-    val ids = victims.select(col(idCol).cast(idType).as(idCol)).distinct()
-      .transform(graft.util.Cleanup.checkpoint(_))
-    val dmTouched = ids
-      .select(pmod(hash(col(idCol)), lit(partitions)).as("dm")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val dmAll = graft.layout.LayoutTxn.readLayout(spark, dir, DedupDocMap,
-      "dm", Some(dmTouched.map(b => s"dm=$b").toSet))
-    val pbTouched = dmAll.join(ids, Seq(idCol), "left_semi")
-      .select("pb").distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (pbTouched.isEmpty) return Seq.empty // no victim has indexed rows
-    val survivors = graft.layout.LayoutTxn.readLayout(spark, dir, "", pCol,
-        Some(pbTouched.map(b => s"$pCol=$b").toSet))
-      .join(ids, Seq(idCol), "left_anti")
-    val dmSurvivors = dmAll.join(ids, Seq(idCol), "left_anti")
-      .select(col(idCol), col("pb"), col("dm"))
-    graft.layout.LayoutTxn.commit(spark, dir, parent, Seq(
-      graft.layout.LayoutTxn.Group("", survivors, pCol, sortCols,
-        pbTouched.map(b => s"$pCol=$b")),
-      graft.layout.LayoutTxn.Group(DedupDocMap, dmSurvivors, "dm",
-        Seq("pb", idCol), dmTouched.map(b => s"dm=$b"))))
-    pbTouched
-  }
-
-  /** AT-REST LSH index for INCREMENTAL near-dup ingest dedup (⊕J8 × ⊕K10):
-    * the corpus's minhash band buckets written hive-partitioned by
-    * `lb = hash(band, bucket) mod partitions`. A new batch then probes
-    * ONLY the partitions its own band keys hash into ([[lshIndexUpsert]])
-    * — [[incrementalDedup]]'s bounded-ingest discipline upgraded from
-    * exact-hash to NEAR-dup. At 100 TB the index is |corpus| × bands tiny
-    * rows (id, band, 8-16 hex chars ×rowsPerBand), a small fraction of the
-    * corpus, and the probe cost follows the BATCH's band keys. A `_docmap`
-    * reverse map (id → lb) written beside the rows makes
-    * [[lshIndexDelete]] possible (r17). */
+  /** AT-REST [[Lsh]] index for INCREMENTAL near-dup ingest dedup (⊕J8 ×
+    * ⊕K10): the corpus's minhash band buckets hive-partitioned by
+    * `lb = hash(band, bucket) mod partitions` — [[incrementalDedup]]'s
+    * bounded-ingest discipline upgraded from exact-hash to NEAR-dup. At
+    * 100 TB the index is |corpus| × bands tiny rows, a small fraction of
+    * the corpus, and a probe's cost follows the BATCH's band keys. */
   def writeLshIndex(docs: DataFrame, idCol: String, text: Column,
                     dir: String, numHashes: Int = 8, bands: Int = 4,
                     partitions: Int = 16, k: Int = 3): Unit = {
     require(numHashes % bands == 0, s"numHashes $numHashes % bands $bands != 0")
-    val rows = lshBandRows(minhashSignature(docs, idCol, text, numHashes, k),
-        idCol, bands, numHashes / bands, partitions)
-      .transform(graft.util.Cleanup.checkpoint(_))
-    // a probe with different hashing/banding/partitioning would silently
-    // miss everything, so these are layout facts
-    writeDedupIndex(rows, dir, idCol, "lb", Seq("band", "bucket", idCol),
-      partitions, Map("numHashes" -> numHashes, "bands" -> bands, "k" -> k))
+    writeDedupIndex(Lsh(), docs, idCol, text, dir, Map(
+      "numHashes" -> numHashes, "bands" -> bands, "k" -> k,
+      "partitions" -> partitions))
   }
 
-  /** Shared RESCALE machinery for the three at-rest dedup indexes (r18 —
-    * VERDICT r17 task 3; the MergeTable REBUCKET shape at the index
-    * tier): every partition key is a pure function of STORED row columns
-    * (`lb = hash(band, bucket)`, `fb = hash(fp)`, `sb = hash(band,
-    * bval)`, all mod the count), so re-partitioning is a column rewrite
-    * over the index rows — the corpus text is never re-read, no
-    * signature/fingerprint recomputes. The `_docmap` reverse map
-    * re-derives from the re-keyed rows (its `pb` values ARE partition
-    * ids) in the SAME commit, and the `partitions` layout prop flips
-    * atomically with the partition map. The `pairs` log (partitioned by
-    * batch) is count-independent and rides untouched. Cost is O(index
-    * bytes) — the deliberate amortized full rewrite. */
-  private def dedupIndexRescale(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, idCol: String, pCol: String,
-                                partExpr: Int => org.apache.spark.sql.Column,
-                                sortCols: Seq[String], builder: String,
-                                newPartitions: Int,
-                                txnGraceMs: Long): Long = {
-    require(newPartitions >= 1,
-      s"newPartitions must be >= 1, got $newPartitions")
-    val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
-    val snap = graft.layout.LayoutTxn.snapshot(dir)
-    if (graft.layout.LayoutTxn.fact(snap, "partitions", builder) ==
-        newPartitions) return snap.version
-    val rows = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", pCol)
-      .withColumn(pCol, partExpr(newPartitions))
-      .transform(graft.util.Cleanup.checkpoint(_))
-    graft.layout.LayoutTxn.commit(spark, dir, parent,
-      graft.layout.LayoutTxn.whole(snap,
-        dedupGroups(rows, idCol, pCol, sortCols, newPartitions)),
-      props = Map("partitions" -> newPartitions.toString))
-  }
-
-  /** The `lb=` partitions a batch's band keys hash into — the probe set
-    * [[lshIndexUpsert]] reads and rewrites (diagnostic/test surface). */
-  private[graft] def lshProbePartitions(docs: DataFrame, idCol: String,
-                                        text: Column, numHashes: Int = 8,
-                                        bands: Int = 4, partitions: Int = 16,
-                                        k: Int = 3): Set[Int] =
-    lshBandRows(minhashSignature(docs, idCol, text, numHashes, k),
-      idCol, bands, numHashes / bands, partitions)
-      .select("lb").distinct().collect().map(_.getInt(0)).toSet
-
-  /** Probe + append one NEW batch against a [[writeLshIndex]] directory:
-    * returns the (corpus id `a`, new id `b`) candidate pairs whose docs
-    * share any band bucket — feed [[jaccardVerify]] /
-    * [[minhashPrefilter]] exactly as with [[lshCandidates]] — and appends
-    * the batch's band rows to the index through the
-    * [[graft.layout.LayoutTxn]] stage/CAS-claim/publish protocol (a
-    * concurrent ingest gets `ConflictException`; a crashed one rolls
-    * forward; readers keep their snapshot).
-    *
-    * Scale shape: the probe reads ONLY the `lb=` partitions the batch's
-    * band keys hash into (driver-pruned immutable dirs — snapshot
-    * isolated, so the returned pair plan stays valid across later
-    * ingests); `maxBucketSize` df-caps degenerate corpus buckets before
-    * the equi-join (boilerplate-heavy buckets cost recall, never n²);
-    * the commit rewrites only the touched partitions, so ingest cost
-    * follows the BATCH. Append-only: batch ids are assumed new (the q61
-    * ingest contract) — re-ingesting an id duplicates its band rows. */
-  def lshIndexUpsert(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     newDocs: DataFrame, idCol: String, text: Column,
-                     maxBucketSize: Int = 10000,
-                     txnGraceMs: Long = 600000L): DataFrame = {
-    val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
-    val p = lshProbe(spark, dir, newDocs, idCol, text, maxBucketSize)
-    // append the batch into exactly the touched partitions; the pair plan
-    // above reads the PRE-commit snapshot (immutable dirs) either way.
-    // The _docmap reverse map rides the same commit (r17, delete support).
-    graft.layout.LayoutTxn.commit(spark, dir, parent, Seq(p.indexGroup(idCol),
-      docMapAppendGroup(spark, dir, p.newRows, idCol, "lb", p.partitions)))
-    p.pairs
-  }
-
-  /** DELETE(ids) from a [[writeLshIndex]] directory (⊕J25, r17): removes
-    * the victims' band rows AND their reverse-map rows in one commit,
-    * rewriting only the `lb=` partitions the `_docmap` locates. After the
-    * delete, probes can never return a victim as a candidate `a` — the
-    * maintained index equals one rebuilt without the victims
-    * (LshIndexDeleteSpec). Returns the touched `lb` partition ids. */
-  def lshIndexDelete(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     victims: DataFrame, idCol: String,
-                     txnGraceMs: Long = 600000L): Seq[Int] =
-    dedupIndexDelete(spark, dir, victims, idCol, "lb", LshBuilder,
-      Seq("band", "bucket", idCol), txnGraceMs)
-
-  /** RESCALE a [[writeLshIndex]] directory to a new partition count (r18
-    * — see [[dedupIndexRescale]]): `lb` recomputes from the stored
-    * (band, bucket) columns, the reverse map re-derives, the count flips
-    * atomically with the partition map; probes/ingests/deletes then read
-    * the new count from the layout itself. The corpus is never re-read. */
-  def lshIndexRescale(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      idCol: String, newPartitions: Int,
-                      txnGraceMs: Long = 600000L): Long =
-    dedupIndexRescale(spark, dir, idCol, "lb",
-      n => pmod(hash(col("band"), col("bucket")), lit(n)),
-      Seq("band", "bucket", idCol), LshBuilder, newPartitions, txnGraceMs)
-
-  /** Fold a fragmented LSH index — [[graft.layout.LayoutTxn
-    * .compactStale]] with this layout's own in-partition sort orders. */
-  def lshIndexCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      idCol: String, maxOwners: Int = 4,
-                      txnGraceMs: Long = 600000L): Long =
-    graft.layout.LayoutTxn.compactStale(spark, dir,
-      Map("" -> Seq("band", "bucket", idCol),
-        DedupDocMap -> Seq("pb", idCol), "pairs" -> Seq("a", "b")),
-      maxOwners, txnGraceMs)
-
-  private val LshBuilder = "Dedup.writeLshIndex"
-
-  private case class LshProbe(newRows: DataFrame, touched: Seq[Int],
-                              existing: DataFrame, pairs: DataFrame,
-                              partitions: Int) {
-    // APPEND-RUN commit (r18): the batch's own rows become one more run
-    // of each touched partition — the probed corpus rows are read for
-    // the PAIRS but never rewritten, so ingest WRITE cost is O(batch),
-    // not O(touched partitions); compactStale folds runs back
-    def indexGroup(idCol: String): graft.layout.LayoutTxn.Group =
-      graft.layout.LayoutTxn.Group("", newRows,
-        "lb", Seq("band", "bucket", idCol), touched.map(b => s"lb=$b"),
-        append = true)
-  }
-
-  /** The shared probe behind [[lshIndexUpsert]] and [[lshIngestBatch]]:
-    * band the batch, read ONLY its partitions from the current snapshot
-    * (hashing/banding/partitioning are the index's own layout facts —
-    * mismatched caller parameters would silently find nothing), df-cap
-    * degenerate buckets, and equi-join corpus × batch. */
-  private def lshProbe(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       newDocs: DataFrame, idCol: String, text: Column,
-                       maxBucketSize: Int): LshProbe = {
-    val snap = graft.layout.LayoutTxn.snapshot(dir)
-    def fact(key: String) = graft.layout.LayoutTxn.fact(snap, key, LshBuilder)
-    val (numHashes, bands, partitions, k) =
-      (fact("numHashes"), fact("bands"), fact("partitions"), fact("k"))
-    val newRows = lshBandRows(
-        minhashSignature(newDocs, idCol, text, numHashes, k),
-        idCol, bands, numHashes / bands, partitions)
-      .transform(graft.util.Cleanup.checkpoint(_))
-    val touched = newRows.select("lb").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val existing = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", "lb",
-      Some(touched.map(b => s"lb=$b").toSet))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")
-    val capped = existing
-      .withColumn("__bsz", count(lit(1)).over(w))
-      .filter(col("__bsz") <= maxBucketSize)
-    val pairs = capped.select(col("band"), col("bucket"), col(idCol).as("a"))
-      .join(newRows.select(col("band"), col("bucket"), col(idCol).as("b")),
-        Seq("band", "bucket"))
-      .filter(col("a") =!= col("b"))
-      .select(col("a"), col("b")).distinct()
-    LshProbe(newRows, touched, existing, pairs, partitions)
-  }
-
-  /** EXACTLY-ONCE streaming near-dup ingest (⊕K8 × ⊕J25): the
-    * foreachBatch form of [[lshIndexUpsert]] whose candidate PAIRS are
-    * delivered through the index's own commit. Each micro-batch probes
-    * the index, then commits TWO groups in ONE LayoutTxn CAS — its band
-    * rows (sub "", the index) and its candidate pairs partitioned by
-    * batch (sub "pairs") — with the batchId recorded in the version
-    * state. A replayed micro-batch (crash after the commit, before the
-    * streaming checkpoint ack — the worst-case window) is skipped WHOLE:
-    * the index gains the batch's rows exactly once AND the pair log
-    * holds the batch's pairs exactly once. This is the two-store
-    * atomicity problem every stream that computes a result AND updates
-    * its own state has; the only clean answer is ONE commit for both,
-    * which the multi-group commit provides for free. */
-  def lshIngestBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     batch: DataFrame, idCol: String, text: Column,
-                     batchId: Long, maxBucketSize: Int = 10000,
-                     txnGraceMs: Long = 600000L): Unit = {
-    val parent = graft.layout.LayoutTxn.beginBatch(dir, batchId, txnGraceMs)
-      .getOrElse(return) // a replayed batch
-    val p = lshProbe(spark, dir, batch, idCol, text, maxBucketSize)
-    // index rows + pair log + _docmap reverse map: ONE commit (r17 adds
-    // the map so lshIndexDelete can locate a victim's partitions)
-    graft.layout.LayoutTxn.commit(spark, dir, parent, Seq(
-      p.indexGroup(idCol),
-      graft.layout.LayoutTxn.Group("pairs",
-        p.pairs.withColumn("batch", lit(batchId)),
-        "batch", Seq("a", "b"), Seq(s"batch=$batchId")),
-      docMapAppendGroup(spark, dir, p.newRows, idCol, "lb", p.partitions)),
-      batchId = batchId)
-    ()
-  }
-
-  /** foreachBatch adapter for [[lshIngestBatch]] — plug straight into
-    * `writeStream.foreachBatch`. */
-  def lshIngestSink(dir: String, idCol: String, text: Column,
-                    maxBucketSize: Int = 10000): (DataFrame, Long) => Unit =
-    (batch, id) =>
-      lshIngestBatch(batch.sparkSession, dir, batch, idCol, text, id,
-        maxBucketSize)
-
-  /** Every pair the streaming ingest has delivered so far, with its
-    * micro-batch id: (batch, a, b) — a snapshot-isolated read of the
-    * commit's own pair log. */
-  def lshIngestPairs(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): DataFrame =
-    graft.layout.LayoutTxn.readLayout(spark, dir, "pairs", "batch")
-      .select(col("batch"), col("a"), col("b"))
-
-  private val WinnowBuilder = "Dedup.writeWinnowIndex"
-
-  /** AT-REST winnowing index for INCREMENTAL contained-copy ingest (the
-    * [[writeLshIndex]] pattern at the fingerprint tier): the corpus's
-    * winnowing fingerprints persisted hive-partitioned by
-    * `fb = hash(fp) mod partitions`. MinHash LSH scores WHOLE-doc
-    * similarity; this catches a pasted paragraph inside an otherwise-new
-    * doc — the two ingest paths are complementary, exactly as their batch
-    * forms (⊕J8 vs ⊕J9). All rows of one fingerprint share a partition,
-    * so a probe computes each shared fingerprint's document frequency
-    * EXACTLY from the probed partitions alone. */
+  /** AT-REST [[Winnow]] index for INCREMENTAL contained-copy ingest: the
+    * corpus's winnowing fingerprints hive-partitioned by
+    * `fb = hash(fp) mod partitions`. */
   def writeWinnowIndex(docs: DataFrame, idCol: String, text: Column,
                        dir: String, k: Int = 8, w: Int = 4,
-                       partitions: Int = 16): Unit = {
-    val rows = docs.select(col(idCol),
-        explode(TextAnalysis.winnowFingerprints(text, k, w)).as("fp"))
-      .withColumn("fb", pmod(hash(col("fp")), lit(partitions)))
-      .transform(graft.util.Cleanup.checkpoint(_))
-    writeDedupIndex(rows, dir, idCol, "fb", Seq("fp", idCol), partitions,
-      Map("k" -> k, "w" -> w))
-  }
+                       partitions: Int = 16): Unit =
+    writeDedupIndex(Winnow(), docs, idCol, text, dir,
+      Map("k" -> k, "w" -> w, "partitions" -> partitions))
 
-  /** Probe + append one NEW batch against a [[writeWinnowIndex]] directory:
-    * returns (corpus id `a`, new id `b`, n_shared) for pairs sharing at
-    * least `minShared` winnowing fingerprints — [[winnowingCandidates]]'
-    * algebra restricted across the corpus×batch split, with the df-cap
-    * computed over (probed corpus rows ∪ batch rows), which is EXACT
-    * because a fingerprint's every occurrence lives in one partition —
-    * and appends the batch's fingerprint rows through the
-    * [[graft.layout.LayoutTxn]] protocol. Probe cost follows the BATCH's
-    * fingerprint partitions, not the corpus (the ⊕J25 shape). */
-  def winnowIndexUpsert(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        newDocs: DataFrame, idCol: String, text: Column,
-                        maxDocFreq: Int = 10, minShared: Int = 2,
-                        txnGraceMs: Long = 600000L): DataFrame = {
-    val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
-    val p = winnowProbe(spark, dir, newDocs, idCol, text, maxDocFreq,
-      minShared)
-    graft.layout.LayoutTxn.commit(spark, dir, parent,
-      p.groups(idCol) :+
-        docMapAppendGroup(spark, dir, p.newRows, idCol, "fb", p.partitions))
-    p.pairs
-  }
-
-  private case class WinnowProbe(newRows: DataFrame, touched: Seq[Int],
-                                 existing: DataFrame, pairs: DataFrame,
-                                 partitions: Int) {
-    // append-run commit — see LshProbe.indexGroup (r18)
-    def groups(idCol: String): Seq[graft.layout.LayoutTxn.Group] =
-      Seq(graft.layout.LayoutTxn.Group("", newRows,
-        "fb", Seq("fp", idCol), touched.map(b => s"fb=$b"), append = true))
-  }
-
-  /** The shared probe behind [[winnowIndexUpsert]] and
-    * [[winnowIngestBatch]] — the [[lshProbe]] shape at the fingerprint
-    * tier: fingerprint the batch, read ONLY its `fb=` partitions, df-cap
-    * over (probed corpus ∪ batch) — EXACT, every occurrence of a
-    * fingerprint shares one partition — and equi-join corpus × batch. */
-  private def winnowProbe(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, newDocs: DataFrame, idCol: String,
-                          text: Column, maxDocFreq: Int,
-                          minShared: Int): WinnowProbe = {
-    val snap = graft.layout.LayoutTxn.snapshot(dir)
-    def fact(key: String) =
-      graft.layout.LayoutTxn.fact(snap, key, WinnowBuilder)
-    val (k, w, partitions) = (fact("k"), fact("w"), fact("partitions"))
-    val newRows = newDocs.select(col(idCol),
-        explode(TextAnalysis.winnowFingerprints(text, k, w)).as("fp"))
-      .withColumn("fb", pmod(hash(col("fp")), lit(partitions)))
-      .transform(graft.util.Cleanup.checkpoint(_))
-    val touched = newRows.select("fb").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val existing = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", "fb",
-      Some(touched.map(b => s"fb=$b").toSet))
-    // df over (probed corpus ∪ batch) = the fingerprint's TRUE corpus-wide
-    // frequency (partition-contained), so the stopword cap matches a full
-    // recomputation exactly
-    val dfw = org.apache.spark.sql.expressions.Window.partitionBy("fp")
-    val all = existing.select(col(idCol), col("fp"))
-      .withColumn("__new", lit(false))
-      .unionByName(newRows.select(col(idCol), col("fp"))
-        .withColumn("__new", lit(true)))
-      .withColumn("__df", count(lit(1)).over(dfw))
-      .filter(col("__df") <= maxDocFreq)
-    val pairs = all.filter(!col("__new"))
-      .select(col("fp"), col(idCol).as("a"))
-      .join(all.filter(col("__new")).select(col("fp"), col(idCol).as("b")),
-        Seq("fp"))
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-    WinnowProbe(newRows, touched, existing, pairs, partitions)
-  }
-
-  /** EXACTLY-ONCE streaming contained-copy ingest (⊕K8 × ⊕J26) — the
-    * [[lshIngestBatch]] discipline at the fingerprint tier: each
-    * micro-batch commits its fingerprint rows, its (a, b, n_shared) pair
-    * log partitioned by batch, AND its `_docmap` rows in ONE LayoutTxn
-    * CAS keyed by the batchId; a crash-replayed batch is skipped WHOLE
-    * (authoritative re-check AFTER begin() — the ADVICE r16 discipline). */
-  def winnowIngestBatch(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, batch: DataFrame, idCol: String,
-                        text: Column, batchId: Long, maxDocFreq: Int = 10,
-                        minShared: Int = 2,
-                        txnGraceMs: Long = 600000L): Unit = {
-    val parent = graft.layout.LayoutTxn.beginBatch(dir, batchId, txnGraceMs)
-      .getOrElse(return) // a replayed batch
-    val p = winnowProbe(spark, dir, batch, idCol, text, maxDocFreq,
-      minShared)
-    graft.layout.LayoutTxn.commit(spark, dir, parent,
-      p.groups(idCol) ++ Seq(graft.layout.LayoutTxn.Group("pairs",
-        p.pairs.withColumn("batch", lit(batchId)),
-        "batch", Seq("a", "b"), Seq(s"batch=$batchId")),
-        docMapAppendGroup(spark, dir, p.newRows, idCol, "fb", p.partitions)),
-      batchId = batchId)
-    ()
-  }
-
-  /** foreachBatch adapter for [[winnowIngestBatch]]. */
-  def winnowIngestSink(dir: String, idCol: String, text: Column,
-                       maxDocFreq: Int = 10, minShared: Int = 2)
-      : (DataFrame, Long) => Unit =
-    (batch, id) =>
-      winnowIngestBatch(batch.sparkSession, dir, batch, idCol, text, id,
-        maxDocFreq, minShared)
-
-  /** Every pair the streaming winnow ingest has delivered, with its
-    * micro-batch id — the [[lshIngestPairs]] surface at this tier. */
-  def winnowIngestPairs(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): DataFrame =
-    graft.layout.LayoutTxn.readLayout(spark, dir, "pairs", "batch")
-      .select(col("batch"), col("a"), col("b"), col("n_shared"))
-
-  /** DELETE(ids) from a [[writeWinnowIndex]] directory (⊕J26, r17): the
-    * victims' fingerprint rows and reverse-map rows leave in one commit,
-    * rewriting only the `fb=` partitions the `_docmap` locates. The
-    * df-cap exactness claim is untouched: a fingerprint's every
-    * occurrence still shares one partition, so post-delete probes compute
-    * document frequency over exactly the surviving corpus. Returns the
-    * touched `fb` partition ids. */
-  def winnowIndexDelete(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, victims: DataFrame, idCol: String,
-                        txnGraceMs: Long = 600000L): Seq[Int] =
-    dedupIndexDelete(spark, dir, victims, idCol, "fb", WinnowBuilder,
-      Seq("fp", idCol), txnGraceMs)
-
-  /** RESCALE a [[writeWinnowIndex]] directory (r18 — see
-    * [[dedupIndexRescale]]): `fb` recomputes from the stored fingerprint
-    * column; the df-cap exactness claim survives because a fingerprint's
-    * every occurrence still lands in ONE partition under the new count. */
-  def winnowIndexRescale(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, idCol: String, newPartitions: Int,
-                         txnGraceMs: Long = 600000L): Long =
-    dedupIndexRescale(spark, dir, idCol, "fb",
-      n => pmod(hash(col("fp")), lit(n)),
-      Seq("fp", idCol), WinnowBuilder, newPartitions, txnGraceMs)
-
-  /** Fold a fragmented winnowing index ([[graft.layout.LayoutTxn
-    * .compactStale]]). */
-  def winnowIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, idCol: String, maxOwners: Int = 4,
-                         txnGraceMs: Long = 600000L): Long =
-    graft.layout.LayoutTxn.compactStale(spark, dir,
-      Map("" -> Seq("fp", idCol), DedupDocMap -> Seq("pb", idCol),
-        "pairs" -> Seq("a", "b")),
-      maxOwners, txnGraceMs)
-
-  private val SimhashBuilder = "Dedup.writeSimhashIndex"
-
-  /** One row per (doc, pigeonhole band): id, full fingerprint, band
-    * ordinal, band value, and the hive partition key
-    * `sb = hash(band, bval) mod partitions`. */
-  private def simhashIndexRows(docs: DataFrame, idCol: String, text: Column,
-                               maxDist: Int, partitions: Int): DataFrame = {
-    val cuts = simhashBandCuts(maxDist + 1)
-    docs.select(col(idCol), simhash16(text).as("sh"))
-      .select(col(idCol), col("sh"),
-        posexplode(array(cuts.map { case (st, ln) =>
-          substring(col("sh"), st, ln) }: _*)).as(Seq("band", "bval")))
-      .withColumn("sb", pmod(hash(col("band"), col("bval")), lit(partitions)))
-  }
-
-  /** AT-REST SimHash index for INCREMENTAL near-dup ingest (⊕J12 × ⊕K10 —
-    * the [[writeLshIndex]] pattern at the Hamming tier): the corpus's
-    * pigeonhole band rows persisted hive-partitioned by
-    * `sb = hash(band, bval) mod partitions`, each row carrying the FULL
-    * fingerprint so the probe's exact Hamming verify needs no second
-    * corpus read. MinHash LSH approximates set Jaccard; SimHash Hamming
-    * catches small token-level perturbations — complementary ingest
-    * tiers, exactly as their batch forms (⊕J8 vs ⊕J12). The pigeonhole
-    * split is LOSSLESS for the index's own maxDist: a (corpus, batch)
-    * pair within `maxDist` differs in ≤ maxDist positions, so at least
-    * one of the maxDist+1 bands matches exactly and that band's partition
-    * is — by construction — among the ones the batch probes. */
+  /** AT-REST [[Simhash]] index for INCREMENTAL near-dup ingest (⊕J12 ×
+    * ⊕K10): the corpus's pigeonhole band rows hive-partitioned by
+    * `sb = hash(band, bval) mod partitions`. MinHash LSH approximates set
+    * Jaccard; SimHash Hamming catches small token-level perturbations. */
   def writeSimhashIndex(docs: DataFrame, idCol: String, text: Column,
                         dir: String, maxDist: Int = 2,
-                        partitions: Int = 16): Unit = {
-    val rows = simhashIndexRows(docs, idCol, text, maxDist, partitions)
-      .transform(graft.util.Cleanup.checkpoint(_))
-    // a probe with different banding/partitioning would silently miss
-    writeDedupIndex(rows, dir, idCol, "sb", Seq("band", "bval", idCol),
-      partitions, Map("maxDist" -> maxDist))
-  }
-
-  /** Probe + append one NEW batch against a [[writeSimhashIndex]]
-    * directory: returns every (corpus id `a`, new id `b`, dist) pair
-    * within the index's Hamming `maxDist` — EXACT for the cross split
-    * (the pigeonhole losslessness above), one row per pair (the
-    * first-matching-band rule, no distinct shuffle) — and appends the
-    * batch's band rows through the [[graft.layout.LayoutTxn]]
-    * stage/CAS-claim/publish protocol (concurrent ingests conflict
-    * loudly; crashed ones roll forward; readers keep their snapshot).
-    * Probe cost follows the BATCH's band partitions, not the corpus (the
-    * ⊕J25 shape); collision buckets are bounded by the fingerprint
-    * space, never corpus² (the ⊕J12 adjacency argument). Append-only:
-    * batch ids are assumed new (the q61 ingest contract). */
-  def simhashIndexUpsert(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, newDocs: DataFrame, idCol: String,
-                         text: Column,
-                         txnGraceMs: Long = 600000L): DataFrame = {
-    val parent = graft.layout.LayoutTxn.begin(dir, txnGraceMs)
-    val p = simhashProbe(spark, dir, newDocs, idCol, text)
-    graft.layout.LayoutTxn.commit(spark, dir, parent,
-      p.groups(idCol) :+
-        docMapAppendGroup(spark, dir, p.newRows, idCol, "sb", p.partitions))
-    p.pairs
-  }
-
-  private case class SimhashProbe(newRows: DataFrame, touched: Seq[Int],
-                                  existing: DataFrame, pairs: DataFrame,
-                                  partitions: Int) {
-    // append-run commit — see LshProbe.indexGroup (r18)
-    def groups(idCol: String): Seq[graft.layout.LayoutTxn.Group] =
-      Seq(graft.layout.LayoutTxn.Group("", newRows,
-        "sb", Seq("band", "bval", idCol), touched.map(b => s"sb=$b"),
-        append = true))
-  }
-
-  /** The shared probe behind [[simhashIndexUpsert]] and
-    * [[simhashIngestBatch]] — the [[lshProbe]] shape at the Hamming
-    * tier: band the batch, read ONLY its `sb=` partitions, exact Hamming
-    * verify off the carried full fingerprints, first-matching-band
-    * uniqueness. */
-  private def simhashProbe(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, newDocs: DataFrame, idCol: String,
-                           text: Column): SimhashProbe = {
-    val snap = graft.layout.LayoutTxn.snapshot(dir)
-    def fact(key: String) =
-      graft.layout.LayoutTxn.fact(snap, key, SimhashBuilder)
-    val (maxDist, partitions) = (fact("maxDist"), fact("partitions"))
-    val cuts = simhashBandCuts(maxDist + 1)
-    val newRows = simhashIndexRows(newDocs, idCol, text, maxDist, partitions)
-      .transform(graft.util.Cleanup.checkpoint(_))
-    val touched = newRows.select("sb").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val existing = graft.layout.LayoutTxn.readSnapshot(spark, snap, "", "sb",
-      Some(touched.map(b => s"sb=$b").toSet))
-    val l = existing.select(col("band"), col("bval"), col(idCol).as("a"),
-      col("sh").as("__sa"))
-    val r = newRows.select(col("band"), col("bval"), col(idCol).as("b"),
-      col("sh").as("__sb"))
-    val dist = (1 to 16).map(i =>
-        when(substring(col("__sa"), i, 1) =!= substring(col("__sb"), i, 1), 1)
-          .otherwise(0))
-      .reduce(_ + _)
-    // keep each qualifying pair ONLY in its first matching band — the
-    // simhashPairs uniqueness rule: a codegen predicate over data already
-    // in the join row, zero extra shuffles
-    val firstMatch = cuts.indices.map { i =>
-      cuts.take(i).map { case (st, ln) =>
-        substring(col("__sa"), st, ln) =!= substring(col("__sb"), st, ln)
-      }.foldLeft(col("band") === i)(_ && _)
-    }.reduce(_ || _)
-    val pairs = l.join(r, Seq("band", "bval"))
-      .filter(col("a") =!= col("b") && firstMatch)
-      .select(col("a"), col("b"), dist.cast("long").as("dist"))
-      .filter(col("dist") <= maxDist)
-    SimhashProbe(newRows, touched, existing, pairs, partitions)
-  }
-
-  /** EXACTLY-ONCE streaming Hamming-tier ingest (⊕K8 × ⊕J27) — the
-    * [[lshIngestBatch]] discipline with the SimHash probe: each
-    * micro-batch commits its band rows, its (a, b, dist) pair log
-    * partitioned by batch, AND its `_docmap` rows in ONE LayoutTxn CAS
-    * keyed by the batchId; a crash-replayed batch is skipped WHOLE
-    * (authoritative re-check AFTER begin()). */
-  def simhashIngestBatch(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, batch: DataFrame, idCol: String,
-                         text: Column, batchId: Long,
-                         txnGraceMs: Long = 600000L): Unit = {
-    val parent = graft.layout.LayoutTxn.beginBatch(dir, batchId, txnGraceMs)
-      .getOrElse(return) // a replayed batch
-    val p = simhashProbe(spark, dir, batch, idCol, text)
-    graft.layout.LayoutTxn.commit(spark, dir, parent,
-      p.groups(idCol) ++ Seq(graft.layout.LayoutTxn.Group("pairs",
-        p.pairs.withColumn("batch", lit(batchId)),
-        "batch", Seq("a", "b"), Seq(s"batch=$batchId")),
-        docMapAppendGroup(spark, dir, p.newRows, idCol, "sb", p.partitions)),
-      batchId = batchId)
-    ()
-  }
-
-  /** foreachBatch adapter for [[simhashIngestBatch]]. */
-  def simhashIngestSink(dir: String, idCol: String, text: Column)
-      : (DataFrame, Long) => Unit =
-    (batch, id) =>
-      simhashIngestBatch(batch.sparkSession, dir, batch, idCol, text, id)
-
-  /** Every pair the streaming SimHash ingest has delivered, with its
-    * micro-batch id — the [[lshIngestPairs]] surface at this tier. */
-  def simhashIngestPairs(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): DataFrame =
-    graft.layout.LayoutTxn.readLayout(spark, dir, "pairs", "batch")
-      .select(col("batch"), col("a"), col("b"), col("dist"))
-
-  /** DELETE(ids) from a [[writeSimhashIndex]] directory (⊕J27, r17): the
-    * victims' pigeonhole band rows and reverse-map rows leave in one
-    * commit, rewriting only the `sb=` partitions the `_docmap` locates.
-    * The pigeonhole losslessness is untouched — it is a per-pair
-    * property of the banding, not of corpus membership. Returns the
-    * touched `sb` partition ids. */
-  def simhashIndexDelete(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, victims: DataFrame, idCol: String,
-                         txnGraceMs: Long = 600000L): Seq[Int] =
-    dedupIndexDelete(spark, dir, victims, idCol, "sb", SimhashBuilder,
-      Seq("band", "bval", idCol), txnGraceMs)
-
-  /** RESCALE a [[writeSimhashIndex]] directory (r18 — see
-    * [[dedupIndexRescale]]): `sb` recomputes from the stored (band, bval)
-    * columns; the pigeonhole losslessness is a per-pair banding property,
-    * untouched by the partition count. */
-  def simhashIndexRescale(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, idCol: String, newPartitions: Int,
-                          txnGraceMs: Long = 600000L): Long =
-    dedupIndexRescale(spark, dir, idCol, "sb",
-      n => pmod(hash(col("band"), col("bval")), lit(n)),
-      Seq("band", "bval", idCol), SimhashBuilder, newPartitions, txnGraceMs)
-
-  /** Fold a fragmented SimHash index ([[graft.layout.LayoutTxn
-    * .compactStale]]). */
-  def simhashIndexCompact(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, idCol: String, maxOwners: Int = 4,
-                          txnGraceMs: Long = 600000L): Long =
-    graft.layout.LayoutTxn.compactStale(spark, dir,
-      Map("" -> Seq("band", "bval", idCol), DedupDocMap -> Seq("pb", idCol),
-        "pairs" -> Seq("a", "b")),
-      maxOwners, txnGraceMs)
+                        partitions: Int = 16): Unit =
+    writeDedupIndex(Simhash, docs, idCol, text, dir,
+      Map("maxDist" -> maxDist, "partitions" -> partitions))
 
   /** Winnowing-fingerprint near-dup candidates (the rolling-hash tier of
     * the dedup ladder — exact ⊂ winnowing ⊂ MinHash/LSH): docs sharing at
@@ -1328,9 +996,8 @@ object Dedup {
                           k: Int = 8, w: Int = 4,
                           maxDocFreq: Int = 10,
                           minShared: Int = 2): DataFrame = {
-    val fps = docs.select(col(idCol),
-      explode(TextAnalysis.winnowFingerprints(text, k, w)).as("fp"))
-    val dfw = org.apache.spark.sql.expressions.Window.partitionBy("fp")
+    val fps = winnowRows(docs, idCol, text, k, w)
+    val dfw = Window.partitionBy("fp")
     // No localCheckpoint here, deliberately (contrast [[lshCandidates]],
     // whose bucket table feeds an ITERATIVE consumer): both self-join
     // sides shuffle on the same `fp` key, so ReuseExchange serves the
@@ -1349,6 +1016,12 @@ object Dedup {
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
+
+  /** One (id, fp) row per winnowing fingerprint of each doc. */
+  private def winnowRows(docs: DataFrame, idCol: String, text: Column,
+                         k: Int, w: Int): DataFrame =
+    docs.select(col(idCol),
+      explode(TextAnalysis.winnowFingerprints(text, k, w)).as("fp"))
 
   /** 16-bit SimHash over the word multiset, engine-portable: bit i of a
     * word's hash = high bit of hex digit i of md5(word); signature bit i =
@@ -1370,6 +1043,51 @@ object Dedup {
     }
   }
 
+  /** One row per pigeonhole band of the fingerprint column `sh`: its
+    * ordinal `band` and value `bval`. */
+  private def simhashBands(cuts: Seq[(Int, Int)]): Column =
+    posexplode(array(cuts.map { case (st, ln) =>
+      substring(col("sh"), st, ln) }: _*)).as(Seq("band", "bval"))
+
+  /** One (id, sh, band, bval) row per (doc, pigeonhole band) for a
+    * `maxDist` Hamming bound. */
+  private def simhashRows(docs: DataFrame, idCol: String, text: Column,
+                          maxDist: Int): DataFrame =
+    docs.select(col(idCol), simhash16(text).as("sh"))
+      .select(col(idCol), col("sh"), simhashBands(simhashBandCuts(maxDist + 1)))
+
+  /** Hamming distance between two 16-char '0'/'1' fingerprints. */
+  private def hamming(a: Column, b: Column): Column =
+    (1 to 16).map(i =>
+        when(substring(a, i, 1) =!= substring(b, i, 1), 1).otherwise(0))
+      .reduce(_ + _)
+
+  /** True only in the FIRST band where fingerprints `a` and `b` agree
+    * (band i survives iff every earlier cut differs): each qualifying pair
+    * collides in up to maxDist+1 bands, and this codegen predicate on data
+    * already in the join row keeps it once at zero extra shuffles, where
+    * a distinct() would re-shuffle the (dense) pair set. */
+  private def firstBand(cuts: Seq[(Int, Int)], a: Column, b: Column): Column =
+    cuts.indices.map { i =>
+      cuts.take(i).map { case (st, ln) =>
+        substring(a, st, ln) =!= substring(b, st, ln)
+      }.foldLeft(col("band") === i)(_ && _)
+    }.reduce(_ || _)
+
+  /** The pigeonhole band equi-join of two (id, sh, band, bval) row sets:
+    * (a, b, dist) for the pairs passing `keep` within Hamming `maxDist`,
+    * one row per pair ([[firstBand]]). */
+  private def simhashJoin(l: DataFrame, r: DataFrame, idCol: String,
+                          keep: Column, maxDist: Int): DataFrame = {
+    val (sa, sb) = (col("__sa"), col("__sb"))
+    l.select(col("band"), col("bval"), col(idCol).as("a"), col("sh").as("__sa"))
+      .join(r.select(col("band"), col("bval"), col(idCol).as("b"),
+        col("sh").as("__sb")), Seq("band", "bval"))
+      .filter(keep && firstBand(simhashBandCuts(maxDist + 1), sa, sb))
+      .select(col("a"), col("b"), hamming(sa, sb).cast("long").as("dist"))
+      .filter(col("dist") <= maxDist)
+  }
+
   /** SimHash near-duplicate pairs: all (a, b) whose fingerprints lie
     * within Hamming distance `maxDist`, plus the distance. The classic
     * pigeonhole banding (Manku et al.'s near-duplicate detection shape):
@@ -1386,38 +1104,13 @@ object Dedup {
     * the kernel width, not this plan shape. */
   def simhashPairs(docs: DataFrame, idCol: String, text: Column,
                    maxDist: Int = 2): DataFrame = {
-    val cuts = simhashBandCuts(maxDist + 1)
     // no checkpoint here (the winnowingCandidates reasoning): both join
     // sides shuffle on the same (band, bval) key, so ReuseExchange serves
     // the second side from the first's shuffle files — contrast
     // [[simhashAdjacency]], whose within-cluster branch and BROADCAST side
     // sit outside shuffle reuse and genuinely re-ran the corpus scan
-    val fp = docs.select(col(idCol), simhash16(text).as("sh"))
-    val exploded = fp.select(col(idCol), col("sh"),
-      posexplode(array(cuts.map { case (st, ln) =>
-        substring(col("sh"), st, ln) }: _*)).as(Seq("band", "bval")))
-    val l = exploded.select(col("band"), col("bval"), col(idCol).as("a"),
-      col("sh").as("__sa"))
-    val r = exploded.select(col("band"), col("bval"), col(idCol).as("b"),
-      col("sh").as("__sb"))
-    val dist = (1 to 16).map(i =>
-        when(substring(col("__sa"), i, 1) =!= substring(col("__sb"), i, 1), 1)
-          .otherwise(0))
-      .reduce(_ + _)
-    // each qualifying pair collides in up to maxDist+1 bands; keep it ONLY
-    // in its FIRST matching band (band i survives iff every earlier cut
-    // differs) — a codegen predicate on data already in the join row, so
-    // uniqueness costs zero extra shuffles where a distinct() would
-    // re-shuffle the (dense) pair set
-    val firstMatch = cuts.indices.map { i =>
-      cuts.take(i).map { case (st, ln) =>
-        substring(col("__sa"), st, ln) =!= substring(col("__sb"), st, ln)
-      }.foldLeft(col("band") === i)(_ && _)
-    }.reduce(_ || _)
-    l.join(r, Seq("band", "bval"))
-      .filter(col("a") < col("b") && firstMatch)
-      .select(col("a"), col("b"), dist.cast("long").as("dist"))
-      .filter(col("dist") <= maxDist)
+    val exploded = simhashRows(docs, idCol, text, maxDist)
+    simhashJoin(exploded, exploded, idCol, col("a") < col("b"), maxDist)
   }
 
   /** [[simhashPairs]] at the FINGERPRINT level — the form that survives a
@@ -1444,25 +1137,15 @@ object Dedup {
     val within = groups.filter(col("n") >= 2)
       .select(col("sh").as("sha"), col("sh").as("shb"), lit(0L).as("dist"),
         (col("n") * (col("n") - 1) / 2).cast("long").as("n_pairs"))
-    val exploded = groups.select(col("sh"), col("n"),
-      posexplode(array(cuts.map { case (st, ln) =>
-        substring(col("sh"), st, ln) }: _*)).as(Seq("band", "bval")))
+    val exploded = groups.select(col("sh"), col("n"), simhashBands(cuts))
     val l = exploded.select(col("band"), col("bval"), col("sh").as("sha"),
       col("n").as("__na"))
     val r = exploded.select(col("band"), col("bval"), col("sh").as("shb"),
       col("n").as("__nb"))
-    val dist = (1 to 16).map(i =>
-        when(substring(col("sha"), i, 1) =!= substring(col("shb"), i, 1), 1)
-          .otherwise(0))
-      .reduce(_ + _)
-    val firstMatch = cuts.indices.map { i =>
-      cuts.take(i).map { case (st, ln) =>
-        substring(col("sha"), st, ln) =!= substring(col("shb"), st, ln)
-      }.foldLeft(col("band") === i)(_ && _)
-    }.reduce(_ || _)
+    val (sa, sb) = (col("sha"), col("shb"))
     val cross = l.join(r, Seq("band", "bval"))
-      .filter(col("sha") < col("shb") && firstMatch)
-      .select(col("sha"), col("shb"), dist.cast("long").as("dist"),
+      .filter(sa < sb && firstBand(cuts, sa, sb))
+      .select(sa, sb, hamming(sa, sb).cast("long").as("dist"),
         (col("__na") * col("__nb")).cast("long").as("n_pairs"))
       .filter(col("dist") <= maxDist)
     within.union(cross)

@@ -2156,8 +2156,9 @@ object MergeTable {
     }
     require(readManifest(dstDir).isEmpty,
       s"a MergeTable already exists at $dstDir — CLONE needs a fresh dir")
-    val versions = (m.buckets.values.map(_._1) ++ m.dvs.values.map(_._1))
-      .toSet + m.version
+    // merge-on-read delta runs live in their own writers' v-dirs too
+    val versions = (m.buckets.values.map(_._1) ++ m.dvs.values.map(_._1) ++
+      m.deltas.values.flatten.map(_._1)).toSet + m.version
     def linkTree(src: java.io.File, dst: java.io.File): Unit =
       if (src.isDirectory) {
         dst.mkdirs()

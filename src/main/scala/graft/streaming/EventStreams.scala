@@ -936,87 +936,26 @@ object EventStreams {
     }
   }
 
-  /** Drive [[graft.dedup.Dedup.lshIngestSink]] over a parquet file
-    * directory — one micro-batch per file (maxFilesPerTrigger=1,
-    * AvailableNow) — the ⊕K8 harness for the EXACTLY-ONCE streaming
-    * near-dup ingest: every batch's index append AND candidate-pair
-    * delivery share one LayoutTxn commit keyed by the batchId, so a
-    * crash-replayed batch is skipped whole on restart from the same
-    * checkpoint. */
-  def lshIngestStream(spark: SparkSession, filesPath: String,
-                      idxDir: String, idCol: String = "doc_id",
-                      checkpoint: Option[String] = None): Unit = {
+  /** Drive a foreachBatch `sink` over a parquet file directory — one
+    * micro-batch per file (maxFilesPerTrigger=1, AvailableNow) — the ⊕K8
+    * harness for the EXACTLY-ONCE streaming index ingests
+    * ([[graft.dedup.Dedup.Tier.ingestSink]],
+    * [[graft.sim.Similarity.ivfUpsertSink]]): every batch's index append
+    * (and candidate-pair delivery) share one LayoutTxn commit keyed by the
+    * batchId, so a crash-replayed batch is skipped whole on restart from
+    * the same checkpoint. */
+  def fileIngestStream(spark: SparkSession, filesPath: String,
+                       sink: (DataFrame, Long) => Unit,
+                       checkpoint: Option[String] = None): Unit = {
     val ck = checkpoint.getOrElse(graft.util.Cleanup.registerTempDir(
-      java.nio.file.Files.createTempDirectory("graft_lsh_ingest"))
+      java.nio.file.Files.createTempDirectory("graft_file_ingest"))
       .toString + "/ck")
     val q = spark.readStream
       .schema(spark.read.parquet(filesPath).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(filesPath)
       .writeStream.option("checkpointLocation", ck)
-      .foreachBatch(graft.dedup.Dedup.lshIngestSink(idxDir, idCol, col("text")))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** [[lshIngestStream]]'s shape at the FINGERPRINT tier: drive
-    * [[graft.dedup.Dedup.winnowIngestSink]] over a parquet file directory
-    * (one micro-batch per file, AvailableNow) — exactly-once streaming
-    * contained-copy ingest. */
-  def winnowIngestStream(spark: SparkSession, filesPath: String,
-                         idxDir: String, idCol: String = "doc_id",
-                         checkpoint: Option[String] = None): Unit = {
-    val ck = checkpoint.getOrElse(graft.util.Cleanup.registerTempDir(
-      java.nio.file.Files.createTempDirectory("graft_win_ingest"))
-      .toString + "/ck")
-    val q = spark.readStream
-      .schema(spark.read.parquet(filesPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(filesPath)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch(
-        graft.dedup.Dedup.winnowIngestSink(idxDir, idCol, col("text")))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** [[lshIngestStream]]'s shape at the HAMMING tier: drive
-    * [[graft.dedup.Dedup.simhashIngestSink]] over a parquet file
-    * directory (one micro-batch per file, AvailableNow) — exactly-once
-    * streaming near-dup ingest for token-level perturbations. */
-  def simhashIngestStream(spark: SparkSession, filesPath: String,
-                          idxDir: String, idCol: String = "doc_id",
-                          checkpoint: Option[String] = None): Unit = {
-    val ck = checkpoint.getOrElse(graft.util.Cleanup.registerTempDir(
-      java.nio.file.Files.createTempDirectory("graft_sh_ingest"))
-      .toString + "/ck")
-    val q = spark.readStream
-      .schema(spark.read.parquet(filesPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(filesPath)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch(
-        graft.dedup.Dedup.simhashIngestSink(idxDir, idCol, col("text")))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** [[lshIngestStream]]'s shape at the VECTOR tier: drive
-    * [[graft.sim.Similarity.ivfUpsertSink]] over a parquet file directory
-    * (one micro-batch per file, AvailableNow) — exactly-once streaming
-    * IVF index maintenance under frozen centroids. */
-  def ivfIngestStream(spark: SparkSession, filesPath: String,
-                      layoutDir: String, cents: Array[Seq[Float]],
-                      checkpoint: Option[String] = None): Unit = {
-    val ck = checkpoint.getOrElse(graft.util.Cleanup.registerTempDir(
-      java.nio.file.Files.createTempDirectory("graft_ivf_ingest"))
-      .toString + "/ck")
-    val q = spark.readStream
-      .schema(spark.read.parquet(filesPath).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(filesPath)
-      .writeStream.option("checkpointLocation", ck)
-      .foreachBatch(graft.sim.Similarity.ivfUpsertSink(layoutDir, cents))
+      .foreachBatch(sink)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
   }

@@ -40,7 +40,7 @@ class DedupIndexDeleteSpec extends SparkSpec {
   test("LSH: delete(ids) == rebuild without them; probes agree; victims' map rows gone") {
     val a = fresh("lsh_a"); val b = fresh("lsh_b")
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), a, partitions = 8)
-    val touched = Dedup.lshIndexDelete(spark, a,
+    val touched = Dedup.Lsh().delete(spark, a,
       victims.select("doc_id"), "doc_id")
     assert(touched.nonEmpty)
     Dedup.writeLshIndex(keep, "doc_id", col("text"), b, partitions = 8)
@@ -53,7 +53,7 @@ class DedupIndexDeleteSpec extends SparkSpec {
     assert(dm(a) === dm(b))
     // probing the maintained index equals probing the rebuilt one — and
     // neither ever returns a victim as candidate `a`
-    def pairs(d: String) = Dedup.lshIndexUpsert(spark, d, probe,
+    def pairs(d: String) = Dedup.Lsh().upsert(spark, d, probe,
       "doc_id", col("text")).as[(Long, Long)].collect().toSet
     val pa = pairs(a)
     assert(pa === pairs(b))
@@ -64,17 +64,17 @@ class DedupIndexDeleteSpec extends SparkSpec {
   test("LSH: delete composes with upsert — rows ingested AFTER the build are locatable and deletable") {
     val d = fresh("lsh_c")
     Dedup.writeLshIndex(keep, "doc_id", col("text"), d, partitions = 8)
-    Dedup.lshIndexUpsert(spark, d, victims, "doc_id", col("text"))
+    Dedup.Lsh().upsert(spark, d, victims, "doc_id", col("text"))
     assert(LayoutTxn.readLayout(spark, d, "", "lb")
       .filter(col("doc_id").isin(30L, 31L)).count() > 0)
-    Dedup.lshIndexDelete(spark, d, victims.select("doc_id"), "doc_id")
+    Dedup.Lsh().delete(spark, d, victims.select("doc_id"), "doc_id")
     assert(LayoutTxn.readLayout(spark, d, "", "lb")
       .filter(col("doc_id").isin(30L, 31L)).count() === 0)
     assert(LayoutTxn.readLayout(spark, d, "_docmap", "dm")
       .filter(col("doc_id").isin(30L, 31L)).count() === 0)
     // deleting ids with no indexed rows is a no-op (no commit, no throw)
     val v0 = LayoutTxn.currentVersion(d)
-    assert(Dedup.lshIndexDelete(spark, d,
+    assert(Dedup.Lsh().delete(spark, d,
       Seq(999L).toDF("doc_id"), "doc_id") === Seq.empty)
     assert(LayoutTxn.currentVersion(d) === v0)
   }
@@ -85,7 +85,7 @@ class DedupIndexDeleteSpec extends SparkSpec {
     // Murmur3 of INT 30 != Murmur3 of LONG 30: pre-fix this probed the
     // wrong dm= partitions and silently deleted NOTHING
     val intVictims = Seq(30, 31).toDF("doc_id") // IntegerType
-    val touched = Dedup.lshIndexDelete(spark, d, intVictims, "doc_id")
+    val touched = Dedup.Lsh().delete(spark, d, intVictims, "doc_id")
     assert(touched.nonEmpty, "int-typed victims must still locate rows")
     assert(LayoutTxn.readLayout(spark, d, "", "lb")
       .filter(col("doc_id").isin(30L, 31L)).count() === 0)
@@ -107,9 +107,9 @@ class DedupIndexDeleteSpec extends SparkSpec {
       (30, "alpha beta gamma delta epsilon zeta eta kappa"),
       (31, "one two three four five six seven eight ten"))
       .toDF("doc_id", "text") // IntegerType ids
-    Dedup.lshIndexUpsert(spark, a, intBatch, "doc_id", col("text"))
+    Dedup.Lsh().upsert(spark, a, intBatch, "doc_id", col("text"))
     // delete the two int-ingested docs by (long-typed) id
-    val touched = Dedup.lshIndexDelete(spark, a,
+    val touched = Dedup.Lsh().delete(spark, a,
       Seq(30L, 31L).toDF("doc_id"), "doc_id")
     assert(touched.nonEmpty, "delete found no rows — the docmap rows " +
       "were hashed with the batch's own (narrower) id type")
@@ -126,13 +126,13 @@ class DedupIndexDeleteSpec extends SparkSpec {
   test("winnowing: delete(ids) == rebuild without them; df-cap recomputes over survivors") {
     val a = fresh("win_a"); val b = fresh("win_b")
     Dedup.writeWinnowIndex(corpus, "doc_id", col("text"), a, partitions = 8)
-    Dedup.winnowIndexDelete(spark, a, victims.select("doc_id"), "doc_id")
+    Dedup.Winnow().delete(spark, a, victims.select("doc_id"), "doc_id")
     Dedup.writeWinnowIndex(keep, "doc_id", col("text"), b, partitions = 8)
     def rows(d: String) = LayoutTxn.readLayout(spark, d, "", "fb")
       .select(col("doc_id"), col("fp")).as[(Long, Long)].collect().toSet
     assert(rows(a) === rows(b))
-    def pairs(d: String) = Dedup.winnowIndexUpsert(spark, d, probe,
-      "doc_id", col("text"), minShared = 1)
+    def pairs(d: String) = Dedup.Winnow(minShared = 1).upsert(spark, d, probe,
+      "doc_id", col("text"))
       .as[(Long, Long, Long)].collect().toSet
     assert(pairs(a) === pairs(b))
   }
@@ -140,7 +140,7 @@ class DedupIndexDeleteSpec extends SparkSpec {
   test("simhash: delete(ids) == rebuild without them; emptied sb partitions leave the snapshot") {
     val a = fresh("sh_a"); val b = fresh("sh_b")
     Dedup.writeSimhashIndex(corpus, "doc_id", col("text"), a, partitions = 8)
-    Dedup.simhashIndexDelete(spark, a, victims.select("doc_id"), "doc_id")
+    Dedup.Simhash.delete(spark, a, victims.select("doc_id"), "doc_id")
     Dedup.writeSimhashIndex(keep, "doc_id", col("text"), b, partitions = 8)
     def rows(d: String) = LayoutTxn.readLayout(spark, d, "", "sb")
       .select(col("doc_id"), col("band"), col("bval"))
@@ -150,7 +150,7 @@ class DedupIndexDeleteSpec extends SparkSpec {
     // whose every row was a victim's must have left the version map
     assert(LayoutTxn.resolve(a, "").map(_._1).toSet ===
       LayoutTxn.resolve(b, "").map(_._1).toSet)
-    def pairs(d: String) = Dedup.simhashIndexUpsert(spark, d, probe,
+    def pairs(d: String) = Dedup.Simhash.upsert(spark, d, probe,
       "doc_id", col("text")).as[(Long, Long, Long)].collect().toSet
     assert(pairs(a) === pairs(b))
   }
@@ -162,19 +162,19 @@ class DedupIndexDeleteSpec extends SparkSpec {
     // (IndexFuzzSpec found it on its first 100-seed run)
     val d = fresh("lsh_empty")
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), d, partitions = 8)
-    Dedup.lshIndexDelete(spark, d, corpus.select("doc_id"), "doc_id")
+    Dedup.Lsh().delete(spark, d, corpus.select("doc_id"), "doc_id")
     assert(LayoutTxn.readLayout(spark, d, "", "lb").count() === 0L,
       "emptied index must read as a typed empty relation")
     assert(LayoutTxn.readLayout(spark, d, "_docmap", "dm").count() === 0L)
     // the index is still a living layout: a fresh batch ingests cleanly
     // and a near-dup pair within the batch's own corpus side is empty
     // (nothing to collide with), then a second batch collides with it
-    val pairs1 = Dedup.lshIndexUpsert(spark, d,
+    val pairs1 = Dedup.Lsh().upsert(spark, d,
         docsOf(50L -> "alpha beta gamma delta epsilon zeta eta theta"),
         "doc_id", col("text"))
       .as[(Long, Long)].collect().toSet
     assert(pairs1.isEmpty)
-    val pairs2 = Dedup.lshIndexUpsert(spark, d,
+    val pairs2 = Dedup.Lsh().upsert(spark, d,
         docsOf(51L -> "alpha beta gamma delta epsilon zeta eta iota"),
         "doc_id", col("text"))
       .as[(Long, Long)].collect().toSet

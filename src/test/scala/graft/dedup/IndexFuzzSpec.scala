@@ -66,6 +66,7 @@ class IndexFuzzSpec extends SparkSpec {
     val rnd = new scala.util.Random(seed)
     val family = rnd.nextInt(5) // 0=lsh 1=winnow 2=simhash 3=text 4=ivf
     val dir = Files.createTempDirectory(s"idxfuzz_$seed").toString + "/idx"
+    val tier = Seq(Dedup.Lsh(), Dedup.Winnow(), Dedup.Simhash).lift(family)
     var model = Map.empty[Long, String]
     var vmodel = Map.empty[Long, Seq[Float]]
     var cents: Array[Seq[Float]] = Array.empty
@@ -133,28 +134,20 @@ class IndexFuzzSpec extends SparkSpec {
       } else rnd.nextInt(6) match {
         case 0 => // batch ingest of NEW docs (append-only contract)
           val b = freshDocs(1 + rnd.nextInt(4)); model ++= b
-          family match {
-            case 0 => Dedup.lshIndexUpsert(spark, dir, df(b), "doc_id",
-              col("text")).count()
-            case 1 => Dedup.winnowIndexUpsert(spark, dir, df(b), "doc_id",
-              col("text")).count()
-            case 2 => Dedup.simhashIndexUpsert(spark, dir, df(b), "doc_id",
-              col("text")).count()
-            case 3 => TextAnalysis.indexUpsertLayout(spark, dir, df(b),
+          tier match {
+            case Some(t) =>
+              t.upsert(spark, dir, df(b), "doc_id", col("text")).count()
+            case None => TextAnalysis.indexUpsertLayout(spark, dir, df(b),
               "doc_id", col("text"))
           }
           ()
         case 1 => // exactly-once stream batch, sometimes REPLAYED
           val b = freshDocs(1 + rnd.nextInt(3)); model ++= b
           lastBatch += 1
-          val send = () => family match {
-            case 0 => Dedup.lshIngestBatch(spark, dir, df(b), "doc_id",
+          val send = () => tier match {
+            case Some(t) => t.ingestBatch(spark, dir, df(b), "doc_id",
               col("text"), lastBatch)
-            case 1 => Dedup.winnowIngestBatch(spark, dir, df(b), "doc_id",
-              col("text"), lastBatch)
-            case 2 => Dedup.simhashIngestBatch(spark, dir, df(b), "doc_id",
-              col("text"), lastBatch)
-            case 3 => TextAnalysis.indexApplyLayout(spark, dir, df(b), None,
+            case None => TextAnalysis.indexApplyLayout(spark, dir, df(b), None,
               "doc_id", col("text"), batchId = lastBatch)
           }
           send()
@@ -165,33 +158,25 @@ class IndexFuzzSpec extends SparkSpec {
             val victims = rnd.shuffle(live).take(1 + rnd.nextInt(3))
             model --= victims
             val vdf = victims.map(Tuple1(_)).toDF("doc_id")
-            family match {
-              case 0 => Dedup.lshIndexDelete(spark, dir, vdf, "doc_id")
-              case 1 => Dedup.winnowIndexDelete(spark, dir, vdf, "doc_id")
-              case 2 => Dedup.simhashIndexDelete(spark, dir, vdf, "doc_id")
-              case 3 => TextAnalysis.indexDeleteLayout(spark, dir, vdf,
+            tier match {
+              case Some(t) => t.delete(spark, dir, vdf, "doc_id")
+              case None => TextAnalysis.indexDeleteLayout(spark, dir, vdf,
                 "doc_id")
             }
             ()
           }
         case 3 => // rescale to a fresh random count
           val n = 3 + rnd.nextInt(10)
-          family match {
-            case 0 => Dedup.lshIndexRescale(spark, dir, "doc_id", n)
-            case 1 => Dedup.winnowIndexRescale(spark, dir, "doc_id", n)
-            case 2 => Dedup.simhashIndexRescale(spark, dir, "doc_id", n)
-            case 3 => TextAnalysis.indexRescaleLayout(spark, dir, n)
+          tier match {
+            case Some(t) => t.rescale(spark, dir, "doc_id", n)
+            case None => TextAnalysis.indexRescaleLayout(spark, dir, n)
           }
           ()
         case 4 => // fold the fragmented layout
-          family match {
-            case 0 => Dedup.lshIndexCompact(spark, dir, "doc_id",
+          tier match {
+            case Some(t) => t.compact(spark, dir, "doc_id",
               maxOwners = 1 + rnd.nextInt(3), txnGraceMs = 0L)
-            case 1 => Dedup.winnowIndexCompact(spark, dir, "doc_id",
-              maxOwners = 1 + rnd.nextInt(3), txnGraceMs = 0L)
-            case 2 => Dedup.simhashIndexCompact(spark, dir, "doc_id",
-              maxOwners = 1 + rnd.nextInt(3), txnGraceMs = 0L)
-            case 3 => TextAnalysis.indexCompactLayout(spark, dir,
+            case None => TextAnalysis.indexCompactLayout(spark, dir,
               maxOwners = 1 + rnd.nextInt(3), txnGraceMs = 0L)
           }
           ()

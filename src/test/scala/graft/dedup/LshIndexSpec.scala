@@ -33,7 +33,7 @@ class LshIndexSpec extends SparkSpec {
     val delta = docsOf(
       10L -> "alpha beta gamma delta epsilon theta",
       11L -> "completely unrelated words entirely different here now")
-    val pairs = Dedup.lshIndexUpsert(spark, dir, delta, "doc_id", col("text"))
+    val pairs = Dedup.Lsh().upsert(spark, dir, delta, "doc_id", col("text"))
       .as[(Long, Long)].collect().toSet
     // ground truth: full-corpus LSH pairs restricted to corpus×delta
     val all = Dedup.lshCandidates(
@@ -51,8 +51,9 @@ class LshIndexSpec extends SparkSpec {
     // ingest's version dir
     val after = LayoutTxn.resolve(dir, "").toMap
     val touched = after.filter { case (_, p) => p.contains(s"_lv${v0 + 1}") }.keySet
-    val batchLbs = Dedup.lshProbePartitions(delta, "doc_id", col("text"),
-      partitions = 8)
+    val batchLbs = Dedup.Lsh().rows(delta, "doc_id", col("text"),
+        Map("numHashes" -> 8, "bands" -> 4, "k" -> 3, "partitions" -> 8))
+      .select("lb").distinct().collect().map(_.getInt(0)).toSet
     assert(touched === batchLbs.map(b => s"lb=$b").toSet)
     before.foreach { case (part, path) =>
       if (!touched.contains(part))
@@ -60,7 +61,7 @@ class LshIndexSpec extends SparkSpec {
     }
     // the index now CONTAINS the delta: a second batch near-duping doc 10
     // finds it (ingests compose)
-    val pairs2 = Dedup.lshIndexUpsert(spark, dir,
+    val pairs2 = Dedup.Lsh().upsert(spark, dir,
         docsOf(20L -> "alpha beta gamma delta epsilon theta"),
         "doc_id", col("text"))
       .as[(Long, Long)].collect().toSet
@@ -77,7 +78,7 @@ class LshIndexSpec extends SparkSpec {
       s"version=$next\n")
     val before = LayoutTxn.readLayout(spark, dir, "", "lb").count()
     intercept[LayoutTxn.ConflictException] {
-      Dedup.lshIndexUpsert(spark, dir,
+      Dedup.Lsh().upsert(spark, dir,
         docsOf(10L -> "alpha beta gamma delta epsilon theta"),
         "doc_id", col("text"))
     }

@@ -29,9 +29,9 @@ class LshStreamIngestSpec extends SparkSpec {
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), dir, partitions = 8)
     val d0 = docsOf(10L -> "alpha beta gamma delta epsilon theta")
     val d1 = docsOf(20L -> "alpha beta gamma delta epsilon iota")
-    Dedup.lshIngestBatch(spark, dir, d0, "doc_id", col("text"), batchId = 0L)
-    Dedup.lshIngestBatch(spark, dir, d1, "doc_id", col("text"), batchId = 1L)
-    val pairs = Dedup.lshIngestPairs(spark, dir)
+    Dedup.Lsh().ingestBatch(spark, dir, d0, "doc_id", col("text"), batchId = 0L)
+    Dedup.Lsh().ingestBatch(spark, dir, d1, "doc_id", col("text"), batchId = 1L)
+    val pairs = Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long)].collect().toSet
     // batch 0 collides with its corpus clones; batch 1 additionally sees
     // batch 0's doc (ingests compose through the shared index)
@@ -44,10 +44,10 @@ class LshStreamIngestSpec extends SparkSpec {
     // the crash-after-commit window: the stream restarts and re-delivers
     // batch 1 — the sink must skip it WHOLE (no duplicate band rows, no
     // duplicate pairs, no new version)
-    Dedup.lshIngestBatch(spark, dir, d1, "doc_id", col("text"), batchId = 1L)
+    Dedup.Lsh().ingestBatch(spark, dir, d1, "doc_id", col("text"), batchId = 1L)
     assert(LayoutTxn.currentVersion(dir) === v)
     assert(LayoutTxn.readLayout(spark, dir, "", "lb").count() === idxRows)
-    assert(Dedup.lshIngestPairs(spark, dir)
+    assert(Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long)].collect().toSet === pairs)
   }
 
@@ -56,12 +56,12 @@ class LshStreamIngestSpec extends SparkSpec {
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), dir, partitions = 8)
     val d0 = docsOf(10L -> "alpha beta gamma delta epsilon theta")
     val d1 = docsOf(20L -> "alpha beta gamma delta epsilon iota")
-    Dedup.lshIngestBatch(spark, dir, d0, "doc_id", col("text"), batchId = 0L)
+    Dedup.Lsh().ingestBatch(spark, dir, d0, "doc_id", col("text"), batchId = 0L)
     val prior = graft.layout.TxnCrashTestOps.saveVersionFile(dir)
-    Dedup.lshIngestBatch(spark, dir, d1, "doc_id", col("text"), batchId = 1L)
+    Dedup.Lsh().ingestBatch(spark, dir, d1, "doc_id", col("text"), batchId = 1L)
     val wantV = LayoutTxn.currentVersion(dir)
     val wantRows = LayoutTxn.readLayout(spark, dir, "", "lb").count()
-    val wantPairs = Dedup.lshIngestPairs(spark, dir)
+    val wantPairs = Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long)].collect().toSet
     // crash window: batch 1's commit is CLAIMED but not PUBLISHED — the
     // published state still reads batchId 0, so the pre-begin() guard is
@@ -71,11 +71,11 @@ class LshStreamIngestSpec extends SparkSpec {
     graft.layout.TxnCrashTestOps.unpublishLast(dir, prior)
     assert(LayoutTxn.lastBatchId(dir) === 0L,
       "crash state: the claim must be invisible to the published batchId")
-    Dedup.lshIngestBatch(spark, dir, d1, "doc_id", col("text"), batchId = 1L)
+    Dedup.Lsh().ingestBatch(spark, dir, d1, "doc_id", col("text"), batchId = 1L)
     assert(LayoutTxn.currentVersion(dir) === wantV, "no extra version")
     assert(LayoutTxn.readLayout(spark, dir, "", "lb").count() === wantRows,
       "no duplicate band rows")
-    assert(Dedup.lshIngestPairs(spark, dir)
+    assert(Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long)].collect().toSet === wantPairs,
       "no duplicate or self-colliding pairs")
   }
@@ -83,20 +83,20 @@ class LshStreamIngestSpec extends SparkSpec {
   test("an interleaved NON-stream upsert never lowers the recorded batchId") {
     val dir = Files.createTempDirectory("lsh_si2").toString + "/idx"
     Dedup.writeLshIndex(corpus, "doc_id", col("text"), dir, partitions = 8)
-    Dedup.lshIngestBatch(spark, dir,
+    Dedup.Lsh().ingestBatch(spark, dir,
       docsOf(10L -> "alpha beta gamma delta epsilon theta"),
       "doc_id", col("text"), batchId = 3L)
     // a batch-API upsert (no batchId) commits between micro-batches
-    Dedup.lshIndexUpsert(spark, dir,
+    Dedup.Lsh().upsert(spark, dir,
       docsOf(30L -> "totally different words here now folks"),
       "doc_id", col("text"))
     assert(LayoutTxn.lastBatchId(dir) === 3L,
       "the non-stream commit must carry the batchId forward")
-    val pairsBefore = Dedup.lshIngestPairs(spark, dir).count()
-    Dedup.lshIngestBatch(spark, dir,
+    val pairsBefore = Dedup.ingestPairs(spark, dir).count()
+    Dedup.Lsh().ingestBatch(spark, dir,
       docsOf(10L -> "alpha beta gamma delta epsilon theta"),
       "doc_id", col("text"), batchId = 2L) // stale replay
-    assert(Dedup.lshIngestPairs(spark, dir).count() === pairsBefore)
+    assert(Dedup.ingestPairs(spark, dir).count() === pairsBefore)
   }
 
   test("end-to-end file stream: two micro-batches, then a restart on the same checkpoint re-delivers nothing") {
@@ -117,17 +117,19 @@ class LshStreamIngestSpec extends SparkSpec {
       dst.setLastModified(1700000000000L + i * 60000L)
     }
     val ck = s"$root/ck"
-    graft.streaming.EventStreams.lshIngestStream(spark, files.toString, dir,
+    graft.streaming.EventStreams.fileIngestStream(spark, files.toString,
+      Dedup.Lsh().ingestSink(dir, "doc_id", col("text")),
       checkpoint = Some(ck))
-    val pairs = Dedup.lshIngestPairs(spark, dir)
+    val pairs = Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long)].collect().toSet
     assert(pairs.nonEmpty && pairs.contains((1, 10L, 20L)))
     val v = LayoutTxn.currentVersion(dir)
     // restart on the SAME checkpoint with no new files: nothing re-delivers
-    graft.streaming.EventStreams.lshIngestStream(spark, files.toString, dir,
+    graft.streaming.EventStreams.fileIngestStream(spark, files.toString,
+      Dedup.Lsh().ingestSink(dir, "doc_id", col("text")),
       checkpoint = Some(ck))
     assert(LayoutTxn.currentVersion(dir) === v)
-    assert(Dedup.lshIngestPairs(spark, dir)
+    assert(Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long)].collect().toSet === pairs)
   }
 }

@@ -41,7 +41,7 @@ class SimhashIndexSpec extends SparkSpec {
     val delta = docsOf(
       10L -> "zeta epsilon delta gamma beta alpha",
       11L -> "completely unrelated words entirely different here now")
-    val pairs = Dedup.simhashIndexUpsert(spark, dir, delta, "doc_id",
+    val pairs = Dedup.Simhash.upsert(spark, dir, delta, "doc_id",
         col("text"))
       .as[(Long, Long, Long)].collect().toSet
     // ground truth: full-corpus simhashPairs restricted to corpus×delta
@@ -72,7 +72,7 @@ class SimhashIndexSpec extends SparkSpec {
     }
     // ingests compose: a second batch duplicating doc 10 finds it at
     // distance 0
-    val pairs2 = Dedup.simhashIndexUpsert(spark, dir,
+    val pairs2 = Dedup.Simhash.upsert(spark, dir,
         docsOf(20L -> "zeta epsilon delta gamma beta alpha"),
         "doc_id", col("text"))
       .as[(Long, Long, Long)].collect().toSet
@@ -90,7 +90,7 @@ class SimhashIndexSpec extends SparkSpec {
       s"version=$next\n")
     val before = LayoutTxn.readLayout(spark, dir, "", "sb").count()
     intercept[LayoutTxn.ConflictException] {
-      Dedup.simhashIndexUpsert(spark, dir,
+      Dedup.Simhash.upsert(spark, dir,
         docsOf(10L -> "alpha beta gamma delta epsilon theta"),
         "doc_id", col("text"))
     }
@@ -102,7 +102,7 @@ class SimhashIndexSpec extends SparkSpec {
   test("probe parameters come from the index metadata, not the caller") {
     val dir = Files.createTempDirectory("sh_meta").toString + "/idx"
     intercept[IllegalArgumentException] {
-      Dedup.simhashIndexUpsert(spark, dir,
+      Dedup.Simhash.upsert(spark, dir,
         docsOf(10L -> "alpha beta"), "doc_id", col("text"))
     }
   }

@@ -32,7 +32,7 @@ class WinnowIndexSpec extends SparkSpec {
       10L -> s"brand new prose surrounds $shared and continues differently",
       11L -> "nothing in common with anything previously indexed at all")
       .toDF("doc_id", "text")
-    val got = Dedup.winnowIndexUpsert(spark, dir, delta, "doc_id", col("text"))
+    val got = Dedup.Winnow().upsert(spark, dir, delta, "doc_id", col("text"))
       .as[(Long, Long, Long)].collect().toSet
     // ground truth: the batch algebra over the FULL corpus, restricted to
     // corpus×batch pairs (normalized to (corpus, batch) order)
@@ -58,7 +58,7 @@ class WinnowIndexSpec extends SparkSpec {
     }
     // compose: a second batch containing the same shared run finds BOTH
     // doc 1 (original corpus) and doc 10 (first ingest)
-    val got2 = Dedup.winnowIndexUpsert(spark, dir,
+    val got2 = Dedup.Winnow().upsert(spark, dir,
         Seq(20L -> s"another wrapper around $shared with fresh words")
           .toDF("doc_id", "text"), "doc_id", col("text"))
       .as[(Long, Long, Long)].collect().toSet

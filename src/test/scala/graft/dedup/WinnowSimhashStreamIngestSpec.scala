@@ -29,33 +29,34 @@ class WinnowSimhashStreamIngestSpec extends SparkSpec {
     Dedup.writeWinnowIndex(corpus, "doc_id", col("text"), dir, partitions = 8)
     val d0 = docsOf(10L -> "alpha beta gamma delta epsilon zeta eta kappa")
     val d1 = docsOf(20L -> "alpha beta gamma delta epsilon zeta eta lambda")
-    Dedup.winnowIngestBatch(spark, dir, d0, "doc_id", col("text"),
-      batchId = 0L, minShared = 1)
+    val win = Dedup.Winnow(minShared = 1)
+    win.ingestBatch(spark, dir, d0, "doc_id", col("text"),
+      batchId = 0L)
     val prior = graft.layout.TxnCrashTestOps.saveVersionFile(dir)
-    Dedup.winnowIngestBatch(spark, dir, d1, "doc_id", col("text"),
-      batchId = 1L, minShared = 1)
+    win.ingestBatch(spark, dir, d1, "doc_id", col("text"),
+      batchId = 1L)
     val wantV = LayoutTxn.currentVersion(dir)
     val wantRows = LayoutTxn.readLayout(spark, dir, "", "fb").count()
-    val wantPairs = Dedup.winnowIngestPairs(spark, dir)
+    val wantPairs = Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long, Long)].collect().toSet
     assert(wantPairs.exists { case (b, a, n, _) => b == 1 && n == 20L },
       s"batch 1 must deliver pairs: $wantPairs")
     // plain replay (crash after publish)
-    Dedup.winnowIngestBatch(spark, dir, d1, "doc_id", col("text"),
-      batchId = 1L, minShared = 1)
+    win.ingestBatch(spark, dir, d1, "doc_id", col("text"),
+      batchId = 1L)
     assert(LayoutTxn.currentVersion(dir) === wantV)
     // claim-without-publish window (crash between CAS and publish)
     graft.layout.TxnCrashTestOps.unpublishLast(dir, prior)
     assert(LayoutTxn.lastBatchId(dir) === 0L)
-    Dedup.winnowIngestBatch(spark, dir, d1, "doc_id", col("text"),
-      batchId = 1L, minShared = 1)
+    win.ingestBatch(spark, dir, d1, "doc_id", col("text"),
+      batchId = 1L)
     assert(LayoutTxn.currentVersion(dir) === wantV, "no extra version")
     assert(LayoutTxn.readLayout(spark, dir, "", "fb").count() === wantRows,
       "no duplicate fingerprint rows")
-    assert(Dedup.winnowIngestPairs(spark, dir)
+    assert(Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long, Long)].collect().toSet === wantPairs)
     // the _docmap composed through the stream: the ingested docs delete
-    Dedup.winnowIndexDelete(spark, dir,
+    Dedup.Winnow().delete(spark, dir,
       Seq(10L, 20L).toDF("doc_id"), "doc_id")
     assert(LayoutTxn.readLayout(spark, dir, "", "fb")
       .filter(col("doc_id").isin(10L, 20L)).count() === 0)
@@ -81,9 +82,10 @@ class WinnowSimhashStreamIngestSpec extends SparkSpec {
         ()
       }
     val ck = s"$root/ck"
-    graft.streaming.EventStreams.simhashIngestStream(spark, files.toString,
-      dir, checkpoint = Some(ck))
-    val pairs = Dedup.simhashIngestPairs(spark, dir)
+    graft.streaming.EventStreams.fileIngestStream(spark, files.toString,
+      Dedup.Simhash.ingestSink(dir, "doc_id", col("text")),
+      checkpoint = Some(ck))
+    val pairs = Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long, Long)].collect().toSet
     // doc 10 is corpus doc 1's exact simhash twin (same text): batch 0
     // delivers (1, 10); batch 1 sees BOTH as existing
@@ -91,10 +93,11 @@ class WinnowSimhashStreamIngestSpec extends SparkSpec {
       s"stage order broken: $pairs")
     val v = LayoutTxn.currentVersion(dir)
     // restart on the SAME checkpoint: AvailableNow re-delivers nothing
-    graft.streaming.EventStreams.simhashIngestStream(spark, files.toString,
-      dir, checkpoint = Some(ck))
+    graft.streaming.EventStreams.fileIngestStream(spark, files.toString,
+      Dedup.Simhash.ingestSink(dir, "doc_id", col("text")),
+      checkpoint = Some(ck))
     assert(LayoutTxn.currentVersion(dir) === v)
-    assert(Dedup.simhashIngestPairs(spark, dir)
+    assert(Dedup.ingestPairs(spark, dir)
       .as[(Int, Long, Long, Long)].collect().toSet === pairs)
   }
 }

@@ -93,6 +93,21 @@ class MergeCloneSpec extends SparkSpec {
     assert(MergeTable.read(spark, src).count() === 54L)
   }
 
+  test("merge-on-read delta runs older than the head carry: the clone reads like its source") {
+    val src = table("mor")
+    MergeTable.mergeSmall(spark, src, Seq((1L, 100L, "run1", "update"))
+      .toDF("id", "v", "tag", "op_flag"), "id", numBuckets = 4)
+    MergeTable.mergeSmall(spark, src, Seq((2L, 200L, "run2", "update"))
+      .toDF("id", "v", "tag", "op_flag"), "id", numBuckets = 4)
+    val dst = freshDir("mor_dst")
+    MergeTable.cloneTable(spark, src, dst)
+    val want = MergeTable.read(spark, src).as[(Long, Long, String)]
+      .collect().toSet
+    assert(want.contains((1L, 100L, "run1")) && want.contains((2L, 200L, "run2")))
+    assert(MergeTable.read(spark, dst).as[(Long, Long, String)]
+      .collect().toSet === want)
+  }
+
   test("CLONE refuses a destination that already holds a table; re-run after crash is clean") {
     val src = table("guard")
     val dst = freshDir("guard_dst")
